@@ -566,10 +566,4 @@ object DamdsKernels {
     while (i < a.length) { s += a(i) * b(i); i += 1 }
     s
   }
-
-  /** N11: Sammon weight w / max(d, factor·avgDist)
-    * (io/RowBlock.java:139-142). */
-  def sammonWeight(w: Double, dist: Double, factor: Double,
-      avgDist: Double): Double =
-    w / math.max(dist, factor * avgDist)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -55,27 +53,13 @@ object CharCountKernels {
 /** graft_char_counts(s: string, 'alphabet') → array<int> of per-char
   * occurrence counts in alphabet order. */
 final case class CharCountsExpr(child: Expression, alphabet: String)
-    extends UnaryExpression {
-  @transient private lazy val lut = CharCountKernels.lookupFor(alphabet)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+    extends KernelCall with UnaryLike[Expression] {
+  def inputTypes: Seq[DataType] = Seq(StringType)
+  def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_char_counts"
-
-  override protected def nullSafeEval(input: Any): Any =
-    new GenericArrayData(CharCountKernels.counts(
-      input.asInstanceOf[UTF8String], lut, alphabet.length))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lutRef = ctx.addReferenceObj("graftCharLut", lut, "int[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.CharCountKernels.counts($c, $lutRef, ${alphabet.length}));")
-  }
-
+  protected def kernel: KernelCall.Kernel = KernelCall.Kernel(CharCountKernels, "counts")
+  override protected def constants: Seq[Any] =
+    Seq(CharCountKernels.lookupFor(alphabet), alphabet.length)
   override protected def withNewChildInternal(newChild: Expression): CharCountsExpr =
     copy(child = newChild)
 }

@@ -2,12 +2,15 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims.{column, expression}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, TernaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, DecimalType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, Decimal, DecimalType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+
+import KernelCall.{Kernel, NullFreeTokens, NullResult, NullTolerant, Nulls, Tokens, Vector}
 
 /** Native Catalyst expressions for the text-dedup hash kernels.
   *
@@ -15,9 +18,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, DecimalType, Do
   * resp. O(shingles × k) *array materializations* per row (each `zip_with`
   * / `transform` step allocates); these expressions do the same math in
   * one tight primitive loop per row with zero allocation beyond the
-  * output, and generate straight-line Java via `doGenCode` so they stay
-  * inside WholeStageCodegen. Semantics of the hash itself match Spark's
-  * `xxhash64` (XXH64 over the UTF-8 bytes, same as the HOF versions).
+  * output, and each is a [[KernelCall]] — one static call per row in
+  * straight-line generated Java, so it stays inside WholeStageCodegen.
+  * Semantics of the hash itself match Spark's `xxhash64` (XXH64 over
+  * the UTF-8 bytes, same as the HOF versions).
   */
 object HashKernels {
 
@@ -103,53 +107,25 @@ object HashKernels {
 
 /** simhash64(tokens: array<string>) → bigint. */
 final case class SimHash64Expr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (DataType.equalsStructurally(child.dataType, ArrayType(StringType), ignoreNullability = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<string>, got ${child.dataType.sql}")
-  override def dataType: DataType = LongType
+    extends KernelCall with UnaryLike[Expression] {
+  def inputTypes: Seq[DataType] = Seq(Tokens)
+  def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash64"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.simhash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.simhash($c)")
-
+  protected def kernel: Kernel = Kernel(HashKernels, "simhash")
   override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
     copy(child = newChild)
 }
 
 /** minhash_signature(shingles: array<string>, k) → array<bigint>. */
 final case class MinHashSigExpr(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
   require(k > 0 && k <= 1024, s"bad k=$k")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (DataType.equalsStructurally(child.dataType, ArrayType(StringType), ignoreNullability = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<string>, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true // empty shingle set -> null
+  def inputTypes: Seq[DataType] = Seq(Tokens)
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def nulls: Nulls = NullResult // empty shingle set -> null
   override def prettyName: String = "graft_minhash_signature"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val m = HashKernels.minhash(input.asInstanceOf[ArrayData], k)
-    if (m == null) null else new GenericArrayData(m)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("mh")
-      s"""long[] $tmp = graft.functions.HashKernels.minhash($c, $k);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($tmp); }
-         |""".stripMargin
-    })
-
+  protected def kernel: Kernel = Kernel(HashKernels, "minhash")
+  override protected def constants: Seq[Any] = Seq(k)
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
     copy(child = newChild)
 }
@@ -583,10 +559,6 @@ object HashKernels2 {
     acc
   }
 
-  /** Occurrence count of tokens present in a FIXED vocabulary set —
-    * the native form of `size(filter(toks, t -> t IN (...)))` (the
-    * d03/m09 stopword-ratio fold): O(tokens) hash probes on UTF8String
-    * binary equality, the same comparison the IN list compiles to. */
   /** cast(double AS DECIMAL(18,2)) without the Double.toString →
     * BigDecimal parse in the common range — the r22 money-fold diet
     * (the same pre-Ryu-toString disease DecimalSnap.snapFast15 cured
@@ -647,6 +619,10 @@ object HashKernels2 {
     Decimal(bd.unscaledValue.longValueExact, 18, 2)
   }
 
+  /** Occurrence count of tokens present in a FIXED vocabulary set —
+    * the native form of `size(filter(toks, t -> t IN (...)))` (the
+    * d03/m09 stopword-ratio fold): O(tokens) hash probes on UTF8String
+    * binary equality, the same comparison the IN list compiles to. */
   def countIn(toks: ArrayData,
       set: java.util.HashSet[UTF8String]): Int = {
     val n = toks.numElements()
@@ -828,32 +804,14 @@ object HashKernels2 {
 
 /** minhash_shingles(tokens: array<string>, n, k) → array<bigint>. */
 final case class MinHashShinglesExpr(child: Expression, n: Int, k: Int)
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
   require(n > 0 && k > 0 && k <= 1024, s"bad n=$n k=$k")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (DataType.equalsStructurally(child.dataType, ArrayType(StringType),
-        ignoreNullability = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<string>, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true // fewer than n tokens -> null
+  def inputTypes: Seq[DataType] = Seq(Tokens)
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def nulls: Nulls = NullResult // fewer than n tokens -> null
   override def prettyName: String = "graft_minhash_shingles"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val m = HashKernels2.minhashShingles(input.asInstanceOf[ArrayData], n, k)
-    if (m == null) null else new GenericArrayData(m)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("mhs")
-      s"""long[] $tmp = graft.functions.HashKernels2.minhashShingles($c, $n, $k);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($tmp); }
-         |""".stripMargin
-    })
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "minhashShingles")
+  override protected def constants: Seq[Any] = Seq(n, k)
   override protected def withNewChildInternal(newChild: Expression): MinHashShinglesExpr =
     copy(child = newChild)
 }
@@ -861,32 +819,14 @@ final case class MinHashShinglesExpr(child: Expression, n: Int, k: Int)
 /** gram_hashes(tokens: array<string>, l) → array<bigint>: one xxhash64
   * per positioned L-gram window (the d82 production-hash kernel). */
 final case class GramHashesExpr(child: Expression, l: Int)
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
   require(l > 0 && l <= 1024, s"bad l=$l")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (DataType.equalsStructurally(child.dataType, ArrayType(StringType),
-        ignoreNullability = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<string>, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true // fewer than l tokens -> null
+  def inputTypes: Seq[DataType] = Seq(Tokens)
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def nulls: Nulls = NullResult // fewer than l tokens -> null
   override def prettyName: String = "graft_gram_hashes"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val h = HashKernels2.gramHashes(input.asInstanceOf[ArrayData], l)
-    if (h == null) null else new GenericArrayData(h)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("gh")
-      s"""long[] $tmp = graft.functions.HashKernels2.gramHashes($c, $l);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($tmp); }
-         |""".stripMargin
-    })
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "gramHashes")
+  override protected def constants: Seq[Any] = Seq(l)
   override protected def withNewChildInternal(newChild: Expression): GramHashesExpr =
     copy(child = newChild)
 }
@@ -898,23 +838,13 @@ final case class GramHashesExpr(child: Expression, l: Int)
   * The md5 coin itself stays: it is the hash both engines share, so
   * every oracle keeps gating the sketch values bit-for-bit. */
 final case class Md5PrefixExpr(child: Expression, hexDigits: Int)
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
   require(hexDigits >= 1 && hexDigits <= 15, s"bad hexDigits=$hexDigits")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType.sql}")
-  override def dataType: DataType = LongType
+  def inputTypes: Seq[DataType] = Seq(BinaryType)
+  def dataType: DataType = LongType
   override def prettyName: String = "graft_md5_prefix"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels2.md5Prefix(input.asInstanceOf[Array[Byte]], hexDigits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels2.md5Prefix($c, $hexDigits)")
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "md5Prefix")
+  override protected def constants: Seq[Any] = Seq(hexDigits)
   override protected def withNewChildInternal(newChild: Expression): Md5PrefixExpr =
     copy(child = newChild)
 }
@@ -927,24 +857,11 @@ final case class Md5PrefixExpr(child: Expression, hexDigits: Int)
   * the hash both engines share, so the oracle keeps gating the order
   * bit-for-bit. */
 final case class Md5SortKeyExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    extends KernelCall with UnaryLike[Expression] {
+  def inputTypes: Seq[DataType] = Seq(BinaryType)
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_md5_sort_key"
-
-  override protected def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      HashKernels2.md5SortKey(input.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.HashKernels2.md5SortKey($c))")
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "md5SortKey")
   override protected def withNewChildInternal(newChild: Expression): Md5SortKeyExpr =
     copy(child = newChild)
 }
@@ -957,41 +874,16 @@ final case class Md5SortKeyExpr(child: Expression)
   * the hash both engines share, so the string-keyed oracle keeps
   * gating every signature bit-for-bit. */
 final case class Md5MinhashExpr(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
   require(k >= 1 && k <= 64, s"bad k=$k")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (DataType.equalsStructurally(child.dataType, ArrayType(StringType),
-        ignoreNullability = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<string>, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+  def inputTypes: Seq[DataType] = Seq(Tokens)
+  def dataType: DataType = ArrayType(StringType, containsNull = true)
   // never null: the HOF's outer transform runs over sequence(0, k-1),
   // so a null INPUT array still yields an array (of k null slots)
-  override def nullable: Boolean = false
+  override protected def nulls: Nulls = NullTolerant
   override def prettyName: String = "graft_md5_minhash"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    HashKernels2.md5MinhashHex(child.eval(input).asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    val out = ctx.freshName("mhsig")
-    val javaType =
-      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-        .javaType(dataType)
-    ev.copy(
-      code = code"""
-        |${c.code}
-        |$javaType $out = graft.functions.HashKernels2.md5MinhashHex(
-        |  ${c.isNull} ? null : ${c.value}, $k);
-        |""".stripMargin,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral,
-      value = org.apache.spark.sql.catalyst.expressions.codegen.JavaCode
-        .variable(out, dataType))
-  }
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "md5MinhashHex")
+  override protected def constants: Seq[Any] = Seq(k)
   override protected def withNewChildInternal(newChild: Expression): Md5MinhashExpr =
     copy(child = newChild)
 }
@@ -1004,50 +896,18 @@ final case class Md5MinhashExpr(child: Expression, k: Int)
   * family). The weight table is a bounded driver-side constant
   * carried by the expression (the SignLshExpr pattern). */
 final case class QcWsumExpr(child: Expression, weights: Array[Double],
-    buckets: Int) extends UnaryExpression {
+    buckets: Int)
+    extends KernelCall with UnaryLike[Expression] {
   require(buckets > 0 && weights.length == buckets,
     s"weights spans ${weights.length} buckets, expected $buckets")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (DataType.equalsStructurally(child.dataType, ArrayType(StringType),
-        ignoreNullability = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<string>, got ${child.dataType.sql}")
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullable: Boolean = true // null array OR null element
+  def inputTypes: Seq[DataType] = Seq(Tokens)
+  def dataType: DataType = DoubleType
+  override protected def nulls: Nulls = NullResult // null array OR null element
   override def prettyName: String = "graft_gram_bucket_wsum"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels2.qcGramWsum(input.asInstanceOf[ArrayData], weights, buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("qcWeights", weights, "double[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("wsum")
-      s"""java.lang.Double $tmp = graft.functions.HashKernels2.qcGramWsum($c, $wRef, $buckets);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.doubleValue(); }
-         |""".stripMargin
-    })
-  }
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "qcGramWsum")
+  override protected def constants: Seq[Any] = Seq(weights, buckets)
   override protected def withNewChildInternal(newChild: Expression): QcWsumExpr =
     copy(child = newChild)
-}
-
-/** Shared strict type check for kernels whose input contract is the
-  * null-free normTokens shape: a nullable-element array fails ANALYSIS
-  * loudly instead of risking a silent divergence from the HOF's
-  * null-element semantics (which these kernels do not reproduce). */
-private[functions] trait NullFreeTokensExpr extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (DataType.equalsStructurally(child.dataType,
-        ArrayType(StringType, containsNull = false),
-        ignoreNullability = false))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<string> with null-free elements " +
-        s"(the normTokens shape), got ${child.dataType.sql}")
 }
 
 /** bloom_hits(grams: array<string>) → bigint: count of grams whose k
@@ -1055,33 +915,16 @@ private[functions] trait NullFreeTokensExpr extends UnaryExpression {
   * [[HashKernels2.bloomHits]] (the d57/s23 screen fold). The bitmap is
   * a bounded driver-side constant (the SignLshExpr pattern). */
 final case class BloomHitsExpr(child: Expression, bits: Array[Long],
-    k: Int, hexDigits: Int) extends UnaryExpression {
+    k: Int, hexDigits: Int)
+    extends KernelCall with UnaryLike[Expression] {
   require(k >= 1 && k <= 64 && hexDigits >= 1 && hexDigits <= 15,
     s"bad k=$k hexDigits=$hexDigits")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (DataType.equalsStructurally(child.dataType, ArrayType(StringType),
-        ignoreNullability = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<string>, got ${child.dataType.sql}")
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true // null array OR null gram
+  def inputTypes: Seq[DataType] = Seq(Tokens)
+  def dataType: DataType = LongType
+  override protected def nulls: Nulls = NullResult // null array OR null gram
   override def prettyName: String = "graft_bloom_hits"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels2.bloomHits(input.asInstanceOf[ArrayData], bits, k, hexDigits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bRef = ctx.addReferenceObj("bloomBits", bits, "long[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("bh")
-      s"""java.lang.Long $tmp = graft.functions.HashKernels2.bloomHits($c, $bRef, $k, $hexDigits);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.longValue(); }
-         |""".stripMargin
-    })
-  }
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "bloomHits")
+  override protected def constants: Seq[Any] = Seq(bits, k, hexDigits)
   override protected def withNewChildInternal(newChild: Expression): BloomHitsExpr =
     copy(child = newChild)
 }
@@ -1090,40 +933,27 @@ final case class BloomHitsExpr(child: Expression, bits: Array[Long],
   * see [[HashKernels2.bigramLmScore]] (the d44/s16 perplexity fold).
   * lnc/lnd are bounded driver-side constants. */
 final case class BigramLmScoreExpr(child: Expression, lnc: Array[Long],
-    lnd: Array[Long]) extends NullFreeTokensExpr {
+    lnd: Array[Long])
+    extends KernelCall with UnaryLike[Expression] {
   require(lnc.nonEmpty && lnc.length == lnd.length,
     s"lnc/lnd must span the same bucket space, got ${lnc.length}/${lnd.length}")
-  override def dataType: DataType = LongType
+  def inputTypes: Seq[DataType] = Seq(NullFreeTokens)
+  def dataType: DataType = LongType
   override def prettyName: String = "graft_bigram_lm_score"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels2.bigramLmScore(input.asInstanceOf[ArrayData], lnc, lnd,
-      lnc.length)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("lmLnc", lnc, "long[]")
-    val dRef = ctx.addReferenceObj("lmLnd", lnd, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels2.bigramLmScore($c, $cRef, $dRef, ${lnc.length})")
-  }
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "bigramLmScore")
+  override protected def constants: Seq[Any] = Seq(lnc, lnd, lnc.length)
   override protected def withNewChildInternal(newChild: Expression): BigramLmScoreExpr =
     copy(child = newChild)
 }
 
 /** tok_len_sum(toks: array<string> not null) → int: Σ length(t) — see
   * [[HashKernels2.tokLenSum]] (the d03/d09/m09 avg-token-length fold). */
-final case class TokLenSumExpr(child: Expression) extends NullFreeTokensExpr {
-  override def dataType: DataType = IntegerType
+final case class TokLenSumExpr(child: Expression)
+    extends KernelCall with UnaryLike[Expression] {
+  def inputTypes: Seq[DataType] = Seq(NullFreeTokens)
+  def dataType: DataType = IntegerType
   override def prettyName: String = "graft_tok_len_sum"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels2.tokLenSum(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels2.tokLenSum($c)")
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "tokLenSum")
   override protected def withNewChildInternal(newChild: Expression): TokLenSumExpr =
     copy(child = newChild)
 }
@@ -1132,26 +962,13 @@ final case class TokLenSumExpr(child: Expression) extends NullFreeTokensExpr {
   * `cast(d AS DECIMAL(18,2))` — see [[HashKernels2.dec2]] (the r22
   * money-fold cast diet). Nullable: NaN/±Inf yield NULL exactly as the
   * ANSI cast does. */
-final case class Dec2Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == DoubleType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs double, got ${child.dataType.sql}")
-  override def dataType: DataType = DecimalType(18, 2)
-  override def nullable: Boolean = true
+final case class Dec2Expr(child: Expression)
+    extends KernelCall with UnaryLike[Expression] {
+  def inputTypes: Seq[DataType] = Seq(DoubleType)
+  def dataType: DataType = DecimalType(18, 2)
+  override protected def nulls: Nulls = NullResult // NaN/±Inf -> null, like the ANSI cast
   override def prettyName: String = "graft_dec2"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels2.dec2(input.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = graft.functions.HashKernels2.dec2($c);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "dec2")
   override protected def withNewChildInternal(newChild: Expression): Dec2Expr =
     copy(child = newChild)
 }
@@ -1160,25 +977,15 @@ final case class Dec2Expr(child: Expression) extends UnaryExpression {
   * — see [[HashKernels2.blockMd5]] (the x06/x08/s25 block-cutting
   * front). */
 final case class BlockMd5Expr(child: Expression, blockBytes: Int)
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
   require(blockBytes >= 1 && blockBytes <= (1 << 20), s"bad blockBytes=$blockBytes")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  def inputTypes: Seq[DataType] = Seq(BinaryType)
+  def dataType: DataType = ArrayType(StructType(Seq(
     StructField("h", StringType, nullable = false),
     StructField("blen", LongType, nullable = false))), containsNull = false)
   override def prettyName: String = "graft_block_md5"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels2.blockMd5(input.asInstanceOf[Array[Byte]], blockBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels2.blockMd5($c, $blockBytes)")
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "blockMd5")
+  override protected def constants: Seq[Any] = Seq(blockBytes)
   override protected def withNewChildInternal(newChild: Expression): BlockMd5Expr =
     copy(child = newChild)
 }
@@ -1188,32 +995,16 @@ final case class BlockMd5Expr(child: Expression, blockBytes: Int)
   * BM25-screen fold); nd/tt are corpus constants carried by the
   * expression. */
 final case class Bm25SmExpr(first: Expression, second: Expression,
-    third: Expression, nd: Long, tt: Long) extends TernaryExpression {
+    third: Expression, nd: Long, tt: Long)
+    extends KernelCall with TernaryLike[Expression] {
   require(tt > 0 && nd > 0, s"bad nd=$nd tt=$tt")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val qt = ArrayType(StructType(Seq(
-      StructField("_1", IntegerType), StructField("_2", LongType))))
-    if (DataType.equalsStructurally(first.dataType, ArrayType(IntegerType),
-        ignoreNullability = true) &&
-      second.dataType == LongType &&
-      DataType.equalsStructurally(third.dataType, qt,
-        ignoreNullability = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (array<int>, bigint, array<struct<int,bigint>>), " +
-        s"got (${first.dataType.sql}, ${second.dataType.sql}, ${third.dataType.sql})")
-  }
-  override def dataType: DataType = LongType
+  def inputTypes: Seq[DataType] = Seq(ArrayType(IntegerType), LongType,
+    ArrayType(StructType(Seq(
+      StructField("_1", IntegerType), StructField("_2", LongType)))))
+  def dataType: DataType = LongType
   override def prettyName: String = "graft_bm25_sm"
-
-  override protected def nullSafeEval(tf: Any, dl: Any, q: Any): Any =
-    HashKernels2.bm25Sm(tf.asInstanceOf[ArrayData],
-      dl.asInstanceOf[Long], q.asInstanceOf[ArrayData], nd, tt)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (tf, dl, q) =>
-      s"graft.functions.HashKernels2.bm25Sm($tf, $dl, $q, ${nd}L, ${tt}L)")
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "bm25Sm")
+  override protected def constants: Seq[Any] = Seq(nd, tt)
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Bm25SmExpr =
     copy(first = newFirst, second = newSecond, third = newThird)
@@ -1224,28 +1015,18 @@ final case class Bm25SmExpr(first: Expression, second: Expression,
   * vocabulary is a bounded driver-side constant (TermCountsExpr's
   * index pattern). */
 final case class CountInExpr(child: Expression, vocab: Seq[String])
-    extends NullFreeTokensExpr {
+    extends KernelCall with UnaryLike[Expression] {
   require(vocab.nonEmpty && vocab.size <= (1 << 20),
     s"vocab must be non-empty and bounded, got ${vocab.size}")
-  override def dataType: DataType = IntegerType
+  def inputTypes: Seq[DataType] = Seq(NullFreeTokens)
+  def dataType: DataType = IntegerType
   override def prettyName: String = "graft_count_in"
-
-  @transient private lazy val set: java.util.HashSet[UTF8String] = {
+  protected def kernel: Kernel = Kernel(HashKernels2, "countIn")
+  override protected def constants: Seq[Any] = {
     val s = new java.util.HashSet[UTF8String](vocab.size * 2)
     vocab.foreach(t => s.add(UTF8String.fromString(t)))
-    s
+    Seq(s)
   }
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels2.countIn(input.asInstanceOf[ArrayData], set)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sRef = ctx.addReferenceObj("countInSet", set,
-      "java.util.HashSet<org.apache.spark.unsafe.types.UTF8String>")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels2.countIn($c, $sRef)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): CountInExpr =
     copy(child = newChild)
 }
@@ -1255,28 +1036,16 @@ final case class CountInExpr(child: Expression, vocab: Seq[String])
   * KMV gram-hash front). Null when fewer than l tokens (callers filter
   * size(toks) >= l, like the gramHashes sites). */
 final case class Md5PrefixGramsExpr(child: Expression, l: Int,
-    hexDigits: Int) extends NullFreeTokensExpr {
+    hexDigits: Int)
+    extends KernelCall with UnaryLike[Expression] {
   require(l >= 1 && l <= 1024 && hexDigits >= 1 && hexDigits <= 15,
     s"bad l=$l hexDigits=$hexDigits")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true // fewer than l tokens -> null
+  def inputTypes: Seq[DataType] = Seq(NullFreeTokens)
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def nulls: Nulls = NullResult // fewer than l tokens -> null
   override def prettyName: String = "graft_md5_prefix_grams"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val h = HashKernels2.md5PrefixGrams(input.asInstanceOf[ArrayData], l,
-      hexDigits)
-    if (h == null) null else new GenericArrayData(h)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("mpg")
-      s"""long[] $tmp = graft.functions.HashKernels2.md5PrefixGrams($c, $l, $hexDigits);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($tmp); }
-         |""".stripMargin
-    })
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "md5PrefixGrams")
+  override protected def constants: Seq[Any] = Seq(l, hexDigits)
   override protected def withNewChildInternal(newChild: Expression): Md5PrefixGramsExpr =
     copy(child = newChild)
 }
@@ -1288,27 +1057,16 @@ final case class Md5PrefixGramsExpr(child: Expression, l: Int,
   * wrap the call in `opaque` so CollapseProject cannot duplicate the
   * fold into each extraction. */
 final case class Md5MinMaxExpr(child: Expression, n: Int)
-    extends NullFreeTokensExpr {
+    extends KernelCall with UnaryLike[Expression] {
   require(n >= 1 && n <= 1024, s"bad n=$n")
-  override def dataType: DataType = StructType(Seq(
+  def inputTypes: Seq[DataType] = Seq(NullFreeTokens)
+  def dataType: DataType = StructType(Seq(
     StructField("mn", StringType, nullable = false),
     StructField("mx", StringType, nullable = false)))
-  override def nullable: Boolean = true // fewer than n tokens -> null
+  override protected def nulls: Nulls = NullResult // fewer than n tokens -> null
   override def prettyName: String = "graft_md5_minmax"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels2.md5MinMax(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("mmx")
-      s"""org.apache.spark.sql.catalyst.InternalRow $tmp =
-         |  graft.functions.HashKernels2.md5MinMax($c, $n);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp; }
-         |""".stripMargin
-    })
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "md5MinMax")
+  override protected def constants: Seq[Any] = Seq(n)
   override protected def withNewChildInternal(newChild: Expression): Md5MinMaxExpr =
     copy(child = newChild)
 }
@@ -1317,18 +1075,13 @@ final case class Md5MinMaxExpr(child: Expression, n: Int)
   * [[HashKernels2.gramDistinctCount]] (d13's repetition-ratio fold;
   * EXACT, collision-checked by token compare). */
 final case class GramDistinctCountExpr(child: Expression, l: Int)
-    extends NullFreeTokensExpr {
+    extends KernelCall with UnaryLike[Expression] {
   require(l >= 1 && l <= 1024, s"bad l=$l")
-  override def dataType: DataType = IntegerType
+  def inputTypes: Seq[DataType] = Seq(NullFreeTokens)
+  def dataType: DataType = IntegerType
   override def prettyName: String = "graft_gram_distinct"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels2.gramDistinctCount(input.asInstanceOf[ArrayData], l)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels2.gramDistinctCount($c, $l)")
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "gramDistinctCount")
+  override protected def constants: Seq[Any] = Seq(l)
   override protected def withNewChildInternal(newChild: Expression): GramDistinctCountExpr =
     copy(child = newChild)
 }
@@ -1338,35 +1091,33 @@ final case class GramDistinctCountExpr(child: Expression, l: Int)
   * broadcast-operand pattern: small, replicated, never shuffled).
   */
 final case class SignLshExpr(child: Expression, planes: Array[Double],
-    dim: Int, bitsPerBand: Int) extends UnaryExpression {
+    dim: Int, bitsPerBand: Int)
+    extends KernelCall with UnaryLike[Expression] {
   require(planes.length % dim == 0 &&
     (planes.length / dim) % bitsPerBand == 0, "bad planes/dim/bits shape")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (DataType.equalsStructurally(child.dataType,
-        ArrayType(org.apache.spark.sql.types.DoubleType),
-        ignoreNullability = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<double>, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def inputTypes: Seq[DataType] = Seq(Vector)
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_sign_lsh"
-
-  override protected def nullSafeEval(input: Any): Any =
-    new GenericArrayData(HashKernels2.signLsh(
-      input.asInstanceOf[ArrayData], planes, dim, bitsPerBand))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planes, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.HashKernels2.signLsh($c, $planesRef, $dim, $bitsPerBand))")
-  }
-
+  protected def kernel: Kernel = Kernel(HashKernels2, "signLsh")
+  override protected def constants: Seq[Any] = Seq(planes, dim, bitsPerBand)
   override protected def withNewChildInternal(newChild: Expression): SignLshExpr =
     copy(child = newChild)
 }
 
 object VecKernels {
+  /** Element-nullability of the vector inputs, resolved at plan time
+    * and passed to dot/cosine as a constant: parquet array columns are
+    * element-nullable by schema even when the data never holds a null,
+    * so a null element then fails LOUDLY instead of silently reading as
+    * 0.0 (which would diverge from the HOF form these kernels are
+    * documented bit-identical to: it yields NULL — ADVICE r10).
+    * Provably null-free inputs skip the per-element check entirely. */
+  def elementsNullable(inputs: Expression*): Boolean = inputs.exists(
+    _.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => true
+    })
+
   /** a·b, left fold in index order — value-identical to the HOF form
     * `aggregate(zip_with(a, b, _ * _), 0.0, _ + _)` on equal-length
     * NULL-FREE double arrays (same IEEE op sequence, so the same bits
@@ -1457,63 +1208,19 @@ object VecKernels {
   * expression-tree blowup.
   */
 final case class NearestCentroidExpr(child: Expression,
-    centroids: Array[Double], d: Int) extends UnaryExpression {
+    centroids: Array[Double], d: Int)
+    extends KernelCall with UnaryLike[Expression] {
   require(d > 0 && centroids.length % d == 0 && centroids.nonEmpty,
     "bad centroid matrix shape")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (DataType.equalsStructurally(child.dataType,
-        ArrayType(org.apache.spark.sql.types.DoubleType),
-        ignoreNullability = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<double>, got ${child.dataType.sql}")
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(
-    Seq(org.apache.spark.sql.types.StructField("dist2",
-        org.apache.spark.sql.types.DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("cid",
-        org.apache.spark.sql.types.IntegerType, nullable = false)))
+  def inputTypes: Seq[DataType] = Seq(Vector)
+  def dataType: DataType = StructType(Seq(
+    StructField("dist2", DoubleType, nullable = false),
+    StructField("cid", IntegerType, nullable = false)))
   override def prettyName: String = "graft_nearest_centroid"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VecKernels.nearest(input.asInstanceOf[ArrayData], centroids, d)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("centroids", centroids, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VecKernels.nearest($c, $centsRef, $d)")
-  }
-
+  protected def kernel: Kernel = Kernel(VecKernels, "nearest")
+  override protected def constants: Seq[Any] = Seq(centroids, d)
   override protected def withNewChildInternal(newChild: Expression): NearestCentroidExpr =
     copy(child = newChild)
-}
-
-/** Shared type check for the binary vector kernels. */
-private[functions] trait VecBinaryExpr extends BinaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val want = ArrayType(org.apache.spark.sql.types.DoubleType)
-    if (Seq(left, right).forall(c => DataType.equalsStructurally(
-        c.dataType, want, ignoreNullability = true)))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (array<double>, array<double>), got " +
-        s"(${left.dataType.sql}, ${right.dataType.sql})")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  /** Element-nullability of the inputs, resolved at plan time: parquet
-    * array columns are element-nullable by schema even when the data
-    * never holds a null, so the kernels take a baked-in flag — a null
-    * element then fails LOUDLY instead of silently reading as 0.0
-    * (which would diverge from the HOF form these kernels are
-    * documented bit-identical to: it yields NULL — ADVICE r10).
-    * Provably null-free inputs skip the per-element check entirely.
-    * lazy val, not def (ADVICE r11): children are fixed once the
-    * expression is constructed (tree rewrites copy() a new node), so
-    * the interpreted path must not re-derive this per row. */
-  protected lazy val elementsNullable: Boolean = Seq(left, right).exists(
-    _.dataType match {
-      case ArrayType(_, containsNull) => containsNull
-      case _ => true
-    })
 }
 
 /** graft_dot(a, b) → double: index-order a·b in one codegen'd loop —
@@ -1522,14 +1229,12 @@ private[functions] trait VecBinaryExpr extends BinaryExpression {
   * WholeStageCodegen) on the ANN/dedup scoring hot paths. Value- and
   * bit-identical to the HOF form (VecExprsSpec). */
 final case class DotExpr(left: Expression, right: Expression)
-    extends VecBinaryExpr {
+    extends KernelCall with BinaryLike[Expression] {
+  def inputTypes: Seq[DataType] = Seq(Vector, Vector)
+  def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      elementsNullable)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VecKernels.dot($a, $b, $elementsNullable)")
+  protected def kernel: Kernel = Kernel(VecKernels, "dot")
+  override protected def constants: Seq[Any] = Seq(VecKernels.elementsNullable(left, right))
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): DotExpr = copy(left = newLeft, right = newRight)
 }
@@ -1539,14 +1244,12 @@ final case class DotExpr(left: Expression, right: Expression)
   * the DuckDB oracle. One codegen'd loop per scored pair instead of
   * three interpreted HOF folds with six array allocations. */
 final case class CosineExpr(left: Expression, right: Expression)
-    extends VecBinaryExpr {
+    extends KernelCall with BinaryLike[Expression] {
+  def inputTypes: Seq[DataType] = Seq(Vector, Vector)
+  def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VecKernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      elementsNullable)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VecKernels.cosine($a, $b, $elementsNullable)")
+  protected def kernel: Kernel = Kernel(VecKernels, "cosine")
+  override protected def constants: Seq[Any] = Seq(VecKernels.elementsNullable(left, right))
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): CosineExpr = copy(left = newLeft, right = newRight)
 }
@@ -1637,23 +1340,12 @@ object TextKernels {
 }
 
 /** norm_tokens(text: string) → array<string>. */
-final case class NormTokensExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+final case class NormTokensExpr(child: Expression)
+    extends KernelCall with UnaryLike[Expression] {
+  def inputTypes: Seq[DataType] = Seq(StringType)
+  def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_norm_tokens"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.normTokens(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextKernels.normTokens($c)")
-
+  protected def kernel: Kernel = Kernel(TextKernels, "normTokens")
   override protected def withNewChildInternal(newChild: Expression): NormTokensExpr =
     copy(child = newChild)
 }
@@ -1670,44 +1362,22 @@ final case class NormTokensExpr(child: Expression) extends UnaryExpression {
   * to.
   */
 final case class TermCountsExpr(child: Expression, vocab: Seq[String])
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
   require(vocab.nonEmpty && vocab.size <= (1 << 20),
     s"vocab must be non-empty and bounded, got ${vocab.size}")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (DataType.equalsStructurally(child.dataType, ArrayType(StringType), ignoreNullability = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<string>, got ${child.dataType.sql}")
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
+  def inputTypes: Seq[DataType] = Seq(Tokens)
+  def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_term_counts"
-
-  // built once per task from the vocab (UTF8String keys hash/compare
-  // on bytes, matching the engine's string equality); shipped to
-  // executors via the codegen references array
-  @transient private lazy val index: java.util.HashMap[
-      org.apache.spark.unsafe.types.UTF8String, Integer] = {
-    val m = new java.util.HashMap[
-      org.apache.spark.unsafe.types.UTF8String, Integer](vocab.size * 2)
+  protected def kernel: Kernel = Kernel(HashKernels, "termCounts")
+  override protected def constants: Seq[Any] = {
+    // UTF8String keys hash/compare on bytes, matching the engine's
+    // string equality
+    val m = new java.util.HashMap[UTF8String, Integer](vocab.size * 2)
     vocab.zipWithIndex.foreach { case (t, i) =>
-      m.put(org.apache.spark.unsafe.types.UTF8String.fromString(t),
-        Integer.valueOf(i))
+      m.put(UTF8String.fromString(t), Integer.valueOf(i))
     }
-    m
+    Seq(m, vocab.size)
   }
-
-  override protected def nullSafeEval(input: Any): Any =
-    new GenericArrayData(HashKernels.termCounts(
-      input.asInstanceOf[ArrayData], index, vocab.size))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val idxRef = ctx.addReferenceObj("vocabIndex", index,
-      "java.util.HashMap")
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.HashKernels.termCounts($c, $idxRef, ${vocab.size}))")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): TermCountsExpr =
     copy(child = newChild)
 }
@@ -1785,14 +1455,10 @@ object GopherKernels {
   * array<struct<n int, max_c bigint, dup_occ bigint, tot bigint>>,
   * one row per window width in `ns` order (see [[GopherKernels]]). */
 final case class GopherStatsExpr(child: Expression, ns: Seq[Int])
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
   require(ns.nonEmpty && ns.forall(n => n >= 1 && n <= 64), s"bad ns=$ns")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (DataType.equalsStructurally(child.dataType, ArrayType(StringType), ignoreNullability = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<string>, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(
+  def inputTypes: Seq[DataType] = Seq(Tokens)
+  def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("n", IntegerType, nullable = false),
       StructField("max_c", LongType, nullable = false),
@@ -1800,18 +1466,8 @@ final case class GopherStatsExpr(child: Expression, ns: Seq[Int])
       StructField("tot", LongType, nullable = false))),
     containsNull = false)
   override def prettyName: String = "graft_gopher_stats"
-
-  @transient private lazy val nsArr: Array[Int] = ns.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    GopherKernels.gopherStats(input.asInstanceOf[ArrayData], nsArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val nsRef = ctx.addReferenceObj("gopherNs", nsArr, "int[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.GopherKernels.gopherStats($c, $nsRef)")
-  }
-
+  protected def kernel: Kernel = Kernel(GopherKernels, "gopherStats")
+  override protected def constants: Seq[Any] = Seq(ns.toArray)
   override protected def withNewChildInternal(newChild: Expression): GopherStatsExpr =
     copy(child = newChild)
 }

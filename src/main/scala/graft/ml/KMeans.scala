@@ -47,6 +47,18 @@ object KMeans {
   def assign(v: Column, centroids: Array[Array[Double]]): Column =
     graft.functions.GraftFunctions.nearestCentroid(v, centroids)
 
+  /** The assigned cell id behind the §4.4 opacity barrier
+    * (graft.functions.OpaqueExpr), for a cell column that a filter or
+    * join consumes: un-wrapped, the pushed `cell IN (...)` and the
+    * join's inferred `isnotnull(cell)` each re-run the centroid scan
+    * inside the Filter, and the surviving projection runs it a third
+    * time. Values are identical; filters on OTHER columns must be
+    * applied before this column is added (the barrier keeps every
+    * predicate above its projection).
+    */
+  def cellOnce(v: Column, centroids: Array[Array[Double]]): Column =
+    graft.functions.GraftFunctions.opaque(assign(v, centroids).getField("cid"))
+
   /** One Lloyd step: assign every point, recompute per-dimension means.
     * `points` must expose `v: array<double>`. Empty clusters keep their
     * old centroid.

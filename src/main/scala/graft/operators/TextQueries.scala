@@ -20,7 +20,6 @@ object TextQueries {
   private val stopEs = Seq("el", "los", "las", "y", "que", "en", "un", "una")
   private val stopDe = Seq("der", "die", "und", "das", "ein", "nicht", "mit", "ist")
 
-  private def sqlList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString(", ")
   // r22: native CountInExpr — one codegen'd pass of UTF8String set
   // probes per row replaces the interpreted `size(filter(t IN (...)))`
   // lambda per token (value-identical; HashExprsSpec)

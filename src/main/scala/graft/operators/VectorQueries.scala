@@ -1788,16 +1788,20 @@ object VectorQueries {
       np: Int): DataFrame = {
     import s.implicits._
     val (cents, sample, _) = ivfIndex(s, dir)
-    // the filter column rides the cell-assigned layout (in production
-    // it is stored inline with the codes — that is what makes
-    // pre-filtering a scan predicate instead of a join)
-    val el = Tables(s, dir, "embeddings")
-      .select($"vec_id", VectorOps.toDouble($"embedding").as("v"), $"label")
-      .withColumn("cell", KMeans.assign($"v", cents).getField("cid"))
     // bounded driver gather: the nQueries query labels (5 rows)
     val qLabels = Tables(s, dir, "embeddings")
       .filter($"vec_id" < nQueries).select($"vec_id", $"label")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val wantedLabels = qLabels.values.toSeq.distinct
+    // the filter column rides the cell-assigned layout (in production
+    // it is stored inline with the codes — that is what makes
+    // pre-filtering a scan predicate instead of a join); the label
+    // predicate is applied BEFORE the opaque cell assignment so it
+    // still pushes into the scan
+    val el = Tables(s, dir, "embeddings")
+      .select($"vec_id", VectorOps.toDouble($"embedding").as("v"), $"label")
+      .filter($"label".isin(wantedLabels: _*)) // the pushed pre-filter
+      .withColumn("cell", KMeans.cellOnce($"v", cents))
     val qRows = sample.filter(_._1 < nQueries)
     val probeRows = qRows.flatMap { case (qid, qv) =>
       val near = cents.zipWithIndex.map { case (c, i) =>
@@ -1807,10 +1811,8 @@ object VectorQueries {
     }
     val probes = probeRows.toSeq.toDF("qid", "cell", "qlabel", "qv")
     val probedCells = probeRows.map(_._2).distinct.toSeq
-    val wantedLabels = qLabels.values.toSeq.distinct
     val cands = el
-      .filter($"cell".isin(probedCells: _*) &&
-        $"label".isin(wantedLabels: _*)) // the pushed pre-filter
+      .filter($"cell".isin(probedCells: _*))
       .join(broadcast(probes),
         el("cell") === probes("cell") && $"label" === $"qlabel")
       .filter($"vec_id" =!= $"qid")
@@ -1878,9 +1880,10 @@ object VectorQueries {
         .select($"vec_id", $"v",
           KMeans.assign($"v", cents).getField("cid").as("cell"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // the probe's `cell IN (...)` pushes through the union onto
+      // this lazy leg: the opaque cell keeps it to one centroid scan
       val delta = e.filter($"vec_id" % incMod >= incBaseSlots)
-        .select($"vec_id", $"v",
-          KMeans.assign($"v", cents).getField("cid").as("cell"))
+        .select($"vec_id", $"v", KMeans.cellOnce($"v", cents).as("cell"))
       (cents, sample, base, base.union(delta))
     }
   /** s29: the v05 probe lifted onto a query readStream. The batch

@@ -23,10 +23,18 @@ object GraftShims {
 
   /** Blocks until the context's listener bus has dispatched every
     * queued event — the test-side plan sweeps capture
-    * SparkListenerSQLExecutionStart events (the only way to reach a
+    * SparkListenerSQLExecutionEnd events (the only way to reach a
     * TERMINATED stream's executed micro-batch plans from outside its
     * runner), and event delivery is async, so attribution of a plan to
     * the query that produced it needs a flush between queries. */
   def waitListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The physical plan an SQL execution ran, off its end event — the
+    * typed form of the plan the UI renders, reaching every micro-batch
+    * of a stream that has since terminated (the test-side plan sweeps
+    * walk it). None when the event carries no QueryExecution. */
+  def executedPlan(e: execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[execution.SparkPlan] =
+    Option(e.qe).map(_.executedPlan)
 }

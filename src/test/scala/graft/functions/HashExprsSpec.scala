@@ -191,10 +191,9 @@ class HashExprsSpec extends AnyFunSuite {
     import spark.implicits._
     val plan = docs()
       .select(GraftFunctions.termCounts($"toks", Seq("the", "of")).as("tf"))
-      .queryExecution.executedPlan.toString
-    val projLine = plan.linesIterator
-      .find(_.contains("graft_term_counts")).getOrElse("")
-    assert(projLine.trim.matches("""^[+\-:\s]*\*\(\d+\) Project.*"""), plan)
+      .queryExecution.executedPlan
+    val bad = KernelPlans.codegenViolations(plan, classOf[TermCountsExpr])
+    assert(bad.isEmpty, s"${bad.mkString("; ")}:\n$plan")
   }
 
   test("native exprs stay inside WholeStageCodegen") {
@@ -203,11 +202,10 @@ class HashExprsSpec extends AnyFunSuite {
       .select(GraftFunctions.simhash64($"toks").as("s"),
         GraftFunctions.minhashSignature($"toks", 8).as("m"),
         GraftFunctions.gramHashes($"toks", 8).as("g"))
-      .queryExecution.executedPlan.toString
-    // the * marker on the Project = inside a WholeStageCodegen stage
-    val projLine = plan.linesIterator
-      .find(_.contains("graft_simhash64")).getOrElse("")
-    assert(projLine.trim.matches("""^[+\-:\s]*\*\(\d+\) Project.*"""), plan)
+      .queryExecution.executedPlan
+    val bad = KernelPlans.codegenViolations(plan, classOf[SimHash64Expr],
+      classOf[MinHashSigExpr], classOf[GramHashesExpr])
+    assert(bad.isEmpty, s"${bad.mkString("; ")}:\n$plan")
   }
 
   test("native nearestCentroid equals the HOF argmin form on real embeddings") {
@@ -846,5 +844,137 @@ class HashExprsSpec extends AnyFunSuite {
       .collect()
     tiny.foreach(r => assert(r.getAs[Int]("ref") == r.getAs[Int]("native"),
       s"id ${r.get(0)}"))
+  }
+
+  /** Every concrete KernelCall compiled into graft.functions. */
+  private def kernelClasses: Set[Class[_]] = {
+    val base = classOf[KernelCall]
+    val pkg = base.getPackage.getName
+    // the build's class directory (tests run against compiled classes)
+    val dir = new java.io.File(new java.io.File(
+      base.getProtectionDomain.getCodeSource.getLocation.toURI), pkg.replace('.', '/'))
+    assert(dir.isDirectory, s"$dir is not a class directory")
+    dir.list().toSeq.filter(_.endsWith(".class"))
+      .map(f => Class.forName(s"$pkg.${f.stripSuffix(".class")}", false,
+        base.getClassLoader))
+      .filter(c => base.isAssignableFrom(c) &&
+        !java.lang.reflect.Modifier.isAbstract(c.getModifiers))
+      .toSet
+  }
+
+  /** Deep value equality over converted results: doubles bit-exact
+    * (NaN and -0.0 included), boxed values of the same class only. */
+  private def same(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) =>
+      java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
+    case (x: scala.collection.Seq[_], y: scala.collection.Seq[_]) =>
+      x.length == y.length && x.indices.forall(i => same(x(i), y(i)))
+    case (x: org.apache.spark.sql.Row, y: org.apache.spark.sql.Row) =>
+      same(x.toSeq, y.toSeq)
+    case _ => (a == null && b == null) ||
+      (a != null && b != null && a.getClass == b.getClass && a == b)
+  }
+
+  test("every KernelCall: interpreted eval equals the codegen'd UnsafeProjection") {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import scala.util.{Failure, Success, Try}
+    // fixture rows (real docs and embeddings) plus the edges of each
+    // input type: null input, null element, empty, fewer than n tokens
+    val texts = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+      .select("text").orderBy("doc_id").limit(24).collect().map(_.getString(0)).toSeq
+    val vecs = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+      .orderBy("vec_id").limit(12)
+      .select(graft.vec.VectorOps.toDouble(col("embedding")))
+      .collect().map(_.getSeq[Double](0).toArray).toSeq
+    val dim = vecs.head.length
+    def strs(xs: String*) = new GenericArrayData(
+      xs.map(x => if (x == null) null else UTF8String.fromString(x)).toArray[Any])
+    val nullFreeToks: Seq[Any] =
+      texts.map(t => TextKernels.normTokens(UTF8String.fromString(t))) ++
+        Seq(null, strs(), strs("a", "b"), strs("héllo", "wörld", "日本語", "x"))
+    val toks = nullFreeToks ++ Seq(strs("a", null, "b c"), strs(null))
+    val strings: Seq[Any] = texts.map(UTF8String.fromString) ++
+      Seq(null, UTF8String.EMPTY_UTF8, UTF8String.fromString(" \t\n"))
+    val binaries: Seq[Any] =
+      texts.map(_.getBytes("UTF-8")) ++ Seq(null, Array.emptyByteArray)
+    val doubles: Seq[Any] = Seq(0.0, -0.0, 1.005, -2.675, 123456.785, 1e300,
+      Double.NaN, Double.NegativeInfinity, null)
+    val vectors: Seq[Any] = vecs.map(v => new GenericArrayData(v)) ++
+      Seq(null, new GenericArrayData(Array.empty[Double]),
+        new GenericArrayData((null +: Seq.fill(dim - 1)(0.5)).toArray[Any]))
+    val rnd = new scala.util.Random(17)
+    val bmRows: Seq[Seq[Any]] = (1 to 20).map { _ =>
+      Seq(new GenericArrayData(Array.fill(8)(rnd.nextInt(5))),
+        1L + rnd.nextInt(300),
+        new GenericArrayData(Array.fill[Any](1 + rnd.nextInt(4))(
+          InternalRow(rnd.nextInt(8), 1L + rnd.nextInt(900000)))))
+    } ++ Seq(Seq(null, 3L, new GenericArrayData(Array.empty[Any])),
+      Seq(new GenericArrayData(Array(1, 2)), null, new GenericArrayData(Array.empty[Any])),
+      Seq(new GenericArrayData(Array(1, 2)), 3L, new GenericArrayData(Array.empty[Any])))
+
+    def in(i: Int, t: DataType) = BoundReference(i, t, nullable = true)
+    val tok = in(0, ArrayType(StringType))
+    val nf = in(0, ArrayType(StringType, containsNull = false))
+    val bin = in(0, BinaryType)
+    val v = in(0, ArrayType(DoubleType))
+    val one = (xs: Seq[Any]) => xs.map(Seq(_))
+    val pairs = vectors.map(Seq(_, vectors.head)) :+ Seq(vectors.head, null)
+    val cases: Seq[(KernelCall, Seq[Seq[Any]])] = Seq(
+      SimHash64Expr(tok) -> one(toks),
+      MinHashSigExpr(tok, 8) -> one(toks),
+      MinHashShinglesExpr(nf, 3, 8) -> one(nullFreeToks),
+      GramHashesExpr(nf, 3) -> one(nullFreeToks),
+      Md5PrefixExpr(bin, 6) -> one(binaries),
+      Md5SortKeyExpr(bin) -> one(binaries),
+      Md5MinhashExpr(tok, 4) -> one(toks),
+      QcWsumExpr(tok, Array.tabulate(16)(b => b * 0.25 - 1.5), 16) -> one(toks),
+      BloomHitsExpr(tok, Array.fill(1024)(rnd.nextLong()), 3, 4) -> one(toks),
+      BigramLmScoreExpr(nf, Array.fill(64)(rnd.nextInt(1000).toLong),
+        Array.fill(64)(rnd.nextInt(1000).toLong)) -> one(nullFreeToks),
+      TokLenSumExpr(nf) -> one(nullFreeToks),
+      Dec2Expr(in(0, DoubleType)) -> one(doubles),
+      BlockMd5Expr(bin, 16) -> one(binaries),
+      Bm25SmExpr(in(0, ArrayType(IntegerType)), in(1, LongType),
+        in(2, ArrayType(StructType(Seq(StructField("_1", IntegerType),
+          StructField("_2", LongType))))), 4711L, 912345L) -> bmRows,
+      CountInExpr(nf, Seq("the", "a", "of")) -> one(nullFreeToks),
+      Md5PrefixGramsExpr(nf, 3, 10) -> one(nullFreeToks),
+      Md5MinMaxExpr(nf, 3) -> one(nullFreeToks),
+      GramDistinctCountExpr(nf, 3) -> one(nullFreeToks),
+      SignLshExpr(v, Array.fill(8 * dim)(rnd.nextGaussian()), dim, 4) -> one(vectors),
+      NearestCentroidExpr(v, vecs.take(3).flatten.toArray, dim) -> one(vectors),
+      DotExpr(v, in(1, ArrayType(DoubleType))) -> pairs,
+      CosineExpr(v, in(1, ArrayType(DoubleType))) -> pairs,
+      NormTokensExpr(in(0, StringType)) -> one(strings),
+      TermCountsExpr(tok, Seq("the", "of", "zzz-never")) -> one(toks),
+      GopherStatsExpr(tok, Seq(2, 3)) -> one(toks),
+      CharCountsExpr(in(0, StringType), "aeiou ") -> one(strings))
+    assert(cases.map(_._1.getClass).toSet[Class[_]] == kernelClasses,
+      "the parity table must cover every KernelCall")
+    for ((k, rows) <- cases) {
+      assert(k.checkInputDataTypes().isSuccess, k.prettyName)
+      val proj = GenerateUnsafeProjection.generate(Seq(k))
+      def scala(x: => Any) = Try(CatalystTypeConverters.convertToScala(x, k.dataType))
+      val outcomes = rows.map { r =>
+        val row = InternalRow.fromSeq(r)
+        val interpreted = scala(k.eval(row))
+        val generated = scala(proj(row).copy().get(0, k.dataType))
+        (interpreted, generated) match {
+          case (Success(a), Success(b)) =>
+            assert(same(a, b), s"${k.prettyName} on $r: eval $a vs codegen $b")
+          case (Failure(a), Failure(b)) =>
+            assert(a.getClass == b.getClass, s"${k.prettyName} on $r: $a vs $b")
+          case other => fail(s"${k.prettyName} on $r: $other")
+        }
+        interpreted
+      }
+      assert(outcomes.exists(o => o.isSuccess && o.get != null),
+        s"${k.prettyName}: no row produced a value")
+    }
   }
 }

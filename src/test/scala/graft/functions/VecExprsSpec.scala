@@ -92,12 +92,10 @@ class VecExprsSpec extends AnyFunSuite {
             pmod(xxhash64($"id", lit(j + 100)), lit(1000L)) / 1000.0): _*).as("b"))
         .select(VectorOps.cosine($"a", $"b").as("c"),
           VectorOps.dot($"a", $"b").as("d"))
-      // the `*(n)` node prefix is the WholeStageCodegen marker in the
-      // compact plan rendering (the PlanDisciplineSpec d06/d07 rule)
-      val p = df.queryExecution.executedPlan.toString
-      val line = p.linesIterator.find(_.contains("graft_cosine"))
-        .getOrElse(fail(s"kernel not in plan:\n$p"))
-      assert(line.trim.startsWith("*"), s"kernel outside codegen:\n$p")
+      val p = df.queryExecution.executedPlan
+      val bad = KernelPlans.codegenViolations(p, classOf[CosineExpr],
+        classOf[DotExpr])
+      assert(bad.isEmpty, s"${bad.mkString("; ")}:\n$p")
       val rows = df.collect() // and the generated Java compiles/runs
       assert(rows.length == 64 && rows.forall(r => !r.isNullAt(0)))
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")

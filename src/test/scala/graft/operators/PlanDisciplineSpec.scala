@@ -1,6 +1,13 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.functions.KernelPlans
+import org.apache.spark.sql.GraftShims
+import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{array, size}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression guards for the physical-plan properties the engine
@@ -645,17 +652,24 @@ class PlanDisciplineSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  test("native hash expressions stay inside whole-stage codegen in d06/d07") {
-    // AQE wraps the plan and hides the codegen stage markers until the
-    // final plan; disable it for this static check only
+  test("kernels stay inside whole-stage codegen in d06/d07/d86/v09") {
+    // AQE defers the codegen stages to the final plan; disable it for
+    // this static check only. Every operator holding a KernelCall must
+    // sit under a WholeStageCodegenExec (d06/d07 plus the benchmark's
+    // other kernel-bearing batch queries, d86 and v09).
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val p6 = plan("d06_minhash_lsh")
-      val p7 = plan("d07_simhash")
-      def starred(p: String, token: String): Boolean =
-        p.linesIterator.exists(l => l.contains(token) && l.contains("*("))
-      assert(starred(p6, "graft_minhash_shingles"), p6)
-      assert(starred(p7, "graft_simhash64"), p7)
+      val want = Map(
+        "d06_minhash_lsh" -> classOf[graft.functions.MinHashShinglesExpr],
+        "d07_simhash" -> classOf[graft.functions.SimHash64Expr],
+        "d86_bpe_encode" -> classOf[graft.functions.NormTokensExpr],
+        "v09_knn_ivfpq" -> classOf[graft.functions.CosineExpr])
+      for ((n, kernel) <- want) {
+        val p = Catalog.queries(n)(spark, TestSpark.sf0001)
+          .queryExecution.executedPlan
+        val bad = KernelPlans.codegenViolations(p, kernel)
+        assert(bad.isEmpty, s"$n: ${bad.mkString("; ")}:\n$p")
+      }
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
@@ -1067,12 +1081,25 @@ class PlanDisciplineSpec extends AnyFunSuite {
   }
 
   // one plan build shared by the all-query sweep pins below (each
-  // executedPlan render at sf0.001 is cheap but 220 of them twice is
-  // not); built under the suite's default confs (AQE on) — every
-  // toggling test above restores its conf in a finally
-  private lazy val batchPlanStrings: Seq[(String, String)] =
+  // executedPlan at sf0.001 is cheap but 220 of them twice is not);
+  // built under the suite's default confs (AQE on) — every toggling
+  // test above restores its conf in a finally. The sweeps walk these
+  // typed trees (KernelPlans), never a rendered plan string.
+  private lazy val batchPlans: Seq[(String, SparkPlan)] =
     Catalog.queries.keys.toSeq.sorted.filterNot(_.startsWith("s"))
-      .map(n => n -> Catalog.auditPlan(spark, TestSpark.sf0001, n).toString)
+      .map(n => n -> Catalog.auditPlan(spark, TestSpark.sf0001, n))
+
+  /** A shuffle hash-partitioned on a raw gram STRING column (sh/gram),
+    * at any position of the key (a composite (doc_id, sh) key still
+    * ships strings). */
+  private def shufflesGramStrings(p: SparkPlan): Boolean =
+    KernelPlans.collectWithSubqueries(p) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.exists {
+      case h: HashPartitioning => h.expressions.exists(
+        _.references.exists(a => a.name == "sh" || a.name == "gram"))
+      case _ => false
+    }
 
   test("no registered batch query shuffles corpus gram STRINGS") {
     // the r19 diet, generalized: an Exchange keyed on a raw gram
@@ -1089,12 +1116,8 @@ class PlanDisciplineSpec extends AnyFunSuite {
     // anyway.)
     val sanctioned = Set("d05_ngram_jaccard", "d23_contamination",
       "d33_decontam_apply", "d57_bloom_contamination")
-    // any-position match (a composite (doc_id, sh) key still ships
-    // strings); the [^\n]*? stays within the one partitioning line
-    val gramKey = "Exchange hashpartitioning\\([^\\n]*?\\b(sh|gram)#".r
-    val offenders = batchPlanStrings.collect {
-      case (n, p) if !sanctioned.contains(n) &&
-        gramKey.findFirstIn(p).isDefined => n
+    val offenders = batchPlans.collect {
+      case (n, p) if !sanctioned.contains(n) && shufflesGramStrings(p) => n
     }
     assert(offenders.isEmpty,
       "gram-STRING-keyed exchange outside the sanctioned eval-bounded " +
@@ -1102,107 +1125,105 @@ class PlanDisciplineSpec extends AnyFunSuite {
         "and let the string-keyed oracle check the hash (the d54/d82 " +
         "discipline)")
     // canary: the sanctioned eval-bounded sites DO shuffle gram
-    // strings (that is why they are listed) — if the regex ever stops
-    // matching Catalyst's rendering this sweep would pass vacuously
-    assert(batchPlanStrings.exists { case (n, p) =>
-      sanctioned.contains(n) && gramKey.findFirstIn(p).isDefined },
-      "detector matched no gram-string exchange anywhere — regex no " +
-        "longer matches Catalyst's rendering")
+    // strings (that is why they are listed) — if the detector ever
+    // stops seeing them this sweep would pass vacuously
+    assert(batchPlans.exists { case (n, p) =>
+      sanctioned.contains(n) && shufflesGramStrings(p) },
+      "detector matched no gram-string exchange anywhere")
   }
+
+  // The d90 pin, generalized (VERDICT r18 next 6): join-key isnotnull
+  // inference substitutes a derived column's WHOLE projection chain
+  // into a pushed Filter condition without CSE — shared steps then
+  // re-evaluate multiplicatively per row (measured 4-5× d90's entire
+  // cost before the non-null fix). The signature is a single Filter
+  // dense with heavy calls — every KernelCall (each a whole fused
+  // fold, so ONE inlined into a Filter already doubles a corpus pass)
+  // plus Spark's own hash/regexp/string builtins — so the sweeps fail
+  // ANY registered query whose plan carries one. Legit plans stay
+  // under the bound: a pushed hash-split or bloom screen carries 1-4
+  // such calls; the d90 blowup carried 13+ (the whole canon chain,
+  // twice).
+  private val heavyBound = 6
+
+  /** Worst heavy-call count over the plan's Filters. */
+  private def worstHeavyFilter(p: SparkPlan): Int =
+    KernelPlans.filterConditions(p).map(KernelPlans.heavyCalls(_).size)
+      .maxOption.getOrElse(0)
+
+  private def chainOffenders(plans: Seq[(String, SparkPlan)]): Seq[String] =
+    plans.flatMap { case (n, p) =>
+      val worst = worstHeavyFilter(p)
+      if (worst > heavyBound) Some(s"$n (max $worst heavy calls in one Filter)")
+      else None
+    }.distinct
 
   test("no registered batch query pushes an inlined derived-column chain into a Filter") {
-    // The d90 pin, generalized (VERDICT r18 next 6): join-key isnotnull
-    // inference substitutes a derived column's WHOLE projection chain
-    // into a pushed Filter condition without CSE — shared steps then
-    // re-evaluate multiplicatively per row (measured 4-5× d90's entire
-    // cost before the non-null fix). The signature is a single Filter
-    // line dense with hash/regexp/string-kernel calls, so this sweep
-    // fails ANY registered batch query whose plan carries one — the
-    // next derived-key join someone writes regresses here, not in a
-    // bench round. Legit plans stay far under the bound: a pushed
-    // hash-split or bloom screen carries 1-3 such calls; the d90
-    // blowup carried 13+ (the whole canon chain, twice). Streaming
-    // queries are exercised through their micro-batch pins above —
-    // their registered DataFrames are memory-sink results, so there is
-    // no batch plan to sweep here.
-    val heavy = Seq("xxhash64(", "md5(", "sha2(", "crc32(",
-      "regexp_replace(", "regexp_extract(", "regexp_extract_all(",
-      "translate(", "conv(", "graft_char_counts(", "graft_term_counts(",
-      "graft_minhash_sig(", "graft_md5_prefix(",
-      // r22 kernels — each is a whole fused fold, so ONE inlined into
-      // a Filter already doubles a corpus pass
-      "graft_md5_minhash(", "graft_gram_bucket_wsum(", "graft_bloom_hits(",
-      "graft_bigram_lm_score(", "graft_tok_len_sum(", "graft_count_in(",
-      "graft_md5_prefix_grams(", "graft_block_md5(", "graft_bm25_sm(",
-      "graft_dec2(", "graft_md5_minmax(", "graft_gram_distinct(",
-      "graft_gram_hashes(")
-    def heavyCount(line: String): Int =
-      heavy.map { h =>
-        var c = 0; var i = line.indexOf(h)
-        while (i >= 0) { c += 1; i = line.indexOf(h, i + 1) }
-        c
-      }.sum
-    val bound = 6
-    var sawAny = false
-    val offenders = batchPlanStrings.flatMap { case (n, p) =>
-      val worst = p.linesIterator
-        .filter(l => l.contains("Filter"))
-        .map(heavyCount).maxOption.getOrElse(0)
-      if (worst > 0) sawAny = true
-      if (worst > bound) Some(s"$n (max $worst heavy calls in one Filter)")
-      else None
-    }
+    val offenders = chainOffenders(batchPlans)
     assert(offenders.isEmpty,
-      s"inlined-chain signature in pushed Filters (bound $bound): " +
+      s"inlined-chain signature in pushed Filters (bound $heavyBound): " +
         offenders.mkString(", "))
-    // canary: if Catalyst's plan rendering ever changes so the token
-    // list matches nothing (every plan counts 0), this sweep would
-    // pass forever while detecting nothing — some queries legitimately
-    // filter on a hash (d15's pmod(xxhash64) split, the bloom screens),
-    // so a healthy detector must see at least one heavy call somewhere
-    assert(sawAny, "detector saw zero heavy calls in any Filter — " +
-      "token list no longer matches Catalyst's rendering")
+    // canary: some queries legitimately filter on a hash (d15's
+    // pmod(xxhash64) split, the bloom screens), so a healthy detector
+    // must see at least one heavy call somewhere
+    assert(batchPlans.exists { case (_, p) => worstHeavyFilter(p) > 0 },
+      "detector saw zero heavy calls in any Filter")
   }
 
-  // ---- r20: the two sweep-wide guards extended to the 51 streaming
-  // plans (VERDICT r19 next 4) ----
+  test("the heavy-call detector counts every KernelCall, minhash signature included") {
+    import spark.implicits._
+    import graft.functions.GraftFunctions._
+    // a synthetic Filter carrying 7 kernel calls — among them
+    // graft_minhash_signature, which no hand-kept name list matched
+    val toks = graft.text.TextOps.tokens($"text")
+    val df = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+      .filter(simhash64(toks) =!= 0L &&
+        size(minhashSignature(toks, 4)) === 4 && tokLenSum(toks) > 0 &&
+        md5Prefix($"text".cast("binary"), 6) >= 0L)
+    val p = df.queryExecution.executedPlan
+    // norm_tokens ×3 + simhash + minhash + tok_len_sum + md5_prefix
+    assert(worstHeavyFilter(p) == 7, p.toString)
+    assert(chainOffenders(Seq("synthetic" -> p)).nonEmpty)
+    assert(KernelPlans.filterConditions(p).exists(
+      _.exists(_.isInstanceOf[graft.functions.MinHashSigExpr])))
+  }
+
+  // ---- r20: the sweep-wide guards extended to the 51 streaming plans
+  // (VERDICT r19 next 4) ----
   // The batch sweeps above iterate registered BATCH queries only; the
   // stream lifts share the underlying builders, but their micro-batch
   // plans are planned separately (IncrementalExecution) and were never
   // swept. The registered s-queries run their streams eagerly inside
   // the query function and stop them before returning, so the executed
   // plans are captured from the listener bus instead:
-  // SparkListenerSQLExecutionStart carries the plan description of
-  // EVERY SQL execution — each micro-batch included — which is the
-  // only hook that reaches a TERMINATED stream's plans. The capture
-  // also sweeps the batch tails those queries run over their sinks:
-  // strictly more coverage under the same discipline. explainMode is
-  // pinned to "simple" for the sweep so the rendering matches the
-  // executedPlan.toString form the batch guards' regexes parse.
-  private lazy val streamPlanStrings: Seq[(String, String)] = {
-    val plans = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+  // SparkListenerSQLExecutionEnd carries the QueryExecution of EVERY
+  // SQL execution — each micro-batch included — which is the only hook
+  // that reaches a TERMINATED stream's plans. The capture also sweeps
+  // the batch tails those queries run over their sinks: strictly more
+  // coverage under the same discipline.
+  private lazy val streamPlans: Seq[(String, SparkPlan)] = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[(String, SparkPlan)]
     val current = new java.util.concurrent.atomic.AtomicReference[String]("")
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(
           event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
         event match {
-          case e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          case e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd =>
             val n = current.get
-            if (n.nonEmpty)
-              plans.synchronized { plans += n -> e.physicalPlanDescription }
+            if (n.nonEmpty) GraftShims.executedPlan(e).foreach(p =>
+              plans.synchronized { plans += n -> p })
           case _ => ()
         }
     }
     spark.sparkContext.addSparkListener(listener)
-    try graft.Tables.withConfs(spark,
-        Seq("spark.sql.ui.explainMode" -> "simple")) {
+    try {
       for (n <- Catalog.queries.keys.toSeq.sorted.filter(_.startsWith("s"))) {
         // flush stragglers from the previous query, then attribute
-        org.apache.spark.sql.GraftShims.waitListenerBus(spark.sparkContext)
+        GraftShims.waitListenerBus(spark.sparkContext)
         current.set(n)
         Catalog.queries(n)(spark, TestSpark.sf0001)
           .write.mode("overwrite").format("noop").save()
-        org.apache.spark.sql.GraftShims.waitListenerBus(spark.sparkContext)
+        GraftShims.waitListenerBus(spark.sparkContext)
         current.set("")
       }
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -1216,17 +1237,16 @@ class PlanDisciplineSpec extends AnyFunSuite {
     // the d05 slice by construction, exactly like their batch forms)
     val sanctioned = Set("s23_stream_bloom_screen",
       "s24_stream_fuzzy_decontam", "s35_stream_semantic_decontam")
-    val gramKey = "Exchange hashpartitioning\\([^\\n]*?\\b(sh|gram)#".r
-    val covered = streamPlanStrings.map(_._1).distinct
+    val covered = streamPlans.map(_._1).distinct
     assert(covered.size >= 50,
       s"stream plan capture covered only ${covered.size} queries — " +
         "the listener plumbing is broken")
     // capture sanity: micro-batch plans must actually be present
-    assert(streamPlanStrings.exists(_._2.contains("Exchange")),
-      "capture saw no Exchange anywhere — explainMode/rendering drifted")
-    val offenders = streamPlanStrings.collect {
-      case (n, p) if !sanctioned.contains(n) &&
-        gramKey.findFirstIn(p).isDefined => n
+    assert(streamPlans.exists { case (_, p) =>
+      KernelPlans.collectWithSubqueries(p) { case e: ShuffleExchangeExec => e }.nonEmpty },
+      "capture saw no Exchange anywhere")
+    val offenders = streamPlans.collect {
+      case (n, p) if !sanctioned.contains(n) && shufflesGramStrings(p) => n
     }.distinct
     assert(offenders.isEmpty,
       "gram-STRING-keyed exchange in a streaming plan outside the " +
@@ -1235,36 +1255,14 @@ class PlanDisciplineSpec extends AnyFunSuite {
   }
 
   test("no registered STREAMING query pushes an inlined derived-column chain into a Filter") {
-    // the d90 guard over the captured micro-batch plans, same token
-    // list and bound as the batch sweep
-    val heavy = Seq("xxhash64(", "md5(", "sha2(", "crc32(",
-      "regexp_replace(", "regexp_extract(", "regexp_extract_all(",
-      "translate(", "conv(", "graft_char_counts(", "graft_term_counts(",
-      "graft_minhash_sig(", "graft_md5_prefix(",
-      // r22 kernels — each is a whole fused fold, so ONE inlined into
-      // a Filter already doubles a corpus pass
-      "graft_md5_minhash(", "graft_gram_bucket_wsum(", "graft_bloom_hits(",
-      "graft_bigram_lm_score(", "graft_tok_len_sum(", "graft_count_in(",
-      "graft_md5_prefix_grams(", "graft_block_md5(", "graft_bm25_sm(",
-      "graft_dec2(", "graft_md5_minmax(", "graft_gram_distinct(",
-      "graft_gram_hashes(")
-    def heavyCount(line: String): Int =
-      heavy.map { h =>
-        var c = 0; var i = line.indexOf(h)
-        while (i >= 0) { c += 1; i = line.indexOf(h, i + 1) }
-        c
-      }.sum
-    val bound = 6
-    val offenders = streamPlanStrings.flatMap { case (n, p) =>
-      val worst = p.linesIterator
-        .filter(_.contains("Filter"))
-        .map(heavyCount).maxOption.getOrElse(0)
-      if (worst > bound) Some(s"$n (max $worst heavy calls in one Filter)")
-      else None
-    }.distinct
+    // the d90 guard over the captured micro-batch plans, same
+    // detector and bound as the batch sweep
+    val offenders = chainOffenders(streamPlans)
     assert(offenders.isEmpty,
-      s"inlined-chain signature in streaming Filters (bound $bound): " +
+      s"inlined-chain signature in streaming Filters (bound $heavyBound): " +
         offenders.mkString(", "))
+    assert(streamPlans.exists { case (_, p) => worstHeavyFilter(p) > 0 },
+      "detector saw zero heavy calls in any streaming Filter")
   }
 
   test("d90 keeper join is shuffled and the canon chain is not re-inlined into a filter") {
@@ -1378,33 +1376,36 @@ class PlanDisciplineSpec extends AnyFunSuite {
   // surviving toks projection — no duplication, and opacity there
   // would only block the filter's own placement): d07 and d17's
   // n_docs branch (the two documented direct-filter tokenize sites).
-  private val expensiveFilterKernels =
-    Seq("graft_cosine(", "graft_norm_tokens(", "(?is)<script")
   private val directFilterSanctioned = Set(
     "d07_simhash", "d07d_simhash_digest", "d17_tfidf_topterms")
 
-  private def expensiveFilterHits(p: String): Seq[String] =
-    p.linesIterator.filter(_.contains("Filter"))
-      .filter(l => expensiveFilterKernels.exists(l.contains))
-      .toSeq
+  /** Cosine, the tokenizer, or the html-extract regex in a Filter. */
+  private def expensiveFilterHits(p: SparkPlan): Seq[Expression] =
+    KernelPlans.filterConditions(p).flatMap(_.collect {
+      case e: graft.functions.CosineExpr => e
+      case e: graft.functions.NormTokensExpr => e
+      case e: RegExpReplace if e.regexp.foldable &&
+        String.valueOf(e.regexp.eval()).contains("<script") => e
+    })
 
-  test("no registered batch query re-evaluates an expensive kernel inside a Filter") {
-    val offenders = batchPlanStrings.collect {
+  private def expensiveOffenders(plans: Seq[(String, SparkPlan)]): Seq[String] =
+    plans.collect {
       case (n, p) if !directFilterSanctioned.contains(n) &&
         expensiveFilterHits(p).nonEmpty => n
-    }
+    }.distinct
+
+  test("no registered batch query re-evaluates an expensive kernel inside a Filter") {
+    val offenders = expensiveOffenders(batchPlans)
     assert(offenders.isEmpty,
       "expensive kernel (cosine / tokenizer / html-extract) inside a " +
         s"Filter condition: ${offenders.mkString(", ")} — a tokensOnce/" +
         "graft_opaque wrapper was dropped (guide §4.4: the optimizer " +
         "now evaluates that chain twice per row)")
     // canary: the sanctioned direct-filter sites DO carry the tokenizer
-    // in a Filter (that is why they are listed) — if the rendering ever
-    // drifts this sweep would pass vacuously
-    assert(batchPlanStrings.exists { case (n, p) =>
+    // in a Filter (that is why they are listed)
+    assert(batchPlans.exists { case (n, p) =>
       directFilterSanctioned.contains(n) && expensiveFilterHits(p).nonEmpty },
-      "detector matched no kernel in any Filter — token list no longer " +
-        "matches Catalyst's rendering")
+      "detector matched no kernel in any Filter")
   }
 
   test("no registered STREAMING query re-evaluates an expensive kernel inside a Filter") {
@@ -1412,13 +1413,50 @@ class PlanDisciplineSpec extends AnyFunSuite {
     // sink tails): the stream lifts share the builders, so a dropped
     // wrapper doubles the per-trigger projection cost the marginal
     // axis measures
-    val offenders = streamPlanStrings.collect {
-      case (n, p) if expensiveFilterHits(p).nonEmpty => n
-    }.distinct
+    val offenders = expensiveOffenders(streamPlans)
     assert(offenders.isEmpty,
       "expensive kernel inside a streaming Filter condition: " +
         s"${offenders.mkString(", ")} — a tokensOnce/graft_opaque " +
         "wrapper was dropped on a stream-shared builder")
+  }
+
+  test("the expensive-kernel detector fires on a dropped tokensOnce wrapper") {
+    import spark.implicits._
+    val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+    def screen(toks: org.apache.spark.sql.Column) =
+      docs.select($"doc_id", toks.as("toks")).filter(size($"toks") >= 3)
+        .queryExecution.executedPlan
+    assert(expensiveOffenders(Seq("bare" ->
+      screen(graft.text.TextOps.tokens($"text")))) == Seq("bare"))
+    assert(expensiveOffenders(Seq("wrapped" ->
+      screen(graft.text.TextOps.tokensOnce($"text")))).isEmpty)
+  }
+
+  // A kernel evaluated twice in ONE Filter condition is the same
+  // duplication at its smallest: join-key isnotnull inference plus a
+  // pushed IN over the same derived column (the v27/v28/v30 cell
+  // assignment did this with a 64-centroid scan) evaluates the fold
+  // once per conjunct, and the surviving projection pays it again.
+  private def duplicateOffenders(plans: Seq[(String, SparkPlan)]): Seq[String] =
+    plans.flatMap { case (n, p) =>
+      KernelPlans.filterConditions(p).flatMap(KernelPlans.duplicateKernels)
+        .map(k => s"$n (${k.prettyName})")
+    }.distinct
+
+  test("no registered query evaluates the same kernel twice in one Filter") {
+    val offenders = duplicateOffenders(batchPlans ++ streamPlans)
+    assert(offenders.isEmpty,
+      s"kernel evaluated more than once per Filter: ${offenders.mkString(", ")}")
+    // the detector itself: the v27 shape over a synthetic frame
+    import spark.implicits._
+    val cents = Array(Array(0.0, 0.0), Array(1.0, 1.0))
+    val cell = graft.ml.KMeans.assign($"v", cents).getField("cid")
+    // range-backed: a local Seq would fold into a LocalTableScan
+    val p = spark.range(8).select(array($"id" * 0.1, $"id" * 0.2).as("v"))
+      .withColumn("cell", cell)
+      .filter($"cell".isin(0, 1) && $"cell" =!= 2)
+      .queryExecution.executedPlan
+    assert(duplicateOffenders(Seq("synthetic" -> p)).nonEmpty, p.toString)
   }
 
   test("v31 semantic screen is a stateless projection: no exchange, no join") {
