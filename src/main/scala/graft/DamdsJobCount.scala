@@ -7,11 +7,12 @@ package graft
   * 28 jobs / 62 stages / 728 tasks at ~2.0-2.5 s wall means ~80 ms per
   * job-equivalent - the dd probes are orchestration-bound, and the
   * stress-pass fusion (stressStressBcBlock) cannot move wall time at
-  * fixture N because the N x N passes are <5% of it. Also prints the
-  * FULL-precision stress: the ~1e-12 run-to-run wobble it exposes is
-  * treeReduces completion-ordered final driver merge (pre-existing,
-  * both code generations produce it; the 6dp-snapped gates never see
-  * it). */
+  * fixture N because the N x N passes are <5% of it. (Those counts
+  * predate the single-stage ordered reductions and the dropped
+  * metadata job; rerun for current ones.) Also prints the
+  * FULL-precision stress, which repeats bit for bit from run to run:
+  * every partial is folded in block-index order
+  * (`Collectives.orderedReduce`), not in task completion order. */
 object DamdsJobCount {
   def main(args: Array[String]): Unit = {
     import graft.damds.{Damds, DamdsKernels}

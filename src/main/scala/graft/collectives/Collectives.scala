@@ -3,6 +3,7 @@ package graft.collectives
 import scala.reflect.ClassTag
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** MPI-style collectives re-expressed on Spark (reference C1–C3:
@@ -25,10 +26,40 @@ object Collectives {
     * executor — Spark's natural allreduce (reduce + broadcast is one
     * round-trip; the reference does the same via withBroadcastSet).
     * Returns the broadcast handle; callers `.value` it inside tasks.
+    *
+    * Keeps `treeReduce` rather than `orderedAggregate`: its payloads
+    * are 100k-double vectors, and fetching one per partition to the
+    * driver is the gather the tree merge exists to avoid.
     */
   def allReduce[T: ClassTag](spark: SparkSession, ds: Dataset[T],
       op: (T, T) => T, depth: Int = 2): Broadcast[T] =
     spark.sparkContext.broadcast(reduce(ds, op, depth))
+
+  /** Ordered reduction: `partial` folds each non-empty partition to one
+    * value on its executor, one single-stage `collect()` fetches the
+    * partials, and `merge` folds them on the driver left to right in
+    * partition-index order (empty partitions are skipped). The merge
+    * order is fixed by the data layout, not by task completion order,
+    * so floating-point results repeat bit for bit from run to run; and
+    * unlike `treeReduce` there is no second stage. Meant for small
+    * partials (scalars, k-row accumulators): the driver holds one per
+    * partition. None when every partition is empty.
+    */
+  def orderedAggregate[T, P: ClassTag](rdd: RDD[T])(partial: Iterator[T] => P)(
+      merge: (P, P) => P): Option[P] = {
+    val parts = rdd.mapPartitions { it =>
+      if (it.hasNext) Iterator.single(partial(it)) else Iterator.empty
+    }.collect()
+    if (parts.isEmpty) None else Some(parts.reduceLeft(merge))
+  }
+
+  /** `orderedAggregate` with one associative `op` for both the
+    * per-partition and the driver fold — the drop-in for
+    * `treeReduce(op)` over scalar partials. Fails on an empty RDD, as
+    * `treeReduce` does. */
+  def orderedReduce[T: ClassTag](rdd: RDD[T])(op: (T, T) => T): T =
+    orderedAggregate(rdd)(_.reduceLeft(op))(op).getOrElse(
+      throw new UnsupportedOperationException("empty collection"))
 
   /** Elementwise vector sum — the reference's CollectiveData payload
     * merge (collectives/Collective.java), N12 add with the intended

@@ -1,5 +1,6 @@
 package graft.damds
 
+import graft.collectives.Collectives.{orderedAggregate, orderedReduce}
 import graft.damds.DamdsKernels._
 import graft.mm.DoubleMatrixBlock
 import graft.mm.Gemm
@@ -55,7 +56,7 @@ object Damds {
 
   /** A6/A1: global DoubleStatistics over the distance blocks. */
   def statistics(blocks: Dataset[DamdsBlock]): DStats =
-    blocks.rdd.map(b => stats(b.dist)).treeReduce(_ combine _, 2)
+    orderedReduce(blocks.rdd.map(b => stats(b.dist)))(_ combine _)
 
   /** N8: distance floor repair applied per block. */
   def updateDistances(blocks: Dataset[DamdsBlock], positiveMin: Double)
@@ -67,9 +68,8 @@ object Damds {
   def stress(spark: SparkSession, blocks: Dataset[DamdsBlock],
       x: Array[Double], d: Int, tCur: Double, invs: Double): Double = {
     val xBc = spark.sparkContext.broadcast(x)
-    val sigma = blocks.rdd
-      .map(b => stressSigma(b, xBc.value, d, tCur))
-      .treeReduce(_ + _, 2)
+    val sigma = orderedReduce(blocks.rdd
+      .map(b => stressSigma(b, xBc.value, d, tCur)))(_ + _)
     xBc.destroy()
     sigma * invs
   }
@@ -87,23 +87,25 @@ object Damds {
   }
 
   /** N4+N3 fused (r21): stress σ and BC at the same (x, tCur) from ONE
-    * pass over the cached blocks (`stressBcBlock`) — the per-block pair
-    * RDD is persisted so the σ treeReduce (identical partial order to
-    * `stress`) and the BC collect (identical parts to `bc`) both read
-    * the single kernel evaluation. Used where the annealed loop needs
-    * both values: the first stress iteration of every temperature step.
+    * pass over the cached blocks (`stressBcBlock`) and one job: each
+    * partition returns its σ partial (summed in the same order as
+    * `stress`) with its BC parts (identical to `bc`'s), and
+    * `orderedAggregate` folds them in partition-index order, so σ is
+    * bit-identical to `stress` at the same point. Used where the
+    * annealed loop needs both values: the first stress iteration of
+    * every temperature step.
     */
   private[damds] def stressAndBc(spark: SparkSession,
       blocks: Dataset[DamdsBlock], x: Array[Double], d: Int, tCur: Double,
       invs: Double, n: Int): (Double, Array[Double]) = {
     val xBc = spark.sparkContext.broadcast(x)
-    val fused = blocks.rdd.map { b =>
-      val (sig, out) = stressBcBlock(b, xBc.value, d, tCur)
-      (sig, DoubleMatrixBlock(b.index, b.start, b.blockRows, n, d, out))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    val sigma = fused.map(_._1).treeReduce(_ + _, 2)
-    val parts = fused.map(_._2).collect()
-    fused.unpersist(false)
+    val (sigma, parts) = orderedAggregate(blocks.rdd) { it =>
+      val pairs = it.map { b =>
+        val (sig, out) = stressBcBlock(b, xBc.value, d, tCur)
+        (sig, DoubleMatrixBlock(b.index, b.start, b.blockRows, n, d, out))
+      }.toArray
+      (pairs.map(_._1).reduceLeft(_ + _), pairs.map(_._2))
+    } { case ((s1, p1), (s2, p2)) => (s1 + s2, p1 ++ p2) }.get
     xBc.destroy()
     (sigma * invs, Gemm.assemble(parts.toSeq))
   }
@@ -116,7 +118,7 @@ object Damds {
     * `run` dispatches to `DamdsDistributed`: X stays partitioned as row
     * blocks co-located with V, the gather+broadcast pair becomes a
     * shuffle allgather, CG's vector updates are per-block map jobs and
-    * its dot products distributed treeReduces. `mm` itself (the
+    * its dot products ordered reductions. `mm` itself (the
     * gathered kernel) still fail-fasts past the cap rather than OOM the
     * driver.
     */
@@ -276,12 +278,9 @@ object Damds {
       rawBlocks: Dataset[DamdsBlock], initX: Array[Double], n: Int,
       cfg: Config): RunResult = {
     val d = cfg.targetDim
-    val meta = rawBlocks.rdd
-      .map(b => DamdsDistributed.BlockMeta(b.index, b.start, b.blockRows))
-      .collect().sortBy(_.index).toSeq
-    val part = new org.apache.spark.HashPartitioner(meta.size)
-    val init = DamdsDistributed.split(spark, initX, meta, d, part)
-    val r = DamdsDistributed.run(spark, rawBlocks, init, n, cfg)
+    val r = DamdsDistributed.run(spark, rawBlocks, n, cfg) { (meta, part) =>
+      DamdsDistributed.split(spark, initX, meta, d, part)
+    }
     val x = DamdsDistributed.gather(r.xBlocks, r.meta, n, d)
     r.xBlocks.unpersist(false)
     RunResult(x, r.state, r.stressLog)

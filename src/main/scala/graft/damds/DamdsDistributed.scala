@@ -1,5 +1,6 @@
 package graft.damds
 
+import graft.collectives.Collectives.orderedReduce
 import graft.damds.DamdsKernels._
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
@@ -26,7 +27,10 @@ import org.apache.spark.storage.StorageLevel
   *  - **CG vector updates are per-block map jobs**: x += αp, r −= αAp,
   *    p = r + βp run on co-partitioned (x, p, r) blocks (narrow joins,
   *    no shuffle) — only the SCALARS α, β, rᵀr cross the driver, via
-  *    `treeReduce` over per-block partial dots (A9);
+  *    `Collectives.orderedReduce` over per-block partial dots (A9): one
+  *    single-stage job whose partials the driver folds in block-index
+  *    order, so every scalar — and with it X and the stress — repeats
+  *    bit for bit from run to run;
   *  - **plan-reset discipline**: each CG step's state is
   *    localCheckpoint-pinned, so lineage stays O(1) per step instead of
   *    accumulating one join chain per iteration (same reason the CC
@@ -101,22 +105,23 @@ object DamdsDistributed {
     * is evaluated mid-body and honored at the loop close, so the final
     * iteration still completes its r/p updates). Scalars differ from
     * the gathered path only in floating summation order (per-block
-    * partials + treeReduce vs one driver loop).
+    * partials folded in block-index order vs one driver loop).
     *
     * r21 orchestration diet (guide §2.4 — remove shuffles/jobs outright):
     *  - `x0All` is the caller's already-persisted allgather of x0, so
     *    the first matvec does not re-shuffle the X the caller just
     *    gathered for the stress/BC pass;
     *  - each iteration's (x,p,r) checkpoint is the `updated` RDD itself
-    *    (materialized by the rTr1 treeReduce that must run anyway); the
+    *    (materialized by the rTr1 reduction that must run anyway); the
     *    p-direction update `p₁ = r + βp` is a lazy O(N·d) map over it,
     *    so the old per-iteration `state.count()` job is gone;
     *  - the returned X is a lazy view over the final checkpoint
     *    (`holder`), which the caller unpersists once its successor is
     *    materialized — the old `xOut.count()` job is gone too.
     * Scalar sequences (rTr, pAp, alpha, beta) are computed from the
-    * same per-block partials in the same treeReduce shape, so every
-    * number this produces is bit-identical to the r20 loop. */
+    * same per-block partials as the r20 loop; each reduction is one
+    * single-stage `orderedReduce` that folds the partials in
+    * block-index order, so the sequences repeat bit for bit. */
   private[damds] final case class CgResult(
       x: RDD[(Int, Array[Double])],
       holder: RDD[(Int, (Array[Double], Array[Double], Array[Double]))],
@@ -147,7 +152,7 @@ object DamdsDistributed {
     })
     var state: RDD[(Int, (Array[Double], Array[Double], Array[Double]))] =
       holder
-    var rTr = state.values.map(t => selfDot(t._3)).treeReduce(_ + _, 2)
+    var rTr = orderedReduce(state.values.map(t => selfDot(t._3)))(_ + _)
     val testEnd = rTr * cgThreshold
     var cgCount = 0
     var break = false
@@ -155,8 +160,8 @@ object DamdsDistributed {
       val ap = mmD(state.mapValues(_._2))
         .persist(StorageLevel.MEMORY_AND_DISK)
       cgCount += 1
-      val pAp = state.join(ap, part).values
-        .map { case ((_, p, _), apA) => dot(p, apA) }.treeReduce(_ + _, 2)
+      val pAp = orderedReduce(state.join(ap, part).values
+        .map { case ((_, p, _), apA) => dot(p, apA) })(_ + _)
       val alpha = rTr / pAp
       if (rTr < testEnd && !exactCG) break = true
       val updated = pinned(state.join(ap, part).mapValues {
@@ -168,9 +173,9 @@ object DamdsDistributed {
           while (i < r1.length) { r1(i) -= alpha * apA(i); i += 1 }
           (x1, pA, r1)
       })
-      // this treeReduce is the job that materializes (and checkpoints)
+      // this reduction is the job that materializes (and checkpoints)
       // `updated` — the scalar it returns is needed for beta anyway
-      val rTr1 = updated.values.map(t => selfDot(t._3)).treeReduce(_ + _, 2)
+      val rTr1 = orderedReduce(updated.values.map(t => selfDot(t._3)))(_ + _)
       val beta = rTr1 / rTr
       rTr = rTr1
       val prevHolder = holder
@@ -191,9 +196,16 @@ object DamdsDistributed {
 
   /** Full annealed run (I3) with X distributed: `Damds.run`'s control
     * flow (temperature loop → stress loop → CG) where every N×d operand
-    * lives as co-partitioned row blocks. */
-  def run(spark: SparkSession, rawBlocks: Dataset[DamdsBlock],
-      initX: RDD[(Int, Array[Double])], n: Int, cfg: Damds.Config)
+    * lives as co-partitioned row blocks.
+    *
+    * `initX` builds the initial X blocks from the block metadata and
+    * partitioner this run collects anyway, so a caller holding a flat
+    * N×d init splits it (`split`) without a metadata job of its own,
+    * which would decode every N×N block one extra time. A caller with
+    * block-structured init ignores both arguments. */
+  def run(spark: SparkSession, rawBlocks: Dataset[DamdsBlock], n: Int,
+      cfg: Damds.Config)(
+      initX: (Seq[BlockMeta], HashPartitioner) => RDD[(Int, Array[Double])])
       : RunResultD = {
     val d = cfg.targetDim
     val st = Damds.statistics(rawBlocks)
@@ -231,9 +243,8 @@ object DamdsDistributed {
         .persist(StorageLevel.MEMORY_AND_DISK)
 
     def stressG(xAll: RDD[(Int, Array[Double])], tCur: Double): Double =
-      blocksK.join(xAll, part).values
-        .map { case (b, xA) => stressSigma(b, xA, d, tCur) }
-        .treeReduce(_ + _, 2) * invs
+      orderedReduce(blocksK.join(xAll, part).values
+        .map { case (b, xA) => stressSigma(b, xA, d, tCur) })(_ + _) * invs
 
     // fused σ+BC evaluation (one N×N pass, stressBcBlock): used where a
     // stress value and a BC at the same (x, tCur) are both needed —
@@ -264,7 +275,7 @@ object DamdsDistributed {
         tCur = cfg.alpha * tMax,
         tMin = cfg.tMinFactor * st.positiveMin / math.sqrt(2.0 * d),
         stress = 0.0, preStress = 0.0, tItr = 0, stressItr = 0, cgCount = 0)
-      var xb = pinned(initX.partitionBy(part).mapValues(identity))
+      var xb = pinned(initX(meta, part).partitionBy(part).mapValues(identity))
       xb.count()
       var xbHolder: RDD[_] = xb // backing cache of the current xb view
       var xAll = gatherX(xb)
@@ -286,7 +297,7 @@ object DamdsDistributed {
       var carried: (RDD[(Int, (Double, Array[Double]))], RDD[_]) = null
       while (!done) {
         // preStress and the first BC of this temperature share one
-        // fused block pass (the treeReduce below materializes it) —
+        // fused block pass (the reduction below materializes it) —
         // or arrive precomputed from the previous post pass
         var fused: RDD[(Int, (Double, Array[Double]))] = null
         var fusedHolder: RDD[_] = null
@@ -296,7 +307,7 @@ object DamdsDistributed {
           fused = sigmaBcG(xAll, state.tCur); fusedHolder = fused
         }
         state = state.copy(preStress =
-          fused.values.map(_._1).treeReduce(_ + _, 2) * invs)
+          orderedReduce(fused.values.map(_._1))(_ + _) * invs)
         var diffStress = cfg.threshold + 1
         var stressIterations = 0
         var continueStress = true
@@ -324,7 +335,7 @@ object DamdsDistributed {
               // next iteration needs BC at the SAME tCur over newX —
               // the r21 pair kernel gives post-σ + that BC in one pass
               val f2 = sigmaBcG(newXAll, state.tCur)
-              val p = f2.values.map(_._1).treeReduce(_ + _, 2) * invs
+              val p = orderedReduce(f2.values.map(_._1))(_ + _) * invs
               fused = f2; fusedHolder = f2
               p
             } else if (spec && !isLastTemp) {
@@ -332,7 +343,7 @@ object DamdsDistributed {
               // (σ, BC)@tNext over the same newX in ONE pass
               val tNext = Damds.cooledTemp(state.tCur, state.tMin, cfg.alpha)
               val f3 = sigmaSigmaBcG(newXAll, state.tCur, tNext)
-              val p = f3.values.map(_._1).treeReduce(_ + _, 2) * invs
+              val p = orderedReduce(f3.values.map(_._1))(_ + _) * invs
               carried = (f3.mapValues(t => (t._2, t._3)), f3)
               p
             } else stressG(newXAll, state.tCur)

@@ -82,88 +82,162 @@ object KMeans {
     * reference's KMeansBlock plan (kmeans/KMeansBlock.java:139-203
     * SelectNearestCenter flatMap accumulating a local per-centroid map,
     * then combineGroup/reduceGroup :46-99). Each partition scans its
-    * points once against the broadcast centroids, keeps k local
-    * (sum[d], count) accumulators, and emits exactly k records — the
-    * shuffle is k rows per partition regardless of point count. Results
-    * are identical to `step` up to FP summation order.
+    * points once against the broadcast centroids and keeps k local
+    * (sum[d], count) accumulators; the whole step is ONE single-stage
+    * job with no shuffle.
+    *
+    * Merge order: `Collectives.orderedAggregate` fetches one partial per
+    * non-empty partition (k·d sums, then k counts) and folds them on the
+    * driver in partition-index order; each centroid's sum starts from
+    * its first contributing partial. The result is therefore a pure
+    * function of the points' partition layout — it repeats bit for bit
+    * across runs — and differs from `step` only in FP summation order.
+    * Empty clusters keep their old centroid. Driver footprint: P × k ×
+    * (d+1) doubles for P non-empty partitions (k=1000, d=2, P=16: 384 kB).
+    *
+    * Assignment is the first-minimum argmin: the lowest centroid index
+    * among those at the smallest `Σ (v_j − c_j)²` (ascending j), and
+    * centroid 0 when no distance is below `Double.MaxValue` (a NaN
+    * point). At d == 2 it is found by an exact strip search (`Strip`) that
+    * returns the same index as the full scan.
     */
   def stepBlock(points: DataFrame, centroids: Array[Array[Double]]): Array[Array[Double]] = {
     val spark = points.sparkSession
     val k = centroids.length
     val d = centroids.head.length
-    val cBc = spark.sparkContext.broadcast(centroids)
-    val partials = points.select(col("v")).rdd.mapPartitions { it =>
-      val cs = cBc.value
-      // r21: the row's array<double> arrives as a Seq whose `apply`
-      // boxes per element — at k=1000 the assignment loop read it
-      // k·d times per point through that path. One primitive copy per
-      // point (d elements) and a flattened centroid matrix keep the
-      // hot loop on unboxed arrays; the op ORDER per accumulator is
-      // unchanged, so sums are bit-identical (m04's oracle rides it).
-      val flat = new Array[Double](k * d)
-      var ci = 0
-      while (ci < k) {
-        System.arraycopy(cs(ci), 0, flat, ci * d, d)
-        ci += 1
-      }
-      val sums = Array.ofDim[Double](k, d)
-      val counts = new Array[Long](k)
+    val flat = new Array[Double](k * d)
+    var ci = 0
+    while (ci < k) {
+      System.arraycopy(centroids(ci), 0, flat, ci * d, d)
+      ci += 1
+    }
+    // d == 2: centroid ids sorted by (x, id) for the strip search; left
+    // null (every point takes the full scan) when any coordinate is
+    // non-finite, where the search's pruning bound does not hold
+    val byX: Array[Int] =
+      if (d == 2 && flat.forall(java.lang.Double.isFinite))
+        Array.range(0, k).sortBy(c => (flat(2 * c), c))(
+          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+      else null
+    val tBc = spark.sparkContext.broadcast((flat, byX))
+    // points arrive as InternalRows: `getArray(0).getDouble(j)` reads the
+    // unsafe array in place, where `.rdd` would box every element into
+    // a Seq
+    val rows = points.select(col("v")).queryExecution.toRdd
+    val merged = graft.collectives.Collectives.orderedAggregate(rows) { it =>
+      val (flat, byX) = tBc.value
+      // k·d sums, then k counts
+      val acc = new Array[Double](k * (d + 1))
       val v = new Array[Double](d)
-      // d == 2 register path (the baseline shape): the generic loop
-      // pays index arithmetic + loop control per dimension, which at
-      // d=2 is most of the work; hoisting the two coordinates into
-      // registers keeps the identical FP op sequence (t0²+t1² is the
-      // same ascending-j add order), so sums stay bit-identical.
-      if (d == 2) {
-        it.foreach { row =>
-          val sv = row.getAs[scala.collection.Seq[Double]](0)
-          val v0 = sv(0); val v1 = sv(1)
-          var best = 0; var bestD = Double.MaxValue
-          var c = 0
-          while (c < k) {
-            val t0 = v0 - flat(c * 2)
-            val t1 = v1 - flat(c * 2 + 1)
-            val dist = t0 * t0 + t1 * t1
-            if (dist < bestD) { bestD = dist; best = c }
-            c += 1
-          }
-          val sb = sums(best)
-          sb(0) += v0; sb(1) += v1
-          counts(best) += 1
-        }
-      } else it.foreach { row =>
-        val sv = row.getAs[scala.collection.Seq[Double]](0)
+      val strip = if (byX == null) null else new Strip(flat, byX)
+      it.foreach { row =>
+        val a = row.getArray(0)
+        if (a.numElements() < d)
+          throw new IllegalArgumentException(
+            s"stepBlock: point of ${a.numElements()} dims, centroids have $d")
         var j = 0
-        while (j < d) { v(j) = sv(j); j += 1 }
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var dist = 0.0
-          val off = c * d
-          j = 0
-          while (j < d) { val t = v(j) - flat(off + j); dist += t * t; j += 1 }
-          if (dist < bestD) { bestD = dist; best = c }
-          c += 1
-        }
-        val sb = sums(best)
+        while (j < d) { v(j) = a.getDouble(j); j += 1 }
+        val best =
+          if (strip != null && java.lang.Double.isFinite(v(0)) &&
+              java.lang.Double.isFinite(v(1))) strip.nearest(v(0), v(1))
+          else scanNearest(flat, k, d, v)
+        val off = best * d
         j = 0
-        while (j < d) { sb(j) += v(j); j += 1 }
-        counts(best) += 1
+        while (j < d) { acc(off + j) += v(j); j += 1 }
+        acc(k * d + best) += 1
       }
-      Iterator.tabulate(k)(c => (c, (sums(c), counts(c))))
-        .filter(_._2._2 > 0)
-    }.reduceByKey { (a, b) =>
-      val (s1, n1) = a; val (s2, n2) = b
-      var j = 0
-      while (j < s1.length) { s1(j) += s2(j); j += 1 }
-      (s1, n1 + n2)
-    }.collect()
-    cBc.destroy()
+      acc
+    } { (a, b) =>
+      var c = 0
+      while (c < k) {
+        val nb = b(k * d + c)
+        if (nb > 0) {
+          val na = a(k * d + c)
+          var j = c * d
+          if (na == 0) System.arraycopy(b, j, a, j, d)
+          else while (j < (c + 1) * d) { a(j) += b(j); j += 1 }
+          a(k * d + c) = na + nb
+        }
+        c += 1
+      }
+      a
+    }
+    tBc.destroy()
     val next = centroids.map(_.clone())
-    partials.foreach { case (c, (s, n)) =>
-      next(c) = s.map(_ / n)
+    merged.foreach { acc =>
+      var c = 0
+      while (c < k) {
+        val n = acc(k * d + c)
+        if (n > 0) next(c) = Array.tabulate(d)(j => acc(c * d + j) / n)
+        c += 1
+      }
     }
     next
+  }
+
+  /** First-minimum scan of a flattened k×d centroid table: strict `<`
+    * over ascending centroid index, starting from (centroid 0,
+    * `Double.MaxValue`). */
+  private def scanNearest(flat: Array[Double], k: Int, d: Int,
+      v: Array[Double]): Int = {
+    var best = 0; var bestD = Double.MaxValue
+    var c = 0
+    while (c < k) {
+      var dist = 0.0
+      val off = c * d
+      var j = 0
+      while (j < d) { val t = v(j) - flat(off + j); dist += t * t; j += 1 }
+      if (dist < bestD) { bestD = dist; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Exact 2-D nearest-centroid search over finite centroids sorted by
+    * (x, id). A binary search places the point's x, then each side walks
+    * outward and stops at the first centroid with `fl(t0²) > bestD`:
+    * along a side |t0| only grows (rounded subtraction and squaring are
+    * monotone), and `fl(a + b) ≥ a` for b ≥ 0, so no centroid past that
+    * point can reach bestD. The distance is the scan's own
+    * `t0*t0 + t1*t1` (the scan's leading `0.0 +` changes no value, as a
+    * square is never −0.0), and a tie keeps the lower centroid id, so
+    * the result equals `scanNearest`'s for every finite point. Per point it
+    * visits the centroids in a vertical strip about √bestD wide instead
+    * of all k.
+    */
+  private final class Strip(flat: Array[Double], byX: Array[Int]) {
+    private val k = byX.length
+    private val xs = byX.map(c => flat(2 * c))
+    private val ys = byX.map(c => flat(2 * c + 1))
+    private var best = 0
+    private var bestD = Double.MaxValue
+
+    def nearest(v0: Double, v1: Double): Int = {
+      // (centroid 0, MaxValue) is the full scan's starting state
+      best = 0; bestD = Double.MaxValue
+      var lo = 0; var hi = k
+      while (lo < hi) {
+        val m = (lo + hi) >>> 1
+        if (xs(m) < v0) lo = m + 1 else hi = m
+      }
+      walk(v0, v1, lo, 1)
+      walk(v0, v1, lo - 1, -1)
+      best
+    }
+
+    private def walk(v0: Double, v1: Double, from: Int, step: Int): Unit = {
+      var i = from
+      while (i >= 0 && i < k) {
+        val t0 = v0 - xs(i)
+        val t00 = t0 * t0
+        if (t00 > bestD) return
+        val t1 = v1 - ys(i)
+        val dist = t00 + t1 * t1
+        val c = byX(i)
+        if (dist < bestD || (dist == bestD && c < best)) { bestD = dist; best = c }
+        i += step
+      }
+    }
   }
 
   private def maxShift(a: Array[Array[Double]], b: Array[Array[Double]]): Double =

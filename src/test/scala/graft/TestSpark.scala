@@ -21,6 +21,39 @@ object TestSpark {
     s
   }
 
+  /** Scheduler counters of the jobs `body` runs: (jobs, completed
+    * stages, shuffle records written + read). The listener bus is
+    * drained before and after, so events of earlier work are not
+    * counted and none of `body`'s are missed. */
+  final case class Counts(jobs: Int, stages: Int, shuffleRecords: Long)
+
+  def counting[T](body: => T): (T, Counts) = {
+    val sc = spark.sparkContext
+    var jobs = 0; var stages = 0; var records = 0L
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        synchronized { jobs += 1 }
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        synchronized { stages += 1 }
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        synchronized {
+          val m = e.taskMetrics
+          if (m != null) records += m.shuffleWriteMetrics.recordsWritten +
+            m.shuffleReadMetrics.recordsRead
+        }
+    }
+    org.apache.spark.sql.GraftShims.waitListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftShims.waitListenerBus(sc)
+      (out, listener.synchronized(Counts(jobs, stages, records)))
+    } finally sc.removeSparkListener(listener)
+  }
+
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }

@@ -408,6 +408,31 @@ class DamdsSpec extends AnyFunSuite {
     }
   }
 
+  test("distributed anneal: pinned job and stage counts, bit-identical repeats") {
+    // every reduction is one single-stage ordered fold and the init is
+    // split from the anneal's own metadata collect: a reintroduced tree
+    // level or metadata job moves these counters
+    val rnd = new scala.util.Random(41)
+    val initX = Array.fill(n * 2)(rnd.nextDouble() * 0.1)
+    val cfg = Damds.Config(targetDim = 2, alpha = 0.3, cgIter = 3,
+      exactCG = true, maxStressLoops = 1, maxTempLoops = 1,
+      maxGatherDoubles = 1L)
+    // 6 blocks: enough partitions for a two-level treeReduce to add a
+    // stage
+    val (a, counts) = graft.TestSpark.counting(
+      Damds.run(spark, blocksDs(6), initX, n, cfg))
+    // before: 25 jobs (one more to collect the block metadata) and 54
+    // stages (a second treeReduce stage per reduction)
+    assert((counts.jobs, counts.stages) == ((24, 35)), counts)
+    val b = Damds.run(spark, blocksDs(6), initX, n, cfg)
+    // the partials fold in block-index order, not task completion order
+    assert(java.lang.Double.doubleToLongBits(a.state.stress) ==
+      java.lang.Double.doubleToLongBits(b.state.stress))
+    assert(a.stressLog.map(java.lang.Double.doubleToLongBits) ==
+      b.stressLog.map(java.lang.Double.doubleToLongBits))
+    assert(java.util.Arrays.equals(a.x, b.x))
+  }
+
   test("full annealed run improves the embedding (I3/N9)") {
     val rnd = new scala.util.Random(17)
     val initX = Array.fill(n * 2)(rnd.nextDouble() * 0.1)

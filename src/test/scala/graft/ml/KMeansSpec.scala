@@ -2,7 +2,10 @@ package graft.ml
 
 import graft.TestSpark
 import graft.vec.VectorOps
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 class KMeansSpec extends AnyFunSuite {
@@ -95,6 +98,136 @@ class KMeansSpec extends AnyFunSuite {
     val next = KMeans.stepBlock(pts, Array(Array(0.0, 0.0), far))
     assert(next(1).toSeq == far.toSeq)
     assert(next(0)(0) > 0.0)
+  }
+
+  // ---- stepBlock's exactness contract ----
+
+  /** Points as a `v: array<double>` frame over exactly `parts`
+    * partitions, in order (more partitions than points leaves some
+    * empty). */
+  private def frame(pts: Seq[Array[Double]], parts: Int): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(pts.map(p => Row(p.toSeq)), parts),
+      StructType(Seq(StructField("v", ArrayType(DoubleType, false)))))
+
+  /** Brute-force stepBlock: per partition, a first-minimum scan (strict
+    * `<` over ascending centroid index from (0, MaxValue)) and running
+    * sums from 0.0; the partials then fold in partition-index order,
+    * each centroid starting from its first contributing partial. */
+  private def refStep(df: DataFrame, cents: Array[Array[Double]])
+      : Array[Array[Double]] = {
+    val k = cents.length
+    val d = cents.head.length
+    val sums = new Array[Array[Double]](k)
+    val counts = new Array[Long](k)
+    df.select("v").rdd.glom().collect().foreach { part =>
+      val s = Array.fill(k, d)(0.0)
+      val n = new Array[Long](k)
+      part.foreach { row =>
+        val p = row.getSeq[Double](0).toArray
+        var best = 0; var bestD = Double.MaxValue
+        for (c <- 0 until k) {
+          var dist = 0.0
+          for (j <- 0 until d) { val t = p(j) - cents(c)(j); dist += t * t }
+          if (dist < bestD) { bestD = dist; best = c }
+        }
+        for (j <- 0 until d) s(best)(j) += p(j)
+        n(best) += 1
+      }
+      for (c <- 0 until k if n(c) > 0) {
+        if (sums(c) == null) sums(c) = s(c)
+        else for (j <- 0 until d) sums(c)(j) += s(c)(j)
+        counts(c) += n(c)
+      }
+    }
+    Array.tabulate(k)(c =>
+      if (counts(c) == 0) cents(c).clone() else sums(c).map(_ / counts(c)))
+  }
+
+  private def sameBits(a: Array[Array[Double]], b: Array[Array[Double]]): Boolean =
+    a.length == b.length && a.indices.forall(c => java.util.Arrays.equals(a(c), b(c)))
+
+  private def show(a: Array[Array[Double]]): String =
+    a.map(_.mkString("(", ", ", ")")).mkString(" ")
+
+  private def assertMatchesReference(pts: Seq[Array[Double]], parts: Int,
+      cents: Array[Array[Double]]): Unit = {
+    val df = frame(pts, parts)
+    val got = KMeans.stepBlock(df, cents)
+    val want = refStep(df, cents)
+    assert(sameBits(got, want), s"stepBlock ${show(got)} != reference ${show(want)}")
+  }
+
+  // a small grid (with -0.0) makes duplicate centroids, shared x
+  // coordinates and exact distance ties common; the range draws break
+  // the grid
+  private val coord: Gen[Double] = Gen.frequency(
+    4 -> Gen.oneOf(-2.0, -1.0, -0.5, -0.0, 0.0, 0.5, 1.0, 1.5, 2.0),
+    1 -> Gen.choose(-3.0, 3.0))
+  private val point2: Gen[Array[Double]] = Gen.zip(coord, coord).map {
+    case (x, y) => Array(x, y)
+  }
+
+  test("stepBlock equals the brute-force first-minimum step bit for bit (2-D, random)") {
+    // no shrinking: every shrink step would be another Spark job
+    val prop = Prop.forAllNoShrink(
+        Gen.choose(1, 9).flatMap(Gen.listOfN(_, point2)),
+        Gen.choose(0, 40).flatMap(Gen.listOfN(_, point2)),
+        Gen.choose(1, 5)) { (cents, pts, parts) =>
+      val c = cents.toArray
+      val df = frame(pts, parts)
+      val got = KMeans.stepBlock(df, c)
+      val want = refStep(df, c)
+      Prop(sameBits(got, want)) :| s"got ${show(got)} want ${show(want)}"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(60), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  test("stepBlock equals the brute-force step bit for bit on the edge cases") {
+    val grid = for (x <- -2 to 2; y <- -2 to 2) yield Array(x * 0.5, y * 0.5)
+    // duplicate centroids and shared x coordinates; grid points sit
+    // equidistant between many of them
+    val cents = Array(Array(0.0, 0.0), Array(0.5, 0.0), Array(0.0, 0.0),
+      Array(-0.5, 0.0), Array(0.5, 0.5), Array(-0.0, -0.5))
+    assertMatchesReference(grid, 3, cents)
+    // ±0.0 in points and centroids
+    assertMatchesReference(Seq(Array(-0.0, 0.0), Array(0.0, -0.0),
+      Array(-0.0, -0.0)), 2, Array(Array(0.0, 0.0), Array(-0.0, -0.0)))
+    // a NaN point: no distance is below MaxValue, so centroid 0 takes it
+    assertMatchesReference(grid :+ Array(Double.NaN, 1.0), 2, cents)
+    // non-finite centroids: every point takes the full scan
+    assertMatchesReference(grid, 2, cents :+ Array(Double.PositiveInfinity, 0.0))
+    assertMatchesReference(grid, 2, cents :+ Array(0.0, Double.NaN))
+    // k = 1
+    assertMatchesReference(grid, 2, Array(Array(0.25, -0.25)))
+    // empty partitions: 8 slices for 3 points
+    assertMatchesReference(grid.take(3), 8, cents)
+    // generic d
+    val rnd = new scala.util.Random(5)
+    val pts3 = Seq.fill(50)(Array.fill(3)(rnd.nextInt(5) * 0.5))
+    assertMatchesReference(pts3, 3, pts3.take(4).map(_.clone()).toArray)
+  }
+
+  test("stepBlock is deterministic on a multi-partition frame") {
+    val rnd = new scala.util.Random(11)
+    val pts = Seq.fill(20000)(Array(rnd.nextDouble(), rnd.nextDouble()))
+    val df = frame(pts, 8).cache()
+    val cents = pts.take(40).map(_.clone()).toArray
+    val a = KMeans.stepBlock(df, cents)
+    val b = KMeans.stepBlock(df, cents)
+    assert(sameBits(a, b))
+    assert(sameBits(a, refStep(df, cents)))
+    df.unpersist()
+  }
+
+  test("one stepBlock is 1 job, 1 stage and 0 shuffle records") {
+    val rnd = new scala.util.Random(13)
+    val pts = Seq.fill(2000)(Array(rnd.nextDouble(), rnd.nextDouble()))
+    val df = frame(pts, 4)
+    val cents = pts.take(16).map(_.clone()).toArray
+    val (_, n) = TestSpark.counting(KMeans.stepBlock(df, cents))
+    assert(n == TestSpark.Counts(jobs = 1, stages = 1, shuffleRecords = 0L), n)
   }
 
   test("fitLocal == fitBlock on a single partition (same update contract)") {
