@@ -1,10 +1,9 @@
 package graft.operators
 
 import graft.multimodal.Multimodal
-import graft.streaming.StreamingOps
+import graft.streaming.{StreamRunner, StreamingOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Driver-visible, oracle-checked proofs of the Structured Streaming
@@ -37,8 +36,6 @@ object StreamingQueries {
       StructField("event_type", StringType),
       StructField("value", DoubleType),
       StructField("props", StringType)))
-
-  private val sinkId = new java.util.concurrent.atomic.AtomicLong(0L)
 
   // ts-generation detection memoized per (session, dir): resolving the
   // events footer is an eager batch read paid at EVERY stream start,
@@ -73,8 +70,8 @@ object StreamingQueries {
     * left/right keyed state), so shuffle partitions are sized to the
     * STATE volume, not the batch default — a fixed conf baked into the
     * query's checkpoint at start, which is exactly how a production
-    * job would pin it. Scoped here: set for the stream start, restored
-    * after (batch plans in the same session are unaffected).
+    * job would pin it. `StreamRunner` scopes it to the stream start
+    * (batch plans in the same session are unaffected).
     *
     * SINGLE-BATCH CONTRACT: the batch-SQL oracle equivalence of the
     * lateness-sensitive rows (s04's join state eviction, s05's
@@ -111,17 +108,7 @@ object StreamingQueries {
           raw0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         else raw0.withColumn("ts",
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-      graft.Tables.withConfs(s,
-          Seq("spark.sql.shuffle.partitions" -> shufflePartitions.toString)) {
-        val q = transform(raw).writeStream
-          .format("memory").queryName(name)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      StreamRunner.memorySink(transform(raw), mode, Some(shufflePartitions))
     }
 
   // ---- s01: streaming hourly window agg == batch q17 ----
@@ -312,14 +299,7 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val q = TextQueries.mixtureExpand(raw).writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    StreamRunner.memorySink(TextQueries.mixtureExpand(raw), "append")
   }
 
   // ---- s09: streaming LSH near-dup candidates (dedup-on-arrival) ----
@@ -346,17 +326,8 @@ object StreamingQueries {
         $"x.band" === $"y.band" && $"x.bucket" === $"y.bucket" &&
         $"x.doc" < $"y.doc")
       .select($"x.doc".as("id_a"), $"y.doc".as("id_b"))
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = matches.writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    TextQueries.mhPairsRollup(s.table(name), TextQueries.mhSliceSigs(s, dir))
+    val sink = StreamRunner.memorySink(matches, "append", Some(8))
+    TextQueries.mhPairsRollup(sink, TextQueries.mhSliceSigs(s, dir))
   }
 
   // ---- s10: streaming incremental dedup against a static ledger ----
@@ -385,22 +356,15 @@ object StreamingQueries {
       .filter(length(trim($"text")) > 0)
       .select($"doc_id", TextQueries.bowSig($"text").as("sig"))
       .join(ledger, Seq("sig"), "left")
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val q = raw.writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val sink = StreamRunner.memorySink(raw, "append")
     // batch-internal keeper as a sig-key agg + join back — not a
     // min-window over the dup-group sig partition (the d34 shape).
     // The agg side re-aliases through toDF: a memory-sink view
     // self-join fails attribute deduplication (conflicting sig#N on
     // both sides → INTERNAL_ERROR), and toDF mints fresh expr ids.
-    val t = s.table(name)
-    val bk = s.table(name).toDF("sig", "doc_id", "hist_keeper")
+    val bk = sink.toDF("sig", "doc_id", "hist_keeper")
       .groupBy($"sig").agg(min($"doc_id").as("batch_keeper"))
-    TextQueries.ledgerVerdict(t.join(bk, "sig"))
+    TextQueries.ledgerVerdict(sink.join(bk, "sig"))
   }
 
   // ---- s11: context-window chunking on arrival ----
@@ -413,14 +377,7 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val q = TextQueries.contextChunks(raw).writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    StreamRunner.memorySink(TextQueries.contextChunks(raw), "append")
   }
 
   // ---- s13: quality-classifier filtering on arrival ----
@@ -435,14 +392,7 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val q = TextQueries.qualityClassify(raw).writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    StreamRunner.memorySink(TextQueries.qualityClassify(raw), "append")
   }
 
   // ---- s14: importance-scored filtering on arrival ----
@@ -462,15 +412,8 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val q = TextQueries.importanceScoreStateless(raw, llr,
-      TextQueries.irBuckets).writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    StreamRunner.memorySink(TextQueries.importanceScoreStateless(raw, llr,
+      TextQueries.irBuckets), "append")
   }
 
   // ---- s16: LM perplexity filtering on arrival ----
@@ -489,14 +432,8 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val q = TextQueries.perplexityScoreStateless(raw, lnc, lnd).writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    StreamRunner.memorySink(
+      TextQueries.perplexityScoreStateless(raw, lnc, lnd), "append")
   }
 
   // ---- s15: diversity sampling on arrival (embedding stream) ----
@@ -518,14 +455,8 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
       .select($"vec_id", graft.vec.VectorOps.toDouble($"embedding").as("v"))
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val q = VectorQueries.diversitySampleStateless(raw, counts).writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    StreamRunner.memorySink(
+      VectorQueries.diversitySampleStateless(raw, counts), "append")
   }
 
   // ---- s17: BM25 decontamination screen on arrival ----
@@ -546,14 +477,8 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val q = TextQueries.bm25ScoreStateless(raw, qts, nd, tt).writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    StreamRunner.memorySink(
+      TextQueries.bm25ScoreStateless(raw, qts, nd, tt), "append")
   }
 
   // ---- s18: streaming HLL register maintenance (stateful sketch) ----
@@ -574,21 +499,13 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      // the fused register aggregate (r19): state is ONE 256-byte
-      // buffer row per source — the row form kept 256 register rows —
-      // and no gram ever explodes into a stream row; recovery leg in
-      // StreamingRecoverySpec
-      val q = TextQueries.hllRegistersFused(raw).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    TextQueries.hllFinish(s, dir, s.table(name))
+    // the fused register aggregate (r19): state is ONE 256-byte
+    // buffer row per source — the row form kept 256 register rows —
+    // and no gram ever explodes into a stream row; recovery leg in
+    // StreamingRecoverySpec
+    val sink = StreamRunner.memorySink(
+      TextQueries.hllRegistersFused(raw), "complete", Some(8))
+    TextQueries.hllFinish(s, dir, sink)
   }
 
   // ---- s19: streaming modality-coverage manifest (multimodal) ----
@@ -603,18 +520,8 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = MultimodalQueries.coverageAgg(raw,
-          MultimodalQueries.embFlags(s, dir)).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
+    StreamRunner.memorySink(MultimodalQueries.coverageAgg(raw,
+      MultimodalQueries.embFlags(s, dir)), "complete", Some(8))
   }
 
   // ---- s20: stateful growing dedup ledger (dedup-on-arrival) ----
@@ -636,17 +543,9 @@ object StreamingQueries {
       .select(md5(graft.text.TextOps.normText($"text").cast("binary")).as("sig"),
         $"doc_id")
       .as[graft.streaming.StreamingOps.DocSig]
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = graft.streaming.StreamingOps.dedupLedger(sigs).writeStream
-        .format("memory").queryName(name)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name).groupBy($"sig")
+    val sink = StreamRunner.memorySink(
+      graft.streaming.StreamingOps.dedupLedger(sigs), "update", Some(8))
+    sink.groupBy($"sig")
       .agg(min($"keeper").as("keeper"), max($"n_copies").as("n_copies"))
   }
 
@@ -661,17 +560,9 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = TextQueries.packingEfficiency(raw).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    TextQueries.packingRatios(s.table(name))
+    val sink = StreamRunner.memorySink(
+      TextQueries.packingEfficiency(raw), "complete", Some(8))
+    TextQueries.packingRatios(sink)
   }
 
   // ---- s22: streaming embedding-drift monitor (live v24) ----
@@ -689,17 +580,9 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
       .select($"vec_id", graft.vec.VectorOps.toDouble($"embedding").as("v"))
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = VectorQueries.cellDriftCounts(raw).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    VectorQueries.cellDriftRatios(s.table(name))
+    val sink = StreamRunner.memorySink(
+      VectorQueries.cellDriftCounts(raw), "complete", Some(8))
+    VectorQueries.cellDriftRatios(sink)
   }
 
   // ---- s23: Bloom decontamination screen on arrival ----
@@ -719,14 +602,8 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
       .filter($"doc_id" >= 20)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val q = TextQueries.bloomScreenStateless(raw, bits).writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    StreamRunner.memorySink(
+      TextQueries.bloomScreenStateless(raw, bits), "append")
   }
 
   // ---- s24: fuzzy decontamination on arrival (live d58) ----
@@ -753,17 +630,8 @@ object StreamingQueries {
       .join(broadcast(evalB),
         $"band" === $"eband" && $"bucket" === $"ebucket")
       .select($"doc".as("id_a"), $"edoc".as("id_b"))
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = matches.writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val cands = s.table(name).groupBy($"id_a", $"id_b")
+    val sink = StreamRunner.memorySink(matches, "append", Some(8))
+    val cands = sink.groupBy($"id_a", $"id_b")
       .agg(count(lit(1)).as("n_bands"))
     TextQueries.fuzzyVerify(cands, batchSigs)
   }
@@ -794,17 +662,8 @@ object StreamingQueries {
       .select($"doc_id".as("media_id"), $"text".cast("binary").as("payload"))
     val verdicts = MultimodalQueries.ledgerProbe(
       MultimodalQueries.blockRows(raw), ledger)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = verdicts.writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    MultimodalQueries.blockAudit(s.table(name))
+    val sink = StreamRunner.memorySink(verdicts, "append", Some(8))
+    MultimodalQueries.blockAudit(sink)
   }
 
   // ---- s26: streaming weighted reservoir (stateful bounded heap) ----
@@ -824,21 +683,11 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
     val scored = TextQueries.esScored(raw)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = scored.groupBy($"qid")
-        .agg(graft.functions.GraftFunctions
-          .boundedTopK((-$"score").cast("double"), $"vec_id".cast("long"),
-            TextQueries.wsK).as("top"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    TextQueries.esManifest(s.table(name)
+    val sink = StreamRunner.memorySink(scored.groupBy($"qid")
+      .agg(graft.functions.GraftFunctions
+        .boundedTopK((-$"score").cast("double"), $"vec_id".cast("long"),
+          TextQueries.wsK).as("top")), "complete", Some(8))
+    TextQueries.esManifest(sink
       .select($"qid", posexplode($"top"))
       .select($"qid", ($"pos" + 1).cast("long").as("rank"),
         $"col.vid".as("vec_id"), (-$"col.ns").as("score")))
@@ -862,18 +711,9 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = TextQueries.sjSketches(TextQueries.sjHashes(raw))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    TextQueries.sjEstimate(s.table(name)
+    val sink = StreamRunner.memorySink(
+      TextQueries.sjSketches(TextQueries.sjHashes(raw)), "complete", Some(8))
+    TextQueries.sjEstimate(sink
       .select($"source".as("src"), explode($"hs").as("h")))
   }
 
@@ -893,17 +733,9 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = TextQueries.termCountsAgg(raw).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    TextQueries.hhThreshold(s.table(name))
+    val sink = StreamRunner.memorySink(
+      TextQueries.termCountsAgg(raw), "complete", Some(8))
+    TextQueries.hhThreshold(sink)
   }
 
   // ---- s29: streaming ANN search against the static IVF index ----
@@ -924,18 +756,10 @@ object StreamingQueries {
       .option("pathGlobFilter", "embeddings.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = VectorQueries.annProbeHeapStream(raw, cents, assigned, np = 4)
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    VectorQueries.annProbeRender(s.table(name))
+    val sink = StreamRunner.memorySink(
+      VectorQueries.annProbeHeapStream(raw, cents, assigned, np = 4),
+      "complete", Some(8))
+    VectorQueries.annProbeRender(sink)
   }
 
   // ---- s30: live scene segmentation (stateful streaming x11) ----
@@ -961,19 +785,8 @@ object StreamingQueries {
       .frameMeans(MultimodalQueries.videoMedia(raw))
       .select($"media_id", $"frame", $"mean_intensity".as("mean"))
       .as[StreamingOps.FrameMean]
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = StreamingOps
-        .sceneStats(frames, tau = MultimodalQueries.sceneTau)
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
+    StreamRunner.memorySink(StreamingOps
+      .sceneStats(frames, tau = MultimodalQueries.sceneTau), "append", Some(8))
   }
 
   // ---- s47: live audio VAD (stateful streaming x13) ----
@@ -1001,19 +814,8 @@ object StreamingQueries {
         windowSamples = MultimodalQueries.vadWindow)
       .select($"media_id", $"window", $"rms")
       .as[StreamingOps.AudioWindow]
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = StreamingOps
-        .vadStats(wins, tau = MultimodalQueries.vadTau)
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
+    StreamRunner.memorySink(StreamingOps
+      .vadStats(wins, tau = MultimodalQueries.vadTau), "append", Some(8))
   }
 
   // ---- s31: streaming near-dup probe against the static band index ----
@@ -1044,23 +846,14 @@ object StreamingQueries {
         $"x.band" === $"y.band" && $"x.bucket" === $"y.bucket")
       .select(least($"x.doc", $"y.doc").as("id_a"),
         greatest($"x.doc", $"y.doc").as("id_b"))
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = matches.writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val sink = StreamRunner.memorySink(matches, "append", Some(8))
     // batch-side rollup over the sink; delta sigs re-derived in batch
     // (same fixture rows) for the est-Jaccard verify column
     val deltaSigsBatch = TextQueries.mhSigs(
       graft.Tables(s, dir, "documents")
         .filter(col("doc_id") < TextQueries.oracleSliceN &&
           col("doc_id") % TextQueries.ndMod >= TextQueries.ndBaseSlots))
-    TextQueries.mhPairsRollup(s.table(name), baseSigs.union(deltaSigsBatch))
+    TextQueries.mhPairsRollup(sink, baseSigs.union(deltaSigsBatch))
   }
 
   // ---- s32: streaming sliding-window distinct (live HLL registers) ----
@@ -1097,18 +890,9 @@ object StreamingQueries {
       .select($"n_chars".cast("long")).as[Long]
     val agg = new graft.text.QuantileSketch.QuantileAgg(
       TextQueries.qsK, TextQueries.qsPs).toColumn
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = vals.groupByKey(_ => 0).agg(agg).toDF("g", "qs")
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name).select(explode($"qs").as("q"))
+    val sink = StreamRunner.memorySink(
+      vals.groupByKey(_ => 0).agg(agg).toDF("g", "qs"), "complete", Some(8))
+    sink.select(explode($"qs").as("q"))
       .select($"q.p", $"q.rank", $"q.q_value", $"q.err_budget")
   }
 
@@ -1128,17 +912,9 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = TextQueries.cmCounters(raw).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    TextQueries.cmEstimate(s.table(name),
+    val sink = StreamRunner.memorySink(
+      TextQueries.cmCounters(raw), "complete", Some(8))
+    TextQueries.cmEstimate(sink,
       TextQueries.termCountsAgg(graft.Tables(s, dir, "documents")))
   }
 
@@ -1160,17 +936,8 @@ object StreamingQueries {
       .parquet(dir)
       .filter($"vec_id" >= VectorQueries.sdEvalN)
       .select($"vec_id", graft.vec.VectorOps.toDouble($"embedding").as("v"))
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = VectorQueries.semanticScreen(raw, evals).writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
+    StreamRunner.memorySink(
+      VectorQueries.semanticScreen(raw, evals), "append", Some(8))
   }
 
   // ---- s36: streaming decayed counts (freshness rollup live) ----
@@ -1204,17 +971,9 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = TextQueries.bpeSourceTermCounts(raw).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    TextQueries.bpeFertility(s.table(name),
+    val sink = StreamRunner.memorySink(
+      TextQueries.bpeSourceTermCounts(raw), "complete", Some(8))
+    TextQueries.bpeFertility(sink,
       TextQueries.bpeSegmentation(s, dir, merges))
   }
 
@@ -1314,17 +1073,8 @@ object StreamingQueries {
       .parquet(dir)
     val hits = TextQueries.gramSites(raw)
       .join(ledger, "gh").select($"doc_id", $"pos")
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = hits.writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    TextQueries.dupSpansOf(s.table(name))
+    val sink = StreamRunner.memorySink(hits, "append", Some(8))
+    TextQueries.dupSpansOf(sink)
   }
 
   // ---- s41: streaming PCA (Gram sums as complete-mode state) ----
@@ -1346,19 +1096,11 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
       .select($"vec_id", graft.vec.VectorOps.toDouble($"embedding").as("v"))
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = VectorQueries.gramSums(raw).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val sink = StreamRunner.memorySink(
+      VectorQueries.gramSums(raw), "complete", Some(8))
     // bounded gather: the sink holds exactly d(d+1)/2 = 2,080
     // register rows at any corpus size
-    VectorQueries.pcaFromSums(s.table(name).collect())
+    VectorQueries.pcaFromSums(sink.collect())
       .toDF("dim", "loading", "eigenvalue", "var_ratio")
   }
 
@@ -1380,17 +1122,8 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
       .select(graft.vec.VectorOps.toDouble($"embedding").as("v"))
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = VectorQueries.centroidSums(raw).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
+    StreamRunner.memorySink(
+      VectorQueries.centroidSums(raw), "complete", Some(8))
   }
 
   // ---- s43: streaming copy-flow attribution (d78 live) ----
@@ -1431,17 +1164,11 @@ object StreamingQueries {
     // reads the files like d78 reads its sites.
     val base = java.nio.file.Files
       .createTempDirectory("graft_s43_flows_").toString
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = flows.writeStream
-        .format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    StreamRunner.runToEnd(s, flows.writeStream
+      .format("parquet")
+      .option("path", s"$base/out")
+      .option("checkpointLocation", s"$base/ckpt")
+      .outputMode("append"), Some(8))
     s.read.parquet(s"$base/out")
       .groupBy($"src_from", $"src_to")
       .agg(count(lit(1)).as("n_sites"),
@@ -1477,17 +1204,8 @@ object StreamingQueries {
         $"x.media_id" =!= $"y.media_id")
       .select($"x.media_id".as("id_x"), $"y.media_id".as("id_y"),
         $"x.phash".as("ph_x"), $"y.phash".as("ph_y"))
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = cands.writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    MultimodalQueries.phashPairs(s.table(name))
+    val sink = StreamRunner.memorySink(cands, "append", Some(8))
+    MultimodalQueries.phashPairs(sink)
   }
 
   // ---- s12: streaming K-Means (micro-batch centroid refinement) ----
@@ -1515,12 +1233,10 @@ object StreamingQueries {
       .parquet(dir)
       .select($"vec_id", graft.vec.VectorOps.toDouble($"embedding").as("v"))
     val model = new StreamingOps.StreamingKMeansModel(null)
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = StreamingOps.kmeansRefineStream(raw, model,
-        idCol = "vec_id", seedK = MlQueries.k, iters = MlQueries.m03Iters)
-      q.awaitTermination()
-    }
+    StreamRunner.start(s, Some(8))(
+      StreamingOps.kmeansRefineStream(raw, model, idCol = "vec_id",
+        seedK = MlQueries.k, iters = MlQueries.m03Iters))
+      .awaitTermination()
     require(model.centroids != null, "streaming K-Means saw no data")
     val rows = for {
       (c, cid) <- model.centroids.zipWithIndex.toSeq
@@ -1542,14 +1258,7 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val q = TextQueries.entropyScreen(raw).writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    StreamRunner.memorySink(TextQueries.entropyScreen(raw), "append")
   }
 
   // ---- s48: HTML main-content extraction on arrival ----
@@ -1565,15 +1274,9 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val q = TextQueries.htmlExtract(TextQueries.syntheticPages(raw))
-      .drop("main").writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    StreamRunner.memorySink(
+      TextQueries.htmlExtract(TextQueries.syntheticPages(raw)).drop("main"),
+      "append")
   }
 
   // ---- s49: secret redaction on arrival ----
@@ -1587,14 +1290,8 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val q = TextQueries.secretScrub(raw).drop("scrubbed").writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    StreamRunner.memorySink(
+      TextQueries.secretScrub(raw).drop("scrubbed"), "append")
   }
 
   // ---- s51: composed crawl ingest on arrival (d92 live) ----
@@ -1630,17 +1327,8 @@ object StreamingQueries {
       .join(keepers, "doc_id")
       .select($"doc_id", $"source", $"canon".as("canon_url"),
         $"main".as("text"))
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = TextQueries.ingestScrubOut(survivors).writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
+    StreamRunner.memorySink(
+      TextQueries.ingestScrubOut(survivors), "append", Some(8))
   }
 
   // ---- s46: streaming ridge-fit register maintenance ----
@@ -1658,17 +1346,7 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1000000")
       .parquet(dir)
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    graft.Tables.withConfs(s,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      val q = MlQueries.ridgeFit(raw).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
+    StreamRunner.memorySink(MlQueries.ridgeFit(raw), "complete", Some(8))
   }
 
   val all: Seq[Q] = Seq(

@@ -452,7 +452,7 @@ object StreamingOps {
     * DataFrame with an array<double> column `v`. */
   def kmeansStream(points: DataFrame, model: StreamingKMeansModel,
       decay: Double = 0.5): StreamingQuery =
-    points.writeStream
+    StreamRunner.start(points.sparkSession)(points.writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -467,7 +467,7 @@ object StreamingOps {
           model.batches += 1L
         }
       }
-      .start()
+      .start())
 
   /** The full-refinement sibling of `kmeansStream`: each micro-batch
     * runs `iters` fixed-point Lloyd steps (snap6 after every step —
@@ -481,7 +481,7 @@ object StreamingOps {
     * (`idCol`, v). */
   def kmeansRefineStream(points: DataFrame, model: StreamingKMeansModel,
       idCol: String, seedK: Int, iters: Int): StreamingQuery =
-    points.writeStream
+    StreamRunner.start(points.sparkSession)(points.writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -494,5 +494,5 @@ object StreamingOps {
           model.batches += 1L
         }
       }
-      .start()
+      .start())
 }

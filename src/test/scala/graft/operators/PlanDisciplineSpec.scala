@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.TestSpark
 import graft.functions.KernelPlans
+import graft.streaming.StreamRunner
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -1200,9 +1201,14 @@ class PlanDisciplineSpec extends AnyFunSuite {
   // SQL execution — each micro-batch included — which is the only hook
   // that reaches a TERMINATED stream's plans. The capture also sweeps
   // the batch tails those queries run over their sinks: strictly more
-  // coverage under the same discipline.
-  private lazy val streamPlans: Seq[(String, SparkPlan)] = {
+  // coverage under the same discipline. The same run records, for every
+  // stream a query starts, the checkpoint file manager its session names
+  // at start (a StreamingQueryListener's onQueryStarted runs before
+  // `start()` returns, so it sees the conf the stream was started with).
+  private lazy val streamCapture
+      : (Seq[(String, SparkPlan)], Seq[(String, Option[String])]) = {
     val plans = scala.collection.mutable.ArrayBuffer.empty[(String, SparkPlan)]
+    val managers = scala.collection.mutable.ArrayBuffer.empty[(String, Option[String])]
     val current = new java.util.concurrent.atomic.AtomicReference[String]("")
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(
@@ -1215,7 +1221,18 @@ class PlanDisciplineSpec extends AnyFunSuite {
           case _ => ()
         }
     }
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val starts = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
+        val manager = Option(spark.streams.get(e.id))
+          .flatMap(_.sparkSession.conf.getOption(StreamRunner.managerConf))
+        managers.synchronized { managers += current.get -> manager }
+      }
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
     spark.sparkContext.addSparkListener(listener)
+    spark.streams.addListener(starts)
     try {
       for (n <- Catalog.queries.keys.toSeq.sorted.filter(_.startsWith("s"))) {
         // flush stragglers from the previous query, then attribute
@@ -1226,8 +1243,24 @@ class PlanDisciplineSpec extends AnyFunSuite {
         GraftShims.waitListenerBus(spark.sparkContext)
         current.set("")
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    plans.synchronized(plans.toVector)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.streams.removeListener(starts)
+    }
+    (plans.synchronized(plans.toVector), managers.synchronized(managers.toVector))
+  }
+  private def streamPlans: Seq[(String, SparkPlan)] = streamCapture._1
+
+  test("every registered stream starts through StreamRunner's checkpoint file manager") {
+    val started = streamCapture._2
+    val streaming = Catalog.queries.keys.filter(_.startsWith("s")).toSet
+    assert(started.map(_._1).toSet == streaming,
+      s"queries that started no stream: ${streaming -- started.map(_._1)}")
+    val bypass = started.collect {
+      case (n, m) if !m.contains(StreamRunner.managerClass) => s"$n ($m)"
+    }
+    assert(bypass.isEmpty,
+      s"streams started outside StreamRunner: ${bypass.distinct.mkString(", ")}")
   }
 
   test("no registered STREAMING query shuffles corpus gram STRINGS (micro-batch plans)") {

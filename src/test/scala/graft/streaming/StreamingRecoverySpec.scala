@@ -3,6 +3,7 @@ package graft.streaming
 import graft.TestSpark
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.sql.Timestamp
@@ -20,9 +21,11 @@ import java.sql.Timestamp
   * (run 2 must not replay run 1's data — the known MemoryStream
   * pitfall is that a checkpoint-less second start replays everything)
   * and operator STATE is restored (a session or dedup ledger spanning
-  * the stop must behave as if never interrupted).
+  * the stop must behave as if never interrupted). Every restarted query
+  * starts through `StreamRunner`, so its checkpoint is written and read
+  * by the engine's `LocalCheckpointFileManager`.
   */
-class StreamingRecoverySpec extends AnyFunSuite {
+class StreamingRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -32,8 +35,12 @@ class StreamingRecoverySpec extends AnyFunSuite {
     new Timestamp(86400000L + min * 60000L)
   private def us(min: Long): Long = ts(min).getTime * 1000L
 
+  // every checkpoint and sink dir of the suite, deleted after it
+  private val root = java.nio.file.Files.createTempDirectory("graft-recovery")
+  override def afterAll(): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    java.nio.file.Files.createTempDirectory(root, tag).toString
 
   test("sessionizer (s05 engine) recovers keyed state and offsets from checkpoint") {
     implicit val sqlCtx = spark.sqlContext
@@ -55,7 +62,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     mem.addData(
       StreamingOps.TEvt(1L, ts(0)), StreamingOps.TEvt(1L, ts(10)),
       StreamingOps.TEvt(3L, ts(0)), StreamingOps.TEvt(3L, ts(40)))
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     val run1 = sink()
     assert(run1 == Seq(Seq(3L, 1L, us(0), us(0), 1L)),
@@ -68,7 +75,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     // session's last + gap — so no timeout close can race the
     // assertion.
     mem.addData(StreamingOps.TEvt(1L, ts(20)), StreamingOps.TEvt(1L, ts(120)))
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val all = sink()
     assert(all.size == 2,
@@ -118,7 +125,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSeq
 
     mem.addData((200L, "sig_a"), (201L, "sig_new"))
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     val run1 = sink()
     assert(run1.toSet == Set(
@@ -126,7 +133,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
       s"run 1 verdicts wrong: $run1")
 
     mem.addData((202L, "sig_b"), (203L, "sig_other"))
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val all = sink()
     // offset restore: exactly one row per document — a replayed doc
@@ -165,12 +172,12 @@ class StreamingRecoverySpec extends AnyFunSuite {
       ("s2", "one two"), ("s2", "three four"))
     val batch2 = Seq(("s1", "epsilon zeta"), ("s3", "seven eight"))
     mem.addData(batch1: _*)
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     assert(spark.table(name).count() > 0)
 
     mem.addData(batch2: _*)
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val got = spark.table(name)
       .select($"source", $"bucket", $"r").collect().map(_.toSeq).toSet
@@ -210,12 +217,12 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val batch2 = Seq(("s1", "eta theta iota kappa lambda mu"),
       ("s3", "eight nine ten eleven twelve thirteen"))
     mem.addData(batch1: _*)
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     assert(spark.table(name).count() > 0)
 
     mem.addData(batch2: _*)
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val got = spark.table(name)
       .select($"source", $"bucket", $"r").collect().map(_.toSeq).toSet
@@ -274,12 +281,12 @@ class StreamingRecoverySpec extends AnyFunSuite {
       (100L + i, "s1", "tok " * (3 + i.toInt))) :+
       ((301L, "s2", "delta epsilon"))
     mem.addData(batch1: _*)
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     assert(spark.table(name).count() > 0)
 
     mem.addData(batch2: _*)
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val got = manifest(spark.table(name))
 
@@ -318,14 +325,14 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val batch1 = Seq((1L, "tok " * 100), (2L, "tok " * 300))
     val batch2 = Seq((3L, "tok " * 520), (4L, "tok " * 7))
     mem.addData(batch1: _*)
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     val run1 = ratios(spark.table(name))
     assert(run1 == ratios(TextQueries.packingEfficiency(docs(batch1.toDF()))),
       s"run 1 curve wrong: $run1")
 
     mem.addData(batch2: _*)
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val got = ratios(spark.table(name))
     val want = ratios(
@@ -368,14 +375,14 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val batch2 = Seq((4L, "a a a a a a"),
       (5L, "internationalization considerations require documentation"))
     mem.addData(batch1: _*)
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     assert(fit(spark.table(name)) ==
       fit(MlQueries.ridgeFit(docs(batch1.toDF()))),
       "run 1 coefficients diverge from the batch fit of batch 1")
 
     mem.addData(batch2: _*)
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val got = fit(spark.table(name))
     val want = fit(MlQueries.ridgeFit(docs((batch1 ++ batch2).toDF())))
@@ -415,14 +422,14 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val batch1 = (0L until 20L).map(i => (i, mkVec(i)))
     val batch2 = (20L until 32L).map(i => (i, mkVec(i)))
     mem.addData(batch1: _*)
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     assert(ratios(spark.table(name)) ==
       ratios(VectorQueries.cellDriftCounts(vecs(batch1.toDF()))),
       "run 1 monitor diverges from the batch monitor")
 
     mem.addData(batch2: _*)
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val got = ratios(spark.table(name))
     val want = ratios(
@@ -459,7 +466,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toList).toMap
 
     mem.addData(("s1", 30L), ("s1", 10L), ("s1", 10L), ("s2", 5L))
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     assert(sketches() == Map("s1" -> List(10L, 30L), "s2" -> List(5L)),
       s"run 1 sketches wrong: ${sketches()}")
@@ -467,7 +474,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     // batch 2: a duplicate of 10 (must not take a second slot), plus
     // 20/40/50 — k=4 keeps {10, 20, 30, 40}; 10 and 30 are batch-1-only
     mem.addData(("s1", 20L), ("s1", 10L), ("s1", 40L), ("s1", 50L))
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     assert(sketches() == Map(
       "s1" -> List(10L, 20L, 30L, 40L), "s2" -> List(5L)),
@@ -500,14 +507,14 @@ class StreamingRecoverySpec extends AnyFunSuite {
       (2L, "alpha beta delta"))
     val batch2 = Seq((3L, ("beta " * 4) + "epsilon zeta eta theta"))
     mem.addData(batch1: _*)
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     assert(hh(spark.table(name)) ==
       hh(TextQueries.termCountsAgg(docs(batch1.toDF()))),
       "run 1 audit diverges from the batch audit")
 
     mem.addData(batch2: _*)
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val got = hh(spark.table(name))
     val want = hh(
@@ -546,14 +553,14 @@ class StreamingRecoverySpec extends AnyFunSuite {
       (2L, "beta delta"))
     val batch2 = Seq((3L, "alpha epsilon beta beta"))
     mem.addData(batch1: _*)
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     assert(cells(spark.table(name)) ==
       cells(TextQueries.cmCounters(docs(batch1.toDF()))),
       "run 1 matrix diverges from the batch matrix")
 
     mem.addData(batch2: _*)
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val got = cells(spark.table(name))
     val want = cells(TextQueries.cmCounters(docs((batch1 ++ batch2).toDF())))
@@ -591,14 +598,14 @@ class StreamingRecoverySpec extends AnyFunSuite {
     val batch1 = Seq((1L, vec(1)), (2L, vec(2)), (3L, vec(3)))
     val batch2 = Seq((4L, vec(4)), (5L, vec(5)))
     mem.addData(batch1: _*)
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     assert(cells(spark.table(name)) ==
       cells(VectorQueries.gramSums(vecs(batch1.toDF()))),
       "run 1 registers diverge from the batch pass")
 
     mem.addData(batch2: _*)
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val got = cells(spark.table(name))
     val want = cells(VectorQueries.gramSums(vecs((batch1 ++ batch2).toDF())))
@@ -635,7 +642,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
         r.getLong(3))).toSet
 
     mem.addData(1L to 100L: _*)
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     assert(rows() == Set((1L, 1L, 1L, 0L), (50L, 50L, 50L, 0L),
       (99L, 99L, 99L, 0L)), s"run 1: ${rows()}")
@@ -643,7 +650,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     // batch 2 doubles the range: exact quantiles of 1..200 prove the
     // restored buffer still holds 1..100
     mem.addData(101L to 200L: _*)
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     assert(rows() == Set((1L, 2L, 2L, 0L), (50L, 100L, 100L, 0L),
       (99L, 198L, 198L, 0L)),
@@ -665,7 +672,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
         .outputMode("append").start()
 
     mem.addData(Ev(ts(0), "sig_a", 1.0, 1), Ev(ts(5), "sig_b", 2.0, 1))
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     assert(spark.read.parquet(out).count() == 2)
 
@@ -673,7 +680,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     // state drops it — a from-scratch restart would emit it as new
     // (value 9.0 would land in the sink)
     mem.addData(Ev(ts(10), "sig_a", 9.0, 1), Ev(ts(12), "sig_c", 3.0, 1))
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val all = spark.read.parquet(out)
       .select($"sig", $"value").collect().map(_.toSeq).toSeq
@@ -704,7 +711,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
 
     mem.addData(StreamingOps.DocSig("sig_a", 5L),
       StreamingOps.DocSig("sig_a", 9L), StreamingOps.DocSig("sig_b", 3L))
-    val q1 = start()
+    val q1 = StreamRunner.start(spark)(start())
     try q1.processAllAvailable() finally q1.stop()
     val run1 = spark.read.parquet(out)
       .select($"sig", $"keeper", $"n_copies").collect().map(_.toSeq).toSet
@@ -717,7 +724,7 @@ class StreamingRecoverySpec extends AnyFunSuite {
     // touching batch))
     mem.addData(StreamingOps.DocSig("sig_a", 1L),
       StreamingOps.DocSig("sig_c", 7L))
-    val q2 = start()
+    val q2 = StreamRunner.start(spark)(start())
     try q2.processAllAvailable() finally q2.stop()
     val rows = spark.read.parquet(out)
       .select($"sig", $"keeper", $"n_copies").collect().map(_.toSeq)
@@ -732,5 +739,37 @@ class StreamingRecoverySpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     assert(ledger == Set(Seq("sig_a", 1L, 3L), Seq("sig_b", 3L, 1L),
       Seq("sig_c", 7L, 1L)), s"final ledger wrong: $ledger")
+  }
+
+  test("a checkpoint resumes across Spark's default manager and the engine's, both ways") {
+    // run 1 writes offsets, commits and state under one manager; run 2
+    // resumes them under the other. The running counts come out right
+    // only if run 2 read run 1's state and offsets.
+    implicit val sqlCtx = spark.sqlContext
+    assert(spark.conf.getOption(StreamRunner.managerConf).isEmpty,
+      "outside StreamRunner the session must use Spark's default manager")
+    type Start = (() => org.apache.spark.sql.streaming.StreamingQuery) =>
+      org.apache.spark.sql.streaming.StreamingQuery
+    val sparkDefault: Start = start => start()
+    val engine: Start = start => StreamRunner.start(spark)(start())
+    def counts(first: Start, second: Start): Set[Seq[Any]] = {
+      val ckpt = tmp("xmgr-ckpt")
+      val name = s"graft_xmgr_sink_${System.nanoTime}"
+      val mem = MemoryStream[String]
+      def start() = mem.toDF().groupBy($"value").count()
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode("complete").start()
+      mem.addData("a", "b", "a")
+      val q1 = first(() => start())
+      try q1.processAllAvailable() finally q1.stop()
+      mem.addData("a", "c")
+      val q2 = second(() => start())
+      try q2.processAllAvailable() finally q2.stop()
+      spark.table(name).collect().map(_.toSeq).toSet
+    }
+    val want = Set(Seq("a", 3L), Seq("b", 1L), Seq("c", 1L))
+    assert(counts(sparkDefault, engine) == want)
+    assert(counts(engine, sparkDefault) == want)
   }
 }
