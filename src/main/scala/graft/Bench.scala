@@ -235,6 +235,7 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.warehouse.dir", JvmScratch.warehouse)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // Status-listener retention, sized for a 600+-execution sweep
@@ -1589,6 +1590,7 @@ object Bench {
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+        .config("spark.sql.warehouse.dir", JvmScratch.warehouse)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.ui.retainedExecutions", "8")
@@ -1959,6 +1961,7 @@ object Damds32k {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.warehouse.dir", JvmScratch.warehouse)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -44,6 +44,7 @@ object BenchIsolate {
         .master("local[32]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+        .config("spark.sql.warehouse.dir", JvmScratch.warehouse)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
       if (benchConfs)

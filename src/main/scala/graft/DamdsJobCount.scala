@@ -20,6 +20,7 @@ object DamdsJobCount {
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.warehouse.dir", JvmScratch.warehouse)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

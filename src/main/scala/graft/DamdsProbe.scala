@@ -28,6 +28,7 @@ object DamdsProbe {
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+        .config("spark.sql.warehouse.dir", JvmScratch.warehouse)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

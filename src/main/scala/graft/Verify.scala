@@ -16,6 +16,7 @@ object Verify {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.warehouse.dir", JvmScratch.warehouse)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

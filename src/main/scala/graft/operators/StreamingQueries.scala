@@ -81,11 +81,11 @@ object StreamingQueries {
     * arriving in a LATER batch than their timestamp's watermark would
     * be dropped, which no batch oracle reproduces. The fixture is one
     * file and the file source admits whole files per batch, so this
-    * holds structurally; `maxFilesPerTrigger` is pinned high anyway so
-    * a future multi-file fixture fails loudly here (the pin) instead
-    * of silently diverging. A production deployment replaying history
-    * into these queries would use a watermark delay covering its
-    * actual disorder, not 0 seconds.
+    * holds structurally; `maxFilesPerTrigger` is pinned high anyway
+    * (`StreamRunner.parquetFile`) so a future multi-file fixture fails
+    * loudly here (the pin) instead of silently diverging. A production
+    * deployment replaying history into these queries would use a
+    * watermark delay covering its actual disorder, not 0 seconds.
     */
   private def runStream(s: SparkSession, dir: String,
       transform: DataFrame => DataFrame,
@@ -95,14 +95,9 @@ object StreamingQueries {
       // resolved inside withNanosAsLong, so a nanos-generation file
       // surfaces as a long instead of failing PARQUET_TYPE_ILLEGAL
       val tsIsLong = eventsTsIsLong(s, dir)
-      // the file stream source lists a DIRECTORY; the glob filter picks
-      // out the events file from the shared sf dir
-      val raw0 = s.readStream.schema(rawSchema(
-          if (tsIsLong) LongType
+      val raw0 = StreamRunner.parquetFile(s, dir, "events.parquet",
+        rawSchema(if (tsIsLong) LongType
           else org.apache.spark.sql.types.TimestampNTZType))
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", "1000000") // single-batch pin, see above
-        .parquet(dir)
       val raw =
         if (tsIsLong)
           raw0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -281,12 +276,8 @@ object StreamingQueries {
       |  MIN(CASE WHEN value > 0.0 THEN value END) AS positive_min
       |FROM events""".stripMargin
 
-  // ---- s08: the training-mixture expansion as a stream ----
-  // d26's epoch weighting is stateless (projection + explode), so it
-  // lifts onto a document stream unchanged — the shape of a curation
-  // job that upsamples/downsamples documents AS THEY ARRIVE (append
-  // mode, no state stores, no watermark). The batch d26 oracle gates
-  // the streamed output exactly.
+  // the document and embedding file-stream sources (the events one is
+  // runStream's)
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("text", StringType),
@@ -294,11 +285,23 @@ object StreamingQueries {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
+  private def documents(s: SparkSession, dir: String): DataFrame =
+    StreamRunner.parquetFile(s, dir, "documents.parquet", docSchema)
+
+  // schema from the batch footer: the file stream source needs it
+  // declared, and hand-writing it would drift if the fixture changes
+  private def embeddings(s: SparkSession, dir: String): DataFrame =
+    StreamRunner.parquetFile(s, dir, "embeddings.parquet",
+      s.read.parquet(s"$dir/embeddings.parquet").schema)
+
+  // ---- s08: the training-mixture expansion as a stream ----
+  // d26's epoch weighting is stateless (projection + explode), so it
+  // lifts onto a document stream unchanged — the shape of a curation
+  // job that upsamples/downsamples documents AS THEY ARRIVE (append
+  // mode, no state stores, no watermark). The batch d26 oracle gates
+  // the streamed output exactly.
   private def s08(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     StreamRunner.memorySink(TextQueries.mixtureExpand(raw), "append")
   }
 
@@ -316,10 +319,7 @@ object StreamingQueries {
   // the streamed path must reproduce the batch LSH dedup bit-for-bit.
   private def s09(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
       .filter(col("doc_id") < TextQueries.oracleSliceN)
     val banded = TextQueries.mhBandedOf(TextQueries.mhSigs(raw))
     val matches = banded.as("x").join(banded.as("y"),
@@ -348,10 +348,7 @@ object StreamingQueries {
       .select(TextQueries.bowSig($"text").as("sig"),
         $"doc_id")
       .groupBy($"sig").agg(min($"doc_id").as("hist_keeper"))
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
       .filter($"doc_id" >= TextQueries.ledgerSplit)
       .filter(length(trim($"text")) > 0)
       .select($"doc_id", TextQueries.bowSig($"text").as("sig"))
@@ -373,10 +370,7 @@ object StreamingQueries {
   // of pretraining chunking (append mode, no state stores, no
   // watermark; the s08 pattern). Gated by d36's batch oracle exactly.
   private def s11(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     StreamRunner.memorySink(TextQueries.contextChunks(raw), "append")
   }
 
@@ -388,10 +382,7 @@ object StreamingQueries {
   // oracle exactly: the streamed verdicts must reproduce the batch
   // classifier bit-for-bit.
   private def s13(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     StreamRunner.memorySink(TextQueries.qualityClassify(raw), "append")
   }
 
@@ -408,10 +399,7 @@ object StreamingQueries {
   // (integer micro-nat sums make the HOF fold order-independent).
   private def s14(s: SparkSession, dir: String): DataFrame = {
     val llr = TextQueries.irLlrArray(s, dir)
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     StreamRunner.memorySink(TextQueries.importanceScoreStateless(raw, llr,
       TextQueries.irBuckets), "append")
   }
@@ -428,10 +416,7 @@ object StreamingQueries {
   // make the HOF fold order-independent).
   private def s16(s: SparkSession, dir: String): DataFrame = {
     val (lnc, lnd) = TextQueries.bigramLmIndex(s, dir)
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     StreamRunner.memorySink(
       TextQueries.perplexityScoreStateless(raw, lnc, lnd), "append")
   }
@@ -449,11 +434,7 @@ object StreamingQueries {
   private def s15(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val counts = VectorQueries.divCellCounts(s, dir)
-    val sch = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val raw = s.readStream.schema(sch)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = embeddings(s, dir)
       .select($"vec_id", graft.vec.VectorOps.toDouble($"embedding").as("v"))
     StreamRunner.memorySink(
       VectorQueries.diversitySampleStateless(raw, counts), "append")
@@ -473,10 +454,7 @@ object StreamingQueries {
   // gates the streamed pairs bit-for-bit (integer micro-weight sums).
   private def s17(s: SparkSession, dir: String): DataFrame = {
     val (qts, nd, tt) = TextQueries.bm25QueryIndex(s, dir)
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     StreamRunner.memorySink(
       TextQueries.bm25ScoreStateless(raw, qts, nd, tt), "append")
   }
@@ -495,10 +473,7 @@ object StreamingQueries {
   // the whole d49 oracle gates the streamed registers: any drift in
   // the streaming fold surfaces as a hash mismatch.
   private def s18(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     // the fused register aggregate (r19): state is ONE 256-byte
     // buffer row per source — the row form kept 256 register rows —
     // and no gram ever explodes into a stream row; recovery leg in
@@ -516,10 +491,7 @@ object StreamingQueries {
   // counters, complete mode. The first streaming leg over the
   // multimodal family; the whole x09 batch SQL oracle gates it.
   private def s19(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     StreamRunner.memorySink(MultimodalQueries.coverageAgg(raw,
       MultimodalQueries.embFlags(s, dir)), "complete", Some(8))
   }
@@ -535,10 +507,7 @@ object StreamingQueries {
   // ≡ batch d01 bit-for-bit.
   private def s20(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     val sigs = raw
       .select(md5(graft.text.TextOps.normText($"text").cast("binary")).as("sig"),
         $"doc_id")
@@ -556,10 +525,7 @@ object StreamingQueries {
   // from the exact sums on every emission, so the final table equals
   // batch d56 bit-for-bit and the whole d56 SQL oracle gates it.
   private def s21(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     val sink = StreamRunner.memorySink(
       TextQueries.packingEfficiency(raw), "complete", Some(8))
     TextQueries.packingRatios(sink)
@@ -574,11 +540,7 @@ object StreamingQueries {
   // v24's whole batch SQL oracle gates the live monitor bit-for-bit.
   private def s22(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sch = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val raw = s.readStream.schema(sch)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = embeddings(s, dir)
       .select($"vec_id", graft.vec.VectorOps.toDouble($"embedding").as("v"))
     val sink = StreamRunner.memorySink(
       VectorQueries.cellDriftCounts(raw), "complete", Some(8))
@@ -597,10 +559,7 @@ object StreamingQueries {
   private def s23(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val bits = TextQueries.bloomBitmap(s, dir)
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
       .filter($"doc_id" >= 20)
     StreamRunner.memorySink(
       TextQueries.bloomScreenStateless(raw, bits), "append")
@@ -620,10 +579,7 @@ object StreamingQueries {
     val batchSigs = TextQueries.nativeSigs(
       graft.Tables(s, dir, "documents"))
     val evalB = TextQueries.evalBandCodes(batchSigs)
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
       .filter($"doc_id" >= TextQueries.fuzzyEvalN)
     val matches = graft.text.TextOps.lshBandCodes(TextQueries.nativeSigs(raw),
         "doc_id", TextQueries.fuzzyK, bands = 8)
@@ -655,10 +611,7 @@ object StreamingQueries {
   private def s25(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ledger = MultimodalQueries.blockKeeperLedger(s, dir)
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
       .select($"doc_id".as("media_id"), $"text".cast("binary").as("payload"))
     val verdicts = MultimodalQueries.ledgerProbe(
       MultimodalQueries.blockRows(raw), ledger)
@@ -678,10 +631,7 @@ object StreamingQueries {
   // over the |sources|-row sink.
   private def s26(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     val scored = TextQueries.esScored(raw)
     val sink = StreamRunner.memorySink(scored.groupBy($"qid")
       .agg(graft.functions.GraftFunctions
@@ -707,10 +657,7 @@ object StreamingQueries {
   // cross-engine SQL oracle gates the streamed screen bit-for-bit.
   private def s27(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     val sink = StreamRunner.memorySink(
       TextQueries.sjSketches(TextQueries.sjHashes(raw)), "complete", Some(8))
     TextQueries.sjEstimate(sink
@@ -729,10 +676,7 @@ object StreamingQueries {
   // error-bound-spec'd); the exact form is what stays oracle-gated —
   // MG estimates are partition-layout-dependent inside their band.
   private def s28(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     val sink = StreamRunner.memorySink(
       TextQueries.termCountsAgg(raw), "complete", Some(8))
     TextQueries.hhThreshold(sink)
@@ -751,11 +695,7 @@ object StreamingQueries {
   // in batch over the sink (generators can't follow a streaming agg).
   private def s29(s: SparkSession, dir: String): DataFrame = {
     val (cents, _, assigned) = VectorQueries.ivfIndex(s, dir)
-    val sch = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val raw = s.readStream.schema(sch)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = embeddings(s, dir)
     val sink = StreamRunner.memorySink(
       VectorQueries.annProbeHeapStream(raw, cents, assigned, np = 4),
       "complete", Some(8))
@@ -776,10 +716,7 @@ object StreamingQueries {
   // MemoryStreams in SceneStreamSpec.
   private def s30(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
       .select($"doc_id", $"text".cast("binary").as("payload"))
     val frames = Multimodal
       .frameMeans(MultimodalQueries.videoMedia(raw))
@@ -804,10 +741,7 @@ object StreamingQueries {
   // VadStreamSpec.
   private def s47(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
       .select($"doc_id", $"text".cast("binary").as("payload"))
     val wins = Multimodal
       .audioFeatures(MultimodalQueries.audioMedia(raw),
@@ -834,10 +768,7 @@ object StreamingQueries {
     import s.implicits._
     val baseSigs = TextQueries.neardupSigIndex(s, dir)
     val baseIdx = TextQueries.mhBandedOf(baseSigs)
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
       .filter(col("doc_id") < TextQueries.oracleSliceN &&
         col("doc_id") % TextQueries.ndMod >= TextQueries.ndBaseSlots)
     val deltaSigs = TextQueries.mhSigs(raw)
@@ -882,10 +813,7 @@ object StreamingQueries {
   // compacting regime stays theorem-gated (QuantileSketchSpec).
   private def s33(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     val vals = raw.filter($"n_chars".isNotNull)
       .select($"n_chars".cast("long")).as[Long]
     val agg = new graft.text.QuantileSketch.QuantileAgg(
@@ -908,10 +836,7 @@ object StreamingQueries {
   // gates the streamed matrix end-to-end — any drift in the streaming
   // fold surfaces as a value mismatch on some term's estimate.
   private def s34(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     val sink = StreamRunner.memorySink(
       TextQueries.cmCounters(raw), "complete", Some(8))
     TextQueries.cmEstimate(sink,
@@ -929,11 +854,7 @@ object StreamingQueries {
   private def s35(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val evals = VectorQueries.evalMatrix(s, dir)
-    val sch = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val raw = s.readStream.schema(sch)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = embeddings(s, dir)
       .filter($"vec_id" >= VectorQueries.sdEvalN)
       .select($"vec_id", graft.vec.VectorOps.toDouble($"embedding").as("v"))
     StreamRunner.memorySink(
@@ -967,10 +888,7 @@ object StreamingQueries {
   // SQL oracle gates the streamed counters end-to-end.
   private def s37(s: SparkSession, dir: String): DataFrame = {
     val merges = TextQueries.bpeMerges(s, dir)
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     val sink = StreamRunner.memorySink(
       TextQueries.bpeSourceTermCounts(raw), "complete", Some(8))
     TextQueries.bpeFertility(sink,
@@ -1067,10 +985,7 @@ object StreamingQueries {
     // corpus-proportional) ledger file — same no-broadcast pin as
     // before, now plan-asserted against the bucketed read.
     val ledger = TextQueries.dupGramLedgerBucketed(s, dir).hint("merge")
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     val hits = TextQueries.gramSites(raw)
       .join(ledger, "gh").select($"doc_id", $"pos")
     val sink = StreamRunner.memorySink(hits, "append", Some(8))
@@ -1090,11 +1005,7 @@ object StreamingQueries {
   // golden gates the whole stateful path.
   private def s41(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sch = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val raw = s.readStream.schema(sch)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = embeddings(s, dir)
       .select($"vec_id", graft.vec.VectorOps.toDouble($"embedding").as("v"))
     val sink = StreamRunner.memorySink(
       VectorQueries.gramSums(raw), "complete", Some(8))
@@ -1116,11 +1027,7 @@ object StreamingQueries {
   // ≡ batch sums, and the registers are order-free exact integers).
   private def s50(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sch = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val raw = s.readStream.schema(sch)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = embeddings(s, dir)
       .select(graft.vec.VectorOps.toDouble($"embedding").as("v"))
     StreamRunner.memorySink(
       VectorQueries.centroidSums(raw), "complete", Some(8))
@@ -1143,10 +1050,7 @@ object StreamingQueries {
     // bucketed on gh like s40's ledger (build amortized across
     // triggers, static side exchange-free; merge hint = no-broadcast)
     val ledger = TextQueries.copyFlowLedgerBucketed(s, dir).hint("merge")
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     val flows = TextQueries.gramSitesSrc(raw)
       .join(ledger, "gh")
       .filter(!($"doc_id" === $"kdoc" && $"pos" === $"kpos"))
@@ -1162,13 +1066,16 @@ object StreamingQueries {
     // swaps it for exactly this kind of distributed sink). The rollup
     // (with its countDistinct, which append streams can't do) then
     // reads the files like d78 reads its sites.
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_s43_flows_").toString
-    StreamRunner.runToEnd(s, flows.writeStream
+    // The returned frame reads `out` lazily, so it lives as long as the
+    // JVM; the checkpoint is dead once the stream has run to the end.
+    val base = graft.JvmScratch.dir("s43_flows_")
+    try StreamRunner.runToEnd(s, flows.writeStream
       .format("parquet")
       .option("path", s"$base/out")
       .option("checkpointLocation", s"$base/ckpt")
       .outputMode("append"), Some(8))
+    finally org.apache.commons.io.FileUtils.deleteQuietly(
+      base.resolve("ckpt").toFile)
     s.read.parquet(s"$base/out")
       .groupBy($"src_from", $"src_to")
       .agg(count(lit(1)).as("n_sites"),
@@ -1190,10 +1097,7 @@ object StreamingQueries {
     import s.implicits._
     val baseBanded = MultimodalQueries.phashBanded(
       Multimodal.aHash(MultimodalQueries.mediaOf(s, dir)))
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
       .select($"doc_id", $"text".cast("binary").as("payload"))
     val streamBanded = MultimodalQueries.phashBanded(
       Multimodal.aHash(Multimodal.ingest(raw, "doc_id", "payload",
@@ -1224,13 +1128,7 @@ object StreamingQueries {
   // the batch K-Means trajectory bit-for-bit.
   private def s12(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // schema from the batch footer: the file stream source needs it
-    // declared, and hand-writing it would drift if the fixture changes
-    val sch = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val raw = s.readStream.schema(sch)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = embeddings(s, dir)
       .select($"vec_id", graft.vec.VectorOps.toDouble($"embedding").as("v"))
     val model = new StreamingOps.StreamingKMeansModel(null)
     StreamRunner.start(s, Some(8))(
@@ -1254,10 +1152,7 @@ object StreamingQueries {
   // sweep). Append mode, the s11/s13 pattern; gated by d84's batch
   // oracle exactly.
   private def s45(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     StreamRunner.memorySink(TextQueries.entropyScreen(raw), "append")
   }
 
@@ -1270,10 +1165,7 @@ object StreamingQueries {
   // synthetic-page wrap rides inside the projection; gated by d85's
   // batch oracle exactly.
   private def s48(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     StreamRunner.memorySink(
       TextQueries.htmlExtract(TextQueries.syntheticPages(raw)).drop("main"),
       "append")
@@ -1286,10 +1178,7 @@ object StreamingQueries {
   // never be written to the lake at all). Append mode, the s45/s48
   // pattern; gated by d87's batch oracle exactly.
   private def s49(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     StreamRunner.memorySink(
       TextQueries.secretScrub(raw).drop("scrubbed"), "append")
   }
@@ -1315,10 +1204,7 @@ object StreamingQueries {
     // so the static side reads co-located buckets and the merge hint
     // pins the no-broadcast shape (ADVICE r17)
     val keepers = TextQueries.urlKeeperLedgerBucketed(s, dir).hint("merge")
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     val survivors = TextQueries.ingestCols(raw)
       // opaque ALIAS: same single-eval fix as batch d92 — without it
       // every micro-batch pays the block-extraction chain twice per page
@@ -1342,10 +1228,7 @@ object StreamingQueries {
   // batch oracle exactly (single-batch fixture ⇒ final state ≡ batch
   // registers, and the solve is the same shared expression string).
   private def s46(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir)
+    val raw = documents(s, dir)
     StreamRunner.memorySink(MlQueries.ridgeFit(raw), "complete", Some(8))
   }
 

@@ -18,12 +18,7 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       // tables and layouts the tests write go to a per-run temp dir
       // deleted at JVM exit, not into the working directory
-      .config("spark.sql.warehouse.dir", {
-        val dir = java.nio.file.Files.createTempDirectory("graft-test-warehouse")
-        sys.addShutdownHook(
-          org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
-        dir.toString
-      })
+      .config("spark.sql.warehouse.dir", JvmScratch.warehouse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1202,13 +1202,16 @@ class PlanDisciplineSpec extends AnyFunSuite {
   // that reaches a TERMINATED stream's plans. The capture also sweeps
   // the batch tails those queries run over their sinks: strictly more
   // coverage under the same discipline. The same run records, for every
-  // stream a query starts, the checkpoint file manager its session names
-  // at start (a StreamingQueryListener's onQueryStarted runs before
-  // `start()` returns, so it sees the conf the stream was started with).
+  // stream a query starts, the checkpoint file manager and the artifact
+  // isolation its session names at start (a StreamingQueryListener's
+  // onQueryStarted runs before `start()` returns, so it sees the conf
+  // the stream was started with).
+  private case class StreamStart(query: String,
+      manager: Option[String], isolation: Option[String])
   private lazy val streamCapture
-      : (Seq[(String, SparkPlan)], Seq[(String, Option[String])]) = {
+      : (Seq[(String, SparkPlan)], Seq[StreamStart]) = {
     val plans = scala.collection.mutable.ArrayBuffer.empty[(String, SparkPlan)]
-    val managers = scala.collection.mutable.ArrayBuffer.empty[(String, Option[String])]
+    val starts = scala.collection.mutable.ArrayBuffer.empty[StreamStart]
     val current = new java.util.concurrent.atomic.AtomicReference[String]("")
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(
@@ -1222,17 +1225,19 @@ class PlanDisciplineSpec extends AnyFunSuite {
         }
     }
     import org.apache.spark.sql.streaming.StreamingQueryListener
-    val starts = new StreamingQueryListener {
+    val startListener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
-        val manager = Option(spark.streams.get(e.id))
-          .flatMap(_.sparkSession.conf.getOption(StreamRunner.managerConf))
-        managers.synchronized { managers += current.get -> manager }
+        val conf = Option(spark.streams.get(e.id)).map(_.sparkSession.conf)
+        val start = StreamStart(current.get,
+          conf.flatMap(_.getOption(StreamRunner.managerConf)),
+          conf.flatMap(_.getOption(StreamRunner.isolationConf)))
+        starts.synchronized { starts += start }
       }
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
     spark.sparkContext.addSparkListener(listener)
-    spark.streams.addListener(starts)
+    spark.streams.addListener(startListener)
     try {
       for (n <- Catalog.queries.keys.toSeq.sorted.filter(_.startsWith("s"))) {
         // flush stragglers from the previous query, then attribute
@@ -1245,22 +1250,43 @@ class PlanDisciplineSpec extends AnyFunSuite {
       }
     } finally {
       spark.sparkContext.removeSparkListener(listener)
-      spark.streams.removeListener(starts)
+      spark.streams.removeListener(startListener)
     }
-    (plans.synchronized(plans.toVector), managers.synchronized(managers.toVector))
+    (plans.synchronized(plans.toVector), starts.synchronized(starts.toVector))
   }
   private def streamPlans: Seq[(String, SparkPlan)] = streamCapture._1
 
-  test("every registered stream starts through StreamRunner's checkpoint file manager") {
+  private def streamStarts: Seq[StreamStart] = {
     val started = streamCapture._2
     val streaming = Catalog.queries.keys.filter(_.startsWith("s")).toSet
-    assert(started.map(_._1).toSet == streaming,
-      s"queries that started no stream: ${streaming -- started.map(_._1)}")
-    val bypass = started.collect {
-      case (n, m) if !m.contains(StreamRunner.managerClass) => s"$n ($m)"
+    assert(started.map(_.query).toSet == streaming,
+      s"queries that started no stream: ${streaming -- started.map(_.query)}")
+    started
+  }
+
+  test("every registered stream starts through StreamRunner's checkpoint file manager") {
+    val bypass = streamStarts.collect {
+      case st if !st.manager.contains(StreamRunner.managerClass) =>
+        s"${st.query} (${st.manager})"
     }
     assert(bypass.isEmpty,
       s"streams started outside StreamRunner: ${bypass.distinct.mkString(", ")}")
+  }
+
+  test("every registered stream starts without artifact isolation") {
+    // an isolated stream session gets its own executor classloader, and
+    // the codegen cache keys on the loader: every start recompiles its
+    // task-side classes (StreamRunner.isolationConf)
+    val isolated = streamStarts.collect {
+      case st if !st.isolation.contains("false") =>
+        s"${st.query} (${st.isolation})"
+    }
+    assert(isolated.isEmpty,
+      s"streams started with artifact isolation: ${isolated.distinct.mkString(", ")}")
+    // the premise that makes sharing one loader safe: the engine adds no
+    // jars or classes to a session
+    val added = org.apache.spark.sql.artifact.ArtifactProbe.added(spark)
+    assert(added.isEmpty, s"session artifacts added: $added")
   }
 
   test("no registered STREAMING query shuffles corpus gram STRINGS (micro-batch plans)") {
