@@ -8,11 +8,15 @@ package graft
   * job-equivalent - the dd probes are orchestration-bound, and the
   * stress-pass fusion (stressStressBcBlock) cannot move wall time at
   * fixture N because the N x N passes are <5% of it. (Those counts
-  * predate the single-stage ordered reductions and the dropped
-  * metadata job; rerun for current ones.) Also prints the
+  * predate the single-stage ordered reductions and the cuts listed in
+  * the `DamdsDistributed` header: one stats-and-metadata job, no
+  * cache-materializing count jobs, and a CG opened by the sigma/BC
+  * pass before it. That header's formula gives at most 3 + 3 x 21 =
+  * 66 jobs for this config, fewer when a CG breaks early; rerun for
+  * current counts.) Also prints the
   * FULL-precision stress, which repeats bit for bit from run to run:
   * every partial is folded in block-index order
-  * (`Collectives.orderedReduce`), not in task completion order. */
+  * (`DamdsDistributed.blockReduce`), not in task completion order. */
 object DamdsJobCount {
   def main(args: Array[String]): Unit = {
     import graft.damds.{Damds, DamdsKernels}

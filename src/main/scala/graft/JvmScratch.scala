@@ -21,9 +21,7 @@ object JvmScratch {
     * sessions, in place of Spark's default `spark-warehouse/` under the
     * working directory. One per JVM, so sessions opened one after
     * another share it; the layouts and bucketed tables they build go
-    * with the JVM. Its path is kept short: plan strings cut a scan's
-    * location at 100 characters, and the plan guards read the layout
-    * name that follows the warehouse in it. */
+    * with the JVM. */
   lazy val warehouse: String =
     Files.createDirectory(root.resolve("wh")).toString
 }

@@ -278,8 +278,8 @@ object Damds {
       rawBlocks: Dataset[DamdsBlock], initX: Array[Double], n: Int,
       cfg: Config): RunResult = {
     val d = cfg.targetDim
-    val r = DamdsDistributed.run(spark, rawBlocks, n, cfg) { (meta, part) =>
-      DamdsDistributed.split(spark, initX, meta, d, part)
+    val r = DamdsDistributed.run(spark, rawBlocks, n, cfg) { meta =>
+      DamdsDistributed.split(spark, initX, meta, d)
     }
     val x = DamdsDistributed.gather(r.xBlocks, r.meta, n, d)
     r.xBlocks.unpersist(false)

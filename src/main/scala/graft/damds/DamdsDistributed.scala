@@ -1,6 +1,8 @@
 package graft.damds
 
-import graft.collectives.Collectives.orderedReduce
+import scala.reflect.ClassTag
+
+import graft.collectives.Collectives.{orderedAggregate, vectorSum}
 import graft.damds.DamdsKernels._
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
@@ -19,7 +21,7 @@ import org.apache.spark.storage.StorageLevel
   * driver from the data plane entirely:
   *
   *  - **allgather instead of gather+broadcast**: each X/p block is
-  *    shipped once to every block's partition through one shuffle and
+  *    shipped once to every block key through one shuffle and
   *    assembled into the full N×d array locally — the same total
   *    volume a broadcast would move (every task needs all of X because
   *    V and B(Z) are dense), but peer-to-peer, with no single node
@@ -27,15 +29,40 @@ import org.apache.spark.storage.StorageLevel
   *  - **CG vector updates are per-block map jobs**: x += αp, r −= αAp,
   *    p = r + βp run on co-partitioned (x, p, r) blocks (narrow joins,
   *    no shuffle) — only the SCALARS α, β, rᵀr cross the driver, via
-  *    `Collectives.orderedReduce` over per-block partial dots (A9): one
-  *    single-stage job whose partials the driver folds in block-index
+  *    `blockReduce` over per-block partial dots (A9): one single-stage
+  *    job whose per-block values the driver folds in block-index
   *    order, so every scalar — and with it X and the stress — repeats
   *    bit for bit from run to run;
+  *  - **one partition per core, not per block**: the blocks hash onto
+  *    min(#blocks, cores) partitions. The loop is many short jobs, and
+  *    at fixture sizes a stage costs what its tasks cost to launch;
+  *    `blockReduce` makes the results independent of the
+  *    partitioning;
   *  - **plan-reset discipline**: each CG step's state is
   *    localCheckpoint-pinned, so lineage stays O(1) per step instead of
   *    accumulating one join chain per iteration (same reason the CC
   *    rounds checkpoint — task serialization goes superlinear
   *    otherwise).
+  *
+  * Jobs, each one single-stage reduction or collect over persisted
+  * inputs (no job runs only to materialize a cache):
+  *  - per run: 1 for the statistics and the block metadata together
+  *    (it also fixes the partitioner; the first σ/BC job keys,
+  *    repairs and caches the blocks, and allgathers the init X
+  *    straight from its blocks, in whatever partitioning they came);
+  *  - per temperature: 1 σ/BC pass for the pre-stress and the first
+  *    BC, which also computes the CG's opening r0 = BC − V·x0 and
+  *    folds its rᵀr with σ — none under a fixed stress schedule after
+  *    the first temperature, where the previous post pass computed all
+  *    three;
+  *  - per stress iteration: 2 per CG step (pAp, then rTr₁) and 1 post
+  *    pass, which also materializes the new X (and, under a fixed
+  *    schedule, opens the next CG); a threshold-driven schedule adds 1
+  *    BC pass before every CG but the temperature's first;
+  *  - `Damds.runViaDistributed` adds 1 to gather the final X.
+  * A fixed-schedule run of T temperatures with S stress loops and c
+  * CG steps each is therefore 3 + T·S·(2c + 1) jobs through
+  * `Damds.run` (stats, first σ/BC pass, the iterations, gather).
   *
   * `Damds.run` auto-dispatches here when N×d exceeds
   * `cfg.maxGatherDoubles`; call `run` directly (with block-structured
@@ -59,6 +86,17 @@ object DamdsDistributed {
     rdd
   }
 
+  /** A reduction over per-block values folded in block-index order,
+    * whatever the partitioning: one single-stage job returns every
+    * (index, value) pair, and the driver folds them left by index.
+    * So each scalar repeats bit for bit and equals the fold of one
+    * block per partition. Meant for scalar or short-vector values. */
+  private[damds] def blockReduce[T: ClassTag](rdd: RDD[(Int, T)])(
+      op: (T, T) => T): T =
+    orderedAggregate(rdd)(_.toVector)(_ ++ _)
+      .getOrElse(throw new UnsupportedOperationException("empty collection"))
+      .sortBy(_._1).map(_._2).reduceLeft(op)
+
   /** Shuffle-based allgather: every destination block key receives each
     * source block once and assembles the full flat N×d array locally.
     * One shuffle of nb·(N×d) doubles per call — identical volume to the
@@ -77,16 +115,18 @@ object DamdsDistributed {
     }
   }
 
-  /** Split a driver-resident flat N×d array into co-partitioned row
-    * blocks (entry/test convenience — at true scale initialize blocks
-    * directly, e.g. seeded per block). */
+  /** Split a driver-resident flat N×d array into row blocks, at most
+    * one partition per core (entry/test convenience — at true scale
+    * initialize blocks directly, e.g. seeded per block). Not
+    * co-partitioned with the distance blocks: `run` only allgathers its
+    * init, which ships every block to every partition anyway. */
   def split(spark: SparkSession, x: Array[Double], meta: Seq[BlockMeta],
-      d: Int, part: HashPartitioner): RDD[(Int, Array[Double])] =
+      d: Int): RDD[(Int, Array[Double])] =
     spark.sparkContext.parallelize(
       meta.map(m => (m.index,
         java.util.Arrays.copyOfRange(x, m.start * d,
           (m.start + m.blockRows) * d))),
-      meta.size).partitionBy(part)
+      math.min(meta.size, spark.sparkContext.defaultParallelism))
 
   /** Driver-side assemble of the final embedding (one-time, bounded by
     * the caller's own memory budget — the iterations never do this). */
@@ -100,6 +140,25 @@ object DamdsDistributed {
     out
   }
 
+  /** The CG's opening state for one row block: x0's rows, the
+    * residual r0 = BC − V·x0 (reference calculateMMRBC,
+    * CG.java:361-377) and r0ᵀr0, the block's share of the first rTr. */
+  private[damds] final case class CgStart(x: Array[Double],
+      r: Array[Double], rTr: Double)
+
+  /** `CgStart` of one block from the fully gathered x0 and the block's
+    * BC: x0's rows are sliced out of `xAll`, so the pass that computes
+    * BC opens the CG without a join on the X blocks. */
+  private[damds] def cgStartBlock(w: WeightBlock, v: Array[Double],
+      xAll: Array[Double], bc: Array[Double], d: Int): CgStart = {
+    val mm = mmBlock(w, v, xAll, d)
+    val r = new Array[Double](bc.length)
+    var i = 0
+    while (i < bc.length) { r(i) = bc(i) - mm(i); i += 1 }
+    CgStart(java.util.Arrays.copyOfRange(xAll, w.start * d,
+      (w.start + w.blockRows) * d), r, selfDot(r))
+  }
+
   /** N10/I2 with distributed vectors: same loop structure and break
     * semantics as `Damds.cg` (reference CG.java:74-153 — the break flag
     * is evaluated mid-body and honored at the loop close, so the final
@@ -107,21 +166,21 @@ object DamdsDistributed {
     * the gathered path only in floating summation order (per-block
     * partials folded in block-index order vs one driver loop).
     *
-    * r21 orchestration diet (guide §2.4 — remove shuffles/jobs outright):
-    *  - `x0All` is the caller's already-persisted allgather of x0, so
-    *    the first matvec does not re-shuffle the X the caller just
-    *    gathered for the stress/BC pass;
-    *  - each iteration's (x,p,r) checkpoint is the `updated` RDD itself
-    *    (materialized by the rTr1 reduction that must run anyway); the
-    *    p-direction update `p₁ = r + βp` is a lazy O(N·d) map over it,
-    *    so the old per-iteration `state.count()` job is gone;
+    * Two jobs per iteration and no others: pAp (whose job also
+    * materializes V·p) and rTr₁ (whose job materializes and
+    * checkpoints the updated (x, p, r) blocks). α must be known before
+    * rTr₁ exists, so the two cannot merge without a different
+    * recurrence, and with it different floating-point results.
+    *  - `start` and `rTr0` come from the caller's σ/BC pass, which
+    *    computed r0 = BC − V·x0 and folded its rTr with the stress;
+    *  - the p-direction update `p₁ = r + βp` is a lazy O(N·d) map over
+    *    the checkpoint, recomputed per consumer;
     *  - the returned X is a lazy view over the final checkpoint
     *    (`holder`), which the caller unpersists once its successor is
-    *    materialized — the old `xOut.count()` job is gone too.
-    * Scalar sequences (rTr, pAp, alpha, beta) are computed from the
-    * same per-block partials as the r20 loop; each reduction is one
-    * single-stage `orderedReduce` that folds the partials in
-    * block-index order, so the sequences repeat bit for bit. */
+    *    materialized.
+    * Each reduction is one single-stage `blockReduce` that folds the
+    * per-block partials in block-index order, so the scalar sequences
+    * (rTr, pAp, alpha, beta) repeat bit for bit. */
   private[damds] final case class CgResult(
       x: RDD[(Int, Array[Double])],
       holder: RDD[(Int, (Array[Double], Array[Double], Array[Double]))],
@@ -129,9 +188,7 @@ object DamdsDistributed {
 
   private[damds] def cg(
       vb: RDD[(Int, (WeightBlock, Array[Double]))],
-      x0: RDD[(Int, Array[Double])],
-      bcB: RDD[(Int, Array[Double])],
-      x0All: RDD[(Int, Array[Double])],
+      start: RDD[(Int, CgStart)], rTr0: Double,
       nb: Int, part: HashPartitioner, starts: Map[Int, Int],
       n: Int, d: Int, cgIter: Int, cgThreshold: Double, exactCG: Boolean)
       : CgResult = {
@@ -140,19 +197,12 @@ object DamdsDistributed {
         .mapValues { case ((w, v), pAll) => mmBlock(w, v, pAll, d) }
     // state: (x, p, r) blocks, co-partitioned with vb; every join below
     // is narrow (same partitioner), the only shuffle per step is the
-    // allgather inside mmD
-    val mmr = vb.join(x0All, part)
-      .mapValues { case ((w, v), pAll) => mmBlock(w, v, pAll, d) }
-    var holder = pinned(x0.join(bcB, part).join(mmr, part).mapValues {
-      case ((xA, bcA), mmA) =>
-        val p = new Array[Double](bcA.length)
-        var i = 0
-        while (i < bcA.length) { p(i) = bcA(i) - mmA(i); i += 1 }
-        (xA, p, p.clone())
-    })
+    // allgather inside mmD. p = r = r0 to start; nothing below writes
+    // into an array it did not allocate, so p may share r0's
+    var holder = pinned(start.mapValues(c => (c.x, c.r, c.r.clone())))
     var state: RDD[(Int, (Array[Double], Array[Double], Array[Double]))] =
       holder
-    var rTr = orderedReduce(state.values.map(t => selfDot(t._3)))(_ + _)
+    var rTr = rTr0
     val testEnd = rTr * cgThreshold
     var cgCount = 0
     var break = false
@@ -160,8 +210,8 @@ object DamdsDistributed {
       val ap = mmD(state.mapValues(_._2))
         .persist(StorageLevel.MEMORY_AND_DISK)
       cgCount += 1
-      val pAp = orderedReduce(state.join(ap, part).values
-        .map { case ((_, p, _), apA) => dot(p, apA) })(_ + _)
+      val pAp = blockReduce(state.join(ap, part)
+        .mapValues { case ((_, p, _), apA) => dot(p, apA) })(_ + _)
       val alpha = rTr / pAp
       if (rTr < testEnd && !exactCG) break = true
       val updated = pinned(state.join(ap, part).mapValues {
@@ -175,13 +225,11 @@ object DamdsDistributed {
       })
       // this reduction is the job that materializes (and checkpoints)
       // `updated` — the scalar it returns is needed for beta anyway
-      val rTr1 = orderedReduce(updated.values.map(t => selfDot(t._3)))(_ + _)
+      val rTr1 = blockReduce(updated.mapValues(t => selfDot(t._3)))(_ + _)
       val beta = rTr1 / rTr
       rTr = rTr1
       val prevHolder = holder
       holder = updated
-      // lazy O(N·d) view over the checkpoint — recomputed per consumer,
-      // which is cheaper than the extra materialization job it replaces
       state = updated.mapValues { case (x1, pA, r1) =>
         val p1 = new Array[Double](pA.length)
         var i = 0
@@ -194,80 +242,106 @@ object DamdsDistributed {
     CgResult(state.mapValues(_._1), holder, cgCount)
   }
 
+  /** A σ/BC pass that has also opened the CG on its BC: per block, the
+    * pass's σ partials and the `CgStart`. */
+  private type Opening = RDD[(Int, (Array[Double], CgStart))]
+
   /** Full annealed run (I3) with X distributed: `Damds.run`'s control
     * flow (temperature loop → stress loop → CG) where every N×d operand
     * lives as co-partitioned row blocks.
     *
-    * `initX` builds the initial X blocks from the block metadata and
-    * partitioner this run collects anyway, so a caller holding a flat
-    * N×d init splits it (`split`) without a metadata job of its own,
-    * which would decode every N×N block one extra time. A caller with
-    * block-structured init ignores both arguments. */
+    * `initX` builds the initial X blocks, in any partitioning, from the
+    * block metadata this run collects anyway, so a caller holding a
+    * flat N×d init splits it (`split`) without a metadata job of its
+    * own, which would decode every N×N block one extra time. A caller
+    * with block-structured init ignores the argument. */
   def run(spark: SparkSession, rawBlocks: Dataset[DamdsBlock], n: Int,
       cfg: Damds.Config)(
-      initX: (Seq[BlockMeta], HashPartitioner) => RDD[(Int, Array[Double])])
+      initX: Seq[BlockMeta] => RDD[(Int, Array[Double])])
       : RunResultD = {
     val d = cfg.targetDim
-    val st = Damds.statistics(rawBlocks)
+    // A6 statistics and the block metadata in one job; the stats fold
+    // as `Damds.statistics` folds them (in order within a partition,
+    // then in partition-index order)
+    val (st, unsorted) = orderedAggregate(rawBlocks.rdd) { it =>
+      val b0 = it.next()
+      var s = stats(b0.dist)
+      val ms = Vector.newBuilder[BlockMeta]
+      ms += BlockMeta(b0.index, b0.start, b0.blockRows)
+      it.foreach { b =>
+        s = s combine stats(b.dist)
+        ms += BlockMeta(b.index, b.start, b.blockRows)
+      }
+      (s, ms.result())
+    } { case ((s1, m1), (s2, m2)) => (s1 combine s2, m1 ++ m2) }
+      .getOrElse(throw new IllegalArgumentException("no DA-MDS blocks"))
+    val meta = unsorted.sortBy(_.index)
     val invs = 1.0 / st.sumSq
-    val repaired = Damds.updateDistances(rawBlocks, st.positiveMin)
-    val blocks = (
-      if (cfg.sammonFactor > 0.0)
-        repaired.map(b => b.copy(sammonFactor = cfg.sammonFactor,
-          avgDist = st.sum / st.count))(repaired.encoder)
-      else repaired
-    )
-    // key the blocks first and read the (tiny) metadata through the
-    // persisted RDD — collecting meta from the raw Dataset would run
-    // the whole decode chain one extra time
-    val keyed = blocks.rdd.map(b => (b.index, b))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val meta = keyed
-      .map { case (i, b) => BlockMeta(i, b.start, b.blockRows) }.collect()
-      .sortBy(_.index).toSeq
     val nb = meta.size
     val starts = meta.map(m => m.index -> m.start).toMap
-    val part = new HashPartitioner(nb)
-    val blocksK = keyed.partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    blocksK.count()
-    keyed.unpersist(false)
+    // one partition per core, not per block (see the header); the
+    // blocks' keying shuffle reads them coalesced to as many tasks
+    val part = new HashPartitioner(
+      math.min(nb, spark.sparkContext.defaultParallelism))
+    // the blocks keyed and co-partitioned with every X block, with the
+    // N8 floor repair and the N11 Sammon weighting of `Damds.run`
+    // applied per block; the first σ/BC job materializes them
+    val positiveMin = st.positiveMin
+    val sammonFactor = cfg.sammonFactor
+    val avgDist = st.sum / st.count
+    val blocksK = rawBlocks.rdd.coalesce(part.numPartitions)
+      .map(b => (b.index, b)).partitionBy(part)
+      .mapValues { b =>
+        val repaired = b.copy(dist = floorRepair(b.dist, positiveMin))
+        if (sammonFactor > 0.0)
+          repaired.copy(sammonFactor = sammonFactor, avgDist = avgDist)
+        else repaired
+      }.persist(StorageLevel.MEMORY_AND_DISK)
     val vbK = blocksK.mapValues(b => (weightView(b), vArray(b)))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // r21 (guide §2.4): every consumer of a given X joins one persisted
-    // allgather instead of re-shuffling it — stress, BC and the CG's
-    // first matvec previously each ran their own identical allgather.
+    // allgather instead of re-shuffling it.
     def gatherX(x: RDD[(Int, Array[Double])]): RDD[(Int, Array[Double])] =
       allgather(x, nb, part, starts, n, d)
         .persist(StorageLevel.MEMORY_AND_DISK)
 
     def stressG(xAll: RDD[(Int, Array[Double])], tCur: Double): Double =
-      orderedReduce(blocksK.join(xAll, part).values
-        .map { case (b, xA) => stressSigma(b, xA, d, tCur) })(_ + _) * invs
+      blockReduce(blocksK.join(xAll, part)
+        .mapValues { case (b, xA) => stressSigma(b, xA, d, tCur) })(_ + _) * invs
 
-    // fused σ+BC evaluation (one N×N pass, stressBcBlock): used where a
-    // stress value and a BC at the same (x, tCur) are both needed —
-    // i.e. the first stress iteration of every temperature step
-    def sigmaBcG(xAll: RDD[(Int, Array[Double])], tCur: Double)
-        : RDD[(Int, (Double, Array[Double]))] =
-      blocksK.join(xAll, part)
-        .mapValues { case (b, xA) => stressBcBlock(b, xA, d, tCur) }
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    // the pass that opens the next CG and its folded rTr, set by
+    // `openNext` and taken by the CG
+    var open: Opening = null
+    var openRTr = 0.0
 
-    def bcG(xAll: RDD[(Int, Array[Double])], tCur: Double)
-        : RDD[(Int, Array[Double])] =
-      blocksK.join(xAll, part)
-        .mapValues { case (b, xA) => bcBlock(b, xA, d, tCur) }
+    // One N×N pass over xAll that yields σ partials and a BC per block
+    // (`kernel`), and opens the next CG on that BC in the same task:
+    // blocksK ⋈ vbK ⋈ xAll are co-partitioned, so the join is narrow.
+    // Where a pass needs σ and BC at the same point it is the fused
+    // stressBcBlock (r21); where the temperature advances after a
+    // post-stress σ, the triple stressStressBcBlock (r22). Returns the
+    // σ sums. The pass's scalars (σ partials…, rTr) fold together in
+    // block-index order: each component sums in the same order as a
+    // reduction of its own would, and the one job materializes the pass
+    def openNext(xAll: RDD[(Int, Array[Double])])(
+        kernel: (DamdsBlock, Array[Double]) => (Array[Double], Array[Double]))
+        : Array[Double] = {
+      open = blocksK.join(vbK, part).join(xAll, part).mapValues {
+        case ((b, (w, v)), xA) =>
+          val (sigmas, bc) = kernel(b, xA)
+          (sigmas, cgStartBlock(w, v, xA, bc, d))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+      val sums = blockReduce(open.mapValues { case (s, c) => s :+ c.rTr })(
+        vectorSum)
+      openRTr = sums.last
+      sums.init
+    }
 
-    // r22 triple fusion (VERDICT r21 next 6): post-stress σ at tCur
-    // AND the next evaluation point's (σ, BC) at tNext in ONE N×N
-    // pass — see stressStressBcBlock
-    def sigmaSigmaBcG(xAll: RDD[(Int, Array[Double])], tCur: Double,
-        tNext: Double): RDD[(Int, (Double, Double, Array[Double]))] =
-      blocksK.join(xAll, part)
-        .mapValues { case (b, xA) => stressStressBcBlock(b, xA, d, tCur, tNext) }
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    def sigmaBc(tCur: Double)(b: DamdsBlock, xA: Array[Double]) = {
+      val (s, bc) = stressBcBlock(b, xA, d, tCur)
+      (Array(s), bc)
+    }
 
     try {
       val tMax = st.vmax / math.sqrt(2.0 * d)
@@ -275,9 +349,9 @@ object DamdsDistributed {
         tCur = cfg.alpha * tMax,
         tMin = cfg.tMinFactor * st.positiveMin / math.sqrt(2.0 * d),
         stress = 0.0, preStress = 0.0, tItr = 0, stressItr = 0, cgCount = 0)
-      var xb = pinned(initX(meta, part).partitionBy(part).mapValues(identity))
-      xb.count()
-      var xbHolder: RDD[_] = xb // backing cache of the current xb view
+      // X as self-contained pinned blocks: the init, then each CG's
+      // result. The job that runs X's allgather materializes it
+      var xb = pinned(initX(meta).mapValues(identity))
       var xAll = gatherX(xb)
       val log = scala.collection.mutable.ArrayBuffer[Double]()
       var done = false
@@ -292,38 +366,35 @@ object DamdsDistributed {
       // (maxStressLoops <= 0) branch on the post value itself, so they
       // keep the r21 flow — speculation there could waste a BC pass.
       val spec = cfg.maxStressLoops > 0
-      // (σ@tCur, BC@tCur) over the CURRENT xAll, carried from the
-      // previous temperature's speculative pass: (view, persisted holder)
-      var carried: (RDD[(Int, (Double, Array[Double]))], RDD[_]) = null
+      // σ·invs at the next temperature, when the post pass that opened
+      // its first CG (`open`) computed it
+      var nextPre = 0.0
       while (!done) {
-        // preStress and the first BC of this temperature share one
-        // fused block pass (the reduction below materializes it) —
-        // or arrive precomputed from the previous post pass
-        var fused: RDD[(Int, (Double, Array[Double]))] = null
-        var fusedHolder: RDD[_] = null
-        if (carried != null) {
-          fused = carried._1; fusedHolder = carried._2; carried = null
-        } else {
-          fused = sigmaBcG(xAll, state.tCur); fusedHolder = fused
-        }
-        state = state.copy(preStress =
-          orderedReduce(fused.values.map(_._1))(_ + _) * invs)
+        // preStress and the first BC (and CG opening) of this
+        // temperature share one block pass and one job
+        val pre =
+          if (open == null) openNext(xAll)(sigmaBc(state.tCur))(0) * invs
+          else nextPre
+        state = state.copy(preStress = pre)
         var diffStress = cfg.threshold + 1
         var stressIterations = 0
         var continueStress = true
         while (continueStress &&
             (diffStress >= cfg.threshold || cfg.maxStressLoops > 0)) {
-          val bcB =
-            if (fused != null) fused.mapValues(_._2)
-            else bcG(xAll, state.tCur)
-              .persist(StorageLevel.MEMORY_AND_DISK)
-          val bcHolder: RDD[_] = if (fused != null) fusedHolder else bcB
-          val res = cg(vbK, xb, bcB, xAll, nb, part, starts, n, d,
-            cfg.cgIter, cfg.cgThreshold, cfg.exactCG)
-          fused = null; fusedHolder = null
-          // the CG state is checkpointed, so its inputs can be released
-          // as soon as the post-stress job materializes the new X
-          val newXAll = gatherX(res.x)
+          if (open == null) {
+            val tCur = state.tCur
+            openNext(xAll) { (b, xA) =>
+              (Array.empty[Double], bcBlock(b, xA, d, tCur))
+            }
+          }
+          val opened = open
+          open = null
+          val res = cg(vbK, opened.mapValues(_._2), openRTr, nb, part,
+            starts, n, d, cfg.cgIter, cfg.cgThreshold, cfg.exactCG)
+          // the post job runs newX's allgather, which materializes the
+          // pinned copy; after it the CG's checkpoint can go
+          val newXb = pinned(res.x.mapValues(identity))
+          val newXAll = gatherX(newXb)
           // deterministic speculation targets (spec only)
           val willContinueStress =
             spec && stressIterations + 1 < cfg.maxStressLoops
@@ -334,27 +405,25 @@ object DamdsDistributed {
             if (willContinueStress) {
               // next iteration needs BC at the SAME tCur over newX —
               // the r21 pair kernel gives post-σ + that BC in one pass
-              val f2 = sigmaBcG(newXAll, state.tCur)
-              val p = orderedReduce(f2.values.map(_._1))(_ + _) * invs
-              fused = f2; fusedHolder = f2
-              p
+              openNext(newXAll)(sigmaBc(state.tCur))(0) * invs
             } else if (spec && !isLastTemp) {
               // stress loop ends, temperature advances: post-σ@tCur +
               // (σ, BC)@tNext over the same newX in ONE pass
-              val tNext = Damds.cooledTemp(state.tCur, state.tMin, cfg.alpha)
-              val f3 = sigmaSigmaBcG(newXAll, state.tCur, tNext)
-              val p = orderedReduce(f3.values.map(_._1))(_ + _) * invs
-              carried = (f3.mapValues(t => (t._2, t._3)), f3)
-              p
+              val tCur = state.tCur
+              val tNext = Damds.cooledTemp(tCur, state.tMin, cfg.alpha)
+              val Array(sigma, sigmaNext) = openNext(newXAll) { (b, xA) =>
+                val (sc, sn, bc) = stressStressBcBlock(b, xA, d, tCur, tNext)
+                (Array(sc, sn), bc)
+              }
+              nextPre = sigmaNext * invs
+              sigma * invs
             } else stressG(newXAll, state.tCur)
-          val prevXHolder = xbHolder
-          val prevXAll = xAll
-          xb = res.x
-          xbHolder = res.holder
+          res.holder.unpersist(false)
+          opened.unpersist(false)
+          xb.unpersist(false)
+          xAll.unpersist(false)
+          xb = newXb
           xAll = newXAll
-          prevXHolder.unpersist(false)
-          prevXAll.unpersist(false)
-          bcHolder.unpersist(false)
           diffStress = state.preStress - post
           state = state.copy(stress = post, preStress = post,
             stressItr = state.stressItr + 1,
@@ -372,16 +441,14 @@ object DamdsDistributed {
             tCur = Damds.cooledTemp(state.tCur, state.tMin, cfg.alpha))
         }
       }
-      // a carried pass can only leak if the done-decision ever diverged
-      // from isLastTemp — defensive cleanup, not an expected path
-      if (carried != null) carried._2.unpersist(false)
-      // hand back a self-contained pinned X (callers unpersist
-      // RunResultD.xBlocks; the (x,p,r) holder must not leak past run)
-      val xFinal = pinned(xb.mapValues(identity))
-      xFinal.count()
+      // an opened pass can only be left over if the done-decision ever
+      // diverged from isLastTemp — defensive cleanup, not an expected
+      // path
+      if (open != null) open.unpersist(false)
       xAll.unpersist(false)
-      xbHolder.unpersist(false)
-      RunResultD(xFinal, meta, state, log.toSeq)
+      // xb is pinned and materialized, and holds no CG state: the
+      // caller unpersists it (RunResultD.xBlocks)
+      RunResultD(xb, meta, state, log.toSeq)
     } finally {
       blocksK.unpersist()
       vbK.unpersist()

@@ -25,14 +25,15 @@ object TestSpark {
   }
 
   /** Scheduler counters of the jobs `body` runs: (jobs, completed
-    * stages, shuffle records written + read). The listener bus is
-    * drained before and after, so events of earlier work are not
-    * counted and none of `body`'s are missed. */
-  final case class Counts(jobs: Int, stages: Int, shuffleRecords: Long)
+    * stages, finished tasks, shuffle records written + read). The
+    * listener bus is drained before and after, so events of earlier
+    * work are not counted and none of `body`'s are missed. */
+  final case class Counts(jobs: Int, stages: Int, tasks: Int,
+      shuffleRecords: Long)
 
   def counting[T](body: => T): (T, Counts) = {
     val sc = spark.sparkContext
-    var jobs = 0; var stages = 0; var records = 0L
+    var jobs = 0; var stages = 0; var tasks = 0; var records = 0L
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -43,6 +44,7 @@ object TestSpark {
       override def onTaskEnd(
           e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         synchronized {
+          tasks += 1
           val m = e.taskMetrics
           if (m != null) records += m.shuffleWriteMetrics.recordsWritten +
             m.shuffleReadMetrics.recordsRead
@@ -53,7 +55,7 @@ object TestSpark {
     try {
       val out = body
       org.apache.spark.sql.GraftShims.waitListenerBus(sc)
-      (out, listener.synchronized(Counts(jobs, stages, records)))
+      (out, listener.synchronized(Counts(jobs, stages, tasks, records)))
     } finally sc.removeSparkListener(listener)
   }
 

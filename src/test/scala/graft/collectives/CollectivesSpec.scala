@@ -24,6 +24,35 @@ class CollectivesSpec extends AnyFunSuite {
     assert(seen.forall(_ == 48.0))
   }
 
+  test("allReduce folds per core: one job, no shuffle below the tree's fan-in rule (C2)") {
+    import spark.implicits._
+    val parts = 32
+    val len = 1000
+    def cell(i: Long, j: Int): Double = ((i * 31 + j) % 97).toDouble
+    val ds = spark.range(0L, parts.toLong, 1L, parts)
+      .map(i => Array.tabulate(len)(j => cell(i, j)))
+    val (bc, counts) = TestSpark.counting(
+      Collectives.allReduce[Array[Double]](spark, ds, Collectives.vectorSum))
+    // integer-valued cells: the sum is exact in any merge order
+    val want = Array.tabulate(len)(j => (0L until parts).map(cell(_, j)).sum)
+    assert(java.util.Arrays.equals(bc.value, want))
+    bc.destroy()
+    // one partial per core (coalesce is narrow), then treeAggregate's
+    // depth-2 rule: while the partial count p exceeds
+    // scale + ceil(p / scale), one more shuffle level of p / scale
+    // tasks, which writes and reads one record per partial. At 4 cores
+    // that is no level: 1 stage of 4 tasks, 0 shuffle records
+    val partials = math.min(parts, spark.sparkContext.defaultParallelism)
+    val scale = math.max(math.ceil(math.sqrt(partials.toDouble)).toInt, 2)
+    var p = partials
+    var stages = 1; var tasks = partials; var records = 0L
+    while (p > scale + math.ceil(p.toDouble / scale)) {
+      records += 2L * p; p /= scale; stages += 1; tasks += p
+    }
+    assert(counts == TestSpark.Counts(jobs = 1, stages = stages,
+      tasks = tasks, shuffleRecords = records), counts)
+  }
+
   test("vectorSum accumulates (not the reference Point2.add overwrite bug)") {
     val s = Collectives.vectorSum(Array(1.0, 2.0), Array(3.0, 4.0))
     assert(s.toSeq == Seq(4.0, 6.0))

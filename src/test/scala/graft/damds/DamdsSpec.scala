@@ -349,11 +349,16 @@ class DamdsSpec extends AnyFunSuite {
     val vbK = blocks.rdd.map(bl => (bl.index,
       (WeightBlock(bl.index, bl.start, bl.blockRows, bl.n, bl.weight),
         vArray(bl)))).partitionBy(part)
-    val x0b = DamdsDistributed.split(spark, x0, meta, d, part)
+    val x0b = DamdsDistributed.split(spark, x0, meta, d)
     val x0All = DamdsDistributed.allgather(x0b, meta.size, part, starts, n, d)
       .persist()
-    val res = DamdsDistributed.cg(vbK, x0b,
-      DamdsDistributed.split(spark, b, meta, d, part), x0All,
+    val start = vbK.join(x0All, part)
+      .join(DamdsDistributed.split(spark, b, meta, d), part)
+      .mapValues { case (((w, v), xA), bA) =>
+        DamdsDistributed.cgStartBlock(w, v, xA, bA, d) }
+    val rTr0 = graft.collectives.Collectives.orderedReduce(
+      start.values.map(_.rTr))(_ + _)
+    val res = DamdsDistributed.cg(vbK, start, rTr0,
       meta.size, part, starts, n, d,
       cgIter = 200, cgThreshold = 1e-14, exactCG = false)
     assert(res.cgCount > 0)
@@ -409,21 +414,30 @@ class DamdsSpec extends AnyFunSuite {
   }
 
   test("distributed anneal: pinned job and stage counts, bit-identical repeats") {
-    // every reduction is one single-stage ordered fold and the init is
-    // split from the anneal's own metadata collect: a reintroduced tree
-    // level or metadata job moves these counters
+    // every reduction is one single-stage ordered fold, the init is
+    // split from the anneal's own metadata collect, and the σ/BC passes
+    // open the CG: a reintroduced tree level, metadata, count or rTr
+    // job, or a re-partitioning of the init, moves these counters
     val rnd = new scala.util.Random(41)
     val initX = Array.fill(n * 2)(rnd.nextDouble() * 0.1)
     val cfg = Damds.Config(targetDim = 2, alpha = 0.3, cgIter = 3,
       exactCG = true, maxStressLoops = 1, maxTempLoops = 1,
       maxGatherDoubles = 1L)
-    // 6 blocks: enough partitions for a two-level treeReduce to add a
-    // stage
+    // 6 blocks on the 4 partitions of local[4]: two partitions hold two
+    // blocks, so a reduction that folded per partition instead of per
+    // block would miss the bit pins below
     val (a, counts) = graft.TestSpark.counting(
       Damds.run(spark, blocksDs(6), initX, n, cfg))
-    // before: 25 jobs (one more to collect the block metadata) and 54
-    // stages (a second treeReduce stage per reduction)
-    assert((counts.jobs, counts.stages) == ((24, 35)), counts)
+    // 17 jobs (DamdsDistributed's header: 3 + 2 temperatures × 1
+    // stress loop × (2 × 3 CG steps + 1 post pass))
+    assert((counts.jobs, counts.stages) == ((17, 27)), counts)
+    // stress, stress log and X, bit for bit as the 24-job anneal
+    // computed them: cutting jobs must not reorder any fold
+    assert(java.lang.Double.doubleToLongBits(a.state.stress) ==
+      4594767110467463626L)
+    assert(a.stressLog.map(java.lang.Double.doubleToLongBits) ==
+      Seq(4591917928058464646L, 4594767110467463626L))
+    assert(java.util.Arrays.hashCode(a.x) == -1627722356)
     val b = Damds.run(spark, blocksDs(6), initX, n, cfg)
     // the partials fold in block-index order, not task completion order
     assert(java.lang.Double.doubleToLongBits(a.state.stress) ==

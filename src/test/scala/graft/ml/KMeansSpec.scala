@@ -222,12 +222,14 @@ class KMeansSpec extends AnyFunSuite {
   }
 
   test("one stepBlock is 1 job, 1 stage and 0 shuffle records") {
+    // one task per partition of the 4-partition frame
     val rnd = new scala.util.Random(13)
     val pts = Seq.fill(2000)(Array(rnd.nextDouble(), rnd.nextDouble()))
     val df = frame(pts, 4)
     val cents = pts.take(16).map(_.clone()).toArray
     val (_, n) = TestSpark.counting(KMeans.stepBlock(df, cents))
-    assert(n == TestSpark.Counts(jobs = 1, stages = 1, shuffleRecords = 0L), n)
+    assert(n == TestSpark.Counts(jobs = 1, stages = 1, tasks = 4,
+      shuffleRecords = 0L), n)
   }
 
   test("fitLocal == fitBlock on a single partition (same update contract)") {

@@ -6,7 +6,8 @@ import graft.streaming.StreamRunner
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{array, size}
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,6 +25,24 @@ class PlanDisciplineSpec extends AnyFunSuite {
   private def plan(name: String): String =
     Catalog.queries(name)(spark, TestSpark.sf0001)
       .queryExecution.executedPlan.toString
+
+  /** The parquet scans of a plan, read off the tree (AQE stages,
+    * subqueries and cached relations included), not off the rendered
+    * string: the rendering cuts a scan's location at 100 characters,
+    * so a layout name after a long warehouse path would not show. */
+  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] =
+    KernelPlans.collectWithSubqueries(p) {
+      case f: FileSourceScanExec => Seq(f)
+      case m: InMemoryTableScanExec => fileScans(m.relation.cachedPlan)
+    }.flatten
+
+  /** Whether `scan` reads a directory whose path names `layout`. */
+  private def reads(scan: FileSourceScanExec, layout: String): Boolean =
+    scan.relation.location.rootPaths.exists(_.toString.contains(layout))
+
+  /** Whether `scan` prunes on partition column `col` before listing. */
+  private def prunes(scan: FileSourceScanExec, col: String): Boolean =
+    scan.partitionFilters.exists(_.references.exists(_.name == col))
 
   test("composed retrieval queries read the memoized ranking fronts") {
     // r22: v13/v22/v25 read the session-memoized bounded rankings
@@ -297,14 +316,11 @@ class PlanDisciplineSpec extends AnyFunSuite {
     // must carry a non-empty PartitionFilters on cell — files outside
     // the probed cells are skipped before a byte is read
     val p = VectorQueries.ivfDiskProbe(spark, TestSpark.sf0001, np = 2)
-      .queryExecution.executedPlan.toString
-    val scanLine = p.linesIterator.find(l =>
-      l.contains("FileScan parquet") && l.contains("graft_ivf_"))
+      .queryExecution.executedPlan
+    val scan = fileScans(p).find(reads(_, "graft_ivf_"))
       .getOrElse(fail(s"no ivf FileScan in plan:\n$p"))
-    val pf = "PartitionFilters: \\[([^\\]]*)\\]".r
-      .findFirstMatchIn(scanLine).map(_.group(1)).getOrElse("")
-    assert(pf.contains("cell") && pf.trim.nonEmpty,
-      s"no cell PartitionFilters on the ivf scan:\n$scanLine")
+    assert(prunes(scan, "cell"),
+      s"no cell PartitionFilters on the ivf scan:\n$scan")
   }
 
   test("v11 IVFADC disk probe prunes cell partitions at the file level") {
@@ -313,14 +329,11 @@ class PlanDisciplineSpec extends AnyFunSuite {
     // PartitionFilters — and the probe must equal the in-memory v09
     val p = VectorQueries.ivfPqDiskSearch(spark, TestSpark.sf0001,
         nprobe = 2, shortlist = 64)
-      .queryExecution.executedPlan.toString
-    val scanLine = p.linesIterator.find(l =>
-      l.contains("FileScan parquet") && l.contains("graft_ivfpq_"))
+      .queryExecution.executedPlan
+    val scan = fileScans(p).find(reads(_, "graft_ivfpq_"))
       .getOrElse(fail(s"no ivfpq FileScan in plan:\n$p"))
-    val pf = "PartitionFilters: \\[([^\\]]*)\\]".r
-      .findFirstMatchIn(scanLine).map(_.group(1)).getOrElse("")
-    assert(pf.contains("cell") && pf.trim.nonEmpty,
-      s"no cell PartitionFilters on the ivfpq scan:\n$scanLine")
+    assert(prunes(scan, "cell"),
+      s"no cell PartitionFilters on the ivfpq scan:\n$scan")
     val mem = Catalog.queries("v09_knn_ivfpq")(spark, TestSpark.sf0001)
       .collect().map(_.toString).toSet
     val disk = Catalog.queries("v11_knn_ivfpq_disk")(spark, TestSpark.sf0001)
@@ -513,14 +526,11 @@ class PlanDisciplineSpec extends AnyFunSuite {
     // the scan of the partitionBy(source) corpus must carry a non-empty
     // source PartitionFilters — other sources' files are never opened
     val p = TextQueries.d35Probe(spark, TestSpark.sf0001, "src1")
-      .queryExecution.executedPlan.toString
-    val scanLine = p.linesIterator.find(l =>
-      l.contains("FileScan parquet") && l.contains("graft_corpus_"))
+      .queryExecution.executedPlan
+    val scan = fileScans(p).find(reads(_, "graft_corpus_"))
       .getOrElse(fail(s"no corpus FileScan in plan:\n$p"))
-    val pf = "PartitionFilters: \\[([^\\]]*)\\]".r
-      .findFirstMatchIn(scanLine).map(_.group(1)).getOrElse("")
-    assert(pf.contains("source") && pf.trim.nonEmpty,
-      s"no source PartitionFilters on the corpus scan:\n$scanLine")
+    assert(prunes(scan, "source"),
+      s"no source PartitionFilters on the corpus scan:\n$scan")
   }
 
   test("q35 injects a runtime bloom filter on the fact side") {
@@ -840,10 +850,11 @@ class PlanDisciplineSpec extends AnyFunSuite {
     // rungs d91 adds (keeper elections, packing) are the remaining
     // exchanges. Zero scans of the raw corpus, never a cartesian or
     // a global sort
-    val p = Catalog.queries("d91_corpus_release")(spark, TestSpark.sf0001)
-      .queryExecution.executedPlan.toString
-    val scans = p.linesIterator.filter(_.contains("FileScan")).toSeq
-    assert(scans.nonEmpty && scans.forall(_.contains("graft_release")),
+    val plan = Catalog.queries("d91_corpus_release")(spark, TestSpark.sf0001)
+      .queryExecution.executedPlan
+    val p = plan.toString
+    val scans = fileScans(plan)
+    assert(scans.nonEmpty && scans.forall(reads(_, "graft_release")),
       s"a d91 rung re-scans the raw corpus instead of the ledger:\n$p")
     assert(scans.size <= 4,
       s"d91 should read only the release ledger (<=4 rung reads), " +
@@ -890,10 +901,11 @@ class PlanDisciplineSpec extends AnyFunSuite {
     // Generate (the chunk explode lives in the builder), and at most
     // two scans of the scored table (the budget window and the
     // epoch-join tail read it independently).
-    val p = Catalog.queries("d30_curation_manifest")(spark, TestSpark.sf0001)
-      .queryExecution.executedPlan.toString
-    val scans = p.linesIterator.filter(_.contains("FileScan")).toSeq
-    assert(scans.nonEmpty && scans.forall(_.contains("graft_cur_v1")),
+    val plan = Catalog.queries("d30_curation_manifest")(spark, TestSpark.sf0001)
+      .queryExecution.executedPlan
+    val p = plan.toString
+    val scans = fileScans(plan)
+    assert(scans.nonEmpty && scans.forall(reads(_, "graft_cur_v1")),
       s"d30 re-scans the raw corpus instead of the scored table:\n$p")
     assert(scans.size <= 2,
       s"d30 should read the scored table at most twice, got ${scans.size}:\n$p")
