@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Per-round benchmark main: runs every registered query on
   * SPARK_GRAFT_SF_DIR, emits one JSON line. A query that throws is
   * recorded with a NEGATIVE elapsed time and listed under "failed" —
@@ -141,213 +140,21 @@ object Bench {
       "bench JSON line carries an empty queries map")
   }
 
-  /** The n=32768 distributed-DAMDS probe body (the gather-cap curve's
-    * 4th point), shared by the opt-in in-sweep block and the
-    * standalone `graft.Damds32k` main. Returns (seconds, json
-    * fragment) — (-1, "") on failure. Seeded construction, so
-    * stress/cg_count double as the determinism checksum. */
-  private[graft] def damds32kProbe(spark: SparkSession): (Double, String) =
-    try {
-      import graft.damds.{Damds, DamdsKernels}
-      val nD = 32768; val dDim = 3; val splits = 32; val latent = 8
-      val rnd = new java.util.Random(53L)
-      val pts = Array.fill(nD, latent)(rnd.nextDouble())
-      val shorts = new Array[Short](nD * nD)
-      val rowMx = new Array[Double](nD)
-      java.util.stream.IntStream.range(0, nD).parallel().forEach { i =>
-        var mx = 0.0
-        var j = 0
-        while (j < nD) {
-          var s2 = 0.0; var k = 0
-          while (k < latent) {
-            val t = pts(i)(k) - pts(j)(k); s2 += t * t; k += 1
-          }
-          val dv = math.sqrt(s2)
-          if (dv > mx) mx = dv
-          j += 1
-        }
-        rowMx(i) = mx
-      }
-      val mx = rowMx.max
-      java.util.stream.IntStream.range(0, nD).parallel().forEach { i =>
-        var j = 0
-        while (j < nD) {
-          var s2 = 0.0; var k = 0
-          while (k < latent) {
-            val t = pts(i)(k) - pts(j)(k); s2 += t * t; k += 1
-          }
-          shorts(i * nD + j) = graft.mm.FixedPoint.encode(math.sqrt(s2) / mx)
-          j += 1
-        }
-      }
-      val blocks = graft.mm.MatrixIO.rowSplits(nD, splits).zipWithIndex
-        .map { case ((start, rows), idx) =>
-          DamdsKernels.DamdsBlock(idx, start, rows, nD,
-            java.util.Arrays.copyOfRange(shorts, start * nD, (start + rows) * nD),
-            Array.empty[Short])
-        }
-      val ds = spark.createDataset(blocks)(
-        org.apache.spark.sql.Encoders.product[DamdsKernels.DamdsBlock])
-      val rInit = new java.util.Random(59L)
-      val initX = Array.fill(nD * dDim)(rInit.nextDouble() - 0.5)
-      val cfg = Damds.Config(targetDim = dDim, cgIter = 10,
-        maxStressLoops = 1, maxTempLoops = 2, maxGatherDoubles = 1L)
-      // r21 (VERDICT r20 next 4): an untimed small-N warmup run first —
-      // the committed DD32K point's 2.7× sample spread was the FIRST
-      // sample paying JIT + cache/allocator warmup; this pre-pays the
-      // code-path part cheaply (~2 s vs a ~90 s third sample) so the
-      // timed samples read steady-state without the argument.
-      locally {
-        val nW = 2048; val sW = 16
-        val wRnd = new java.util.Random(61L)
-        val wShorts = Array.fill(nW * nW)(
-          (1 + wRnd.nextInt(Short.MaxValue - 1)).toShort)
-        val wBlocks = graft.mm.MatrixIO.rowSplits(nW, sW).zipWithIndex
-          .map { case ((start, rows), idx) =>
-            DamdsKernels.DamdsBlock(idx, start, rows, nW,
-              java.util.Arrays.copyOfRange(wShorts, start * nW, (start + rows) * nW),
-              Array.empty[Short])
-          }
-        val wDs = spark.createDataset(wBlocks)(
-          org.apache.spark.sql.Encoders.product[DamdsKernels.DamdsBlock])
-        val wInit = Array.fill(nW * dDim)(0.25)
-        // NonFatal only (ADVICE r21): swallowing a warmup OOM would
-        // silently corrupt the timed samples this warmup exists to
-        // stabilize — fatal errors must propagate
-        try Damds.run(spark, wDs, wInit, nW, cfg)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      val t0 = System.nanoTime()
-      val r = Damds.run(spark, ds, initX, nD, cfg)
-      val sec = (System.nanoTime() - t0) / 1e9
-      (sec,
-        s""","damds_dist_32k":{"n":$nD,"d":$dDim,"blocks":$splits,"sec":${Bench.fmt("%.3f", sec)},""" +
-          s""""stress":${Bench.fmt("%.4e", r.state.stress)},"cg_count":${r.state.cgCount}}""")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] damds_dist_32k probe FAILED: ${e.getMessage}")
-      (-1.0, "")
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir", JvmScratch.warehouse)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Status-listener retention, sized for a 600+-execution sweep
-      // (VERDICT r16 next 1 root cause): even with the UI off, the
-      // AppStatusListener and SQLAppStatusListener retain up to 1000
-      // jobs/stages/executions and 100k tasks BY DEFAULT — hundreds of
-      // multi-thousand-node plan graphs plus per-task metric rows that
-      // clearCache()/gc() cannot free. Over a 262-query sweep that
-      // old-gen ballast grew until late-sweep queries (s17, the
-      // probes) ran 3-9× slow with monotonically GROWING back-to-back
-      // samples — a GC signature, not a plan regression (isolated
-      // re-runs of the same queries on the same host sat at 1/4 of
-      // their sweep times; see BENCH_NOTES.md). A long-lived
-      // production driver would pin these exactly the same way.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "64")
-      .config("spark.ui.retainedStages", "128")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10")
-      // unload terminated streams' state-store providers on a 10 s
-      // maintenance tick instead of 60 s — a sweep section that starts
-      // ~50 streams in a minute would otherwise hold every final state
-      // map on heap at once
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "10s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    /** Materialize a query's FULL output through Spark's noop sink.
-      *
-      * r18 measurement-semantics fix (BENCH_NOTES): timing via
-      * `.count()` let Catalyst COLUMN-PRUNE every projection above the
-      * last aggregation/join — `groupBy().count()` needs no columns,
-      * so a map-only query's entire compute chain (entropy screens,
-      * extractors, scorers: 147 of 213 batch queries are
-      * projection-terminal) was optimized out and the row measured
-      * scan+filter only (d84: 0.16 s counted vs 1.8 s materialized,
-      * same session). The noop DataSourceV2 sink consumes every row
-      * with no pruning and no write cost — the standard Spark
-      * benchmarking sink — so from r18 every timed row is the cost of
-      * PRODUCING THE QUERY'S OUTPUT, which is what a consumer pays.
-      * Cross-round: r17-and-earlier `queries`/`queries_calib_norm`
-      * are NOT comparable for projection-terminal queries; the bridge
-      * table is in BENCH_NOTES. */
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    // Streaming-probe instrumentation: a session listener is the only
-    // way to reach a TERMINATED stream's progress (state-store rows,
-    // per-batch durations) from outside its runner — the queries stop
-    // their own streams before returning. The buffer collects across
-    // the whole run; the probes clear it, run one query, then drain.
-    val streamProg = new scala.collection.mutable.ArrayBuffer[
-      org.apache.spark.sql.streaming.StreamingQueryProgress]
-    // armed only inside streamRun: the listener must not accumulate
-    // progress objects across the whole 262-query sweep (old-gen
-    // ballast), and dis-arming after the drain keeps a late async
-    // event from one run out of the next run's buffer
-    val streamProgArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit =
-          if (streamProgArmed.get)
-            streamProg.synchronized { streamProg += e.progress }
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      })
-    /** Drain the armed progress buffer: poll until stable (2×100 ms),
-      * dis-arm, return the collected progress events. An EMPTY result
-      * after the full poll window is logged as a measurement failure
-      * (ADVICE r17) — a slow listener delivery must not read like
-      * "this query held no state". */
-    def drainStreamProgress(name: String): List[
-        org.apache.spark.sql.streaming.StreamingQueryProgress] = {
-      var prev = -1
-      var cur = streamProg.synchronized(streamProg.size)
-      var tries = 0
-      while ((cur != prev || cur == 0) && tries < 20) {
-        Thread.sleep(100)
-        prev = cur
-        cur = streamProg.synchronized(streamProg.size)
-        tries += 1
+    val cpus = GraftSession.cores
+    val spark = GraftSession(GraftSession.Sweep)
+    import ProbeKit.{materialize, minOf}
+    val streams = new ProbeKit.StreamProgress(spark)
+    /** Run one registered streaming query; see [[ProbeKit.StreamProgress]]. */
+    def streamRun(name: String, dir: String): ProbeKit.StreamRun =
+      streams.run(name)(materialize(SparkEntry.queries(name)(spark, dir)))
+    /** The least positive marginal of some runs; -1 when none drained. */
+    def bestMarginal(runs: Seq[ProbeKit.StreamRun]): Double =
+      runs.map(_.marginal).filter(_ > 0) match {
+        case s if s.nonEmpty => s.min
+        case _ => -1.0
       }
-      streamProgArmed.set(false)
-      val ps = streamProg.synchronized(streamProg.toList)
-      if (ps.isEmpty)
-        System.err.println(s"[bench] $name: progress drain timed out with an " +
-          "EMPTY buffer — a -1 state/batch reading for this run is a " +
-          "listener-delivery failure, not a state shape")
-      ps
-    }
-    /** Run one streaming DataFrame (built+executed inside the timed
-      * window, like the sweep) and return (wall sec, max state rows,
-      * summed in-batch execution sec). Listener delivery is async —
-      * poll until the buffer is stable (2×100 ms) before draining. */
-    def streamRunDf(label: String, df: => org.apache.spark.sql.DataFrame)
-        : (Double, Long, Double) = {
-      streamProg.synchronized(streamProg.clear())
-      streamProgArmed.set(true)
-      val t0 = System.nanoTime()
-      materialize(df)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val ps = drainStreamProgress(label)
-      val stateRows =
-        if (ps.isEmpty) -1L
-        else ps.map(_.stateOperators.map(_.numRowsTotal).sum).max
-      val batchSec = ps.map(p =>
-        Option(p.durationMs.get("triggerExecution"))
-          .map(_.longValue).getOrElse(0L)).sum / 1000.0
-      (wall, stateRows, batchSec)
-    }
-    /** Run one registered streaming query; see [[streamRunDf]]. */
-    def streamRun(name: String, dir: String): (Double, Long, Double) =
-      streamRunDf(name, SparkEntry.queries(name)(spark, dir))
     // ---- host-speed calibration machinery (r19: intra-sweep) ----
     // The single end-of-run calibration spin cannot see INTRA-sweep
     // contention windows: r18 committed d51/d52/d54 at 2-10× their
@@ -462,36 +269,28 @@ object Bench {
     val streamSplit =
       scala.collection.mutable.HashMap.empty[String, (Double, Double)]
     def once(name: String): Double = {
-      val isStream = name.startsWith("s")
-      if (isStream) {
-        streamProg.synchronized(streamProg.clear())
-        streamProgArmed.set(true)
-      }
       val t0 = System.nanoTime()
-      val ok =
-        try { materialize(SparkEntry.queries(name)(spark, sfDir)); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
+      def query(): Unit = materialize(SparkEntry.queries(name)(spark, sfDir))
+      try {
+        if (!name.startsWith("s")) ProbeKit.timed(query())._1
+        else {
+          val r = streams.run(name)(query())
+          if (r.marginal >= 0) {
+            // best wall among drain-SUCCESSFUL samples; a real split
+            // always replaces a -1 drain-timeout sentinel
+            if (streamSplit.get(name).forall(c => c._2 < 0 || c._1 > r.wall))
+              streamSplit(name) = (r.wall, r.marginal)
+          } else if (!streamSplit.contains(name))
+            // ADVICE r18: a query whose drains ALL time out must stay
+            // visible in the detail blocks — batch=-1 marks "wall is
+            // real, split unknown" instead of silently vanishing
+            streamSplit(name) = (r.wall, -1.0)
+          r.wall
         }
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (isStream) {
-        val ps = drainStreamProgress(name)
-        val batch = ps.map(p =>
-          Option(p.durationMs.get("triggerExecution"))
-            .map(_.longValue).getOrElse(0L)).sum / 1000.0
-        if (ok && ps.nonEmpty) {
-          // best wall among drain-SUCCESSFUL samples; a real split
-          // always replaces a -1 drain-timeout sentinel
-          if (streamSplit.get(name).forall(c => c._2 < 0 || c._1 > dt))
-            streamSplit(name) = (dt, batch)
-        } else if (ok && !streamSplit.contains(name))
-          // ADVICE r18: a query whose drains ALL time out must stay
-          // visible in the detail blocks — batch=-1 marks "wall is
-          // real, split unknown" instead of silently vanishing
-          streamSplit(name) = (dt, -1.0)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        -(System.nanoTime() - t0) / 1e9
       }
-      if (ok) dt else -dt
     }
     val sweepT0 = System.nanoTime()
     microCalib(force = true) // anchor the calib series at sweep start
@@ -570,6 +369,8 @@ object Bench {
       System.gc()
     }
     dropSweepState()
+    def best2(f: => org.apache.spark.sql.DataFrame): Double =
+      minOf(2)(materialize(f)).min
     // Raw probe seconds, collected so the detail file can publish a
     // calib-normalized view of each probe next to the per-query block
     // (the probes are single numbers the judge reads directly, and a
@@ -586,357 +387,82 @@ object Bench {
     // K-Means throughput probe against BASELINE.md's headline workload
     // (10M pts × k=1000 × d=2 × 10 iters in 93.8 s on p=320 ⇒ ~6.7e6
     // point-centroid dist-dims /core/sec). Same shape normalized to
-    // this box: 1M × k=100 × d=2 × 10 iters via the block pre-agg step
-    // (the reference's KMeansBlock plan). Deterministic hash points.
-    // One untimed warmup sweep + best-of-2 timed: the probe runs after
-    // 60+ queries, so a single timing is hostage to JIT/GC noise.
-    val km =
+    // this box: 1M × k=100 × d=2 × 10 iters via the block step (the
+    // reference's KMeansBlock plan), best-of-2 after a warmup step: the
+    // probe runs after 60+ queries, so a single timing is hostage to
+    // JIT/GC noise. The SAME-SHAPE row (VERDICT r14 next 5) runs
+    // BASELINE.md's 1M × k=1000 row itself, so that comparison is
+    // direct (r16 committed 8.6 s, an r17 single run 26 s, repro runs
+    // 3.1 s — all the same code: min-of-2 applies here too).
+    def kmeansProbe(key: String, k: Int, extra: String): String =
       try {
         microCalib(force = true)
-        import org.apache.spark.sql.functions._
-        val nPts = 1000000L; val k = 100; val d = 2; val iters = 10
-        val pts = spark.range(nPts).select(
-          array((0 until d).map(j =>
-            (pmod(xxhash64(col("id"), lit(j)), lit(1000000L)) / 1e6)): _*)
-            .as("v"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pts.count()
-        val init = pts.limit(k).collect()
-          .map(_.getAs[scala.collection.Seq[Double]]("v").toArray)
-        graft.ml.KMeans.stepBlock(pts, init) // warmup (JIT + codegen)
-        val sec = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          var c = init
-          for (_ <- 1 to iters) c = graft.ml.KMeans.stepBlock(pts, c)
-          (System.nanoTime() - t0) / 1e9
-        }.min
-        recordProbe("kmeans", sec)
-        pts.unpersist()
-        val opsPerCoreSec = nPts.toDouble * k * d * iters / sec / cpus.toInt
-        s""","kmeans":{"points":$nPts,"k":$k,"d":$d,"iters":$iters,"sec":${Bench.fmt("%.3f", sec)},""" +
-          s""""dist_dims_per_core_sec":${Bench.fmt("%.4g", opsPerCoreSec)},"baseline_dist_dims_per_core_sec":6.7e6}"""
+        val nPts = 1000000L; val d = ProbeKit.kmeansDim; val iters = 10
+        val probe = ProbeKit.kmeans(spark, nPts, k, iters)
+        val sec = try minOf(2)(probe.run()).min finally probe.close()
+        recordProbe(key, sec)
+        val opsPerCoreSec = nPts.toDouble * k * d * iters / sec / cpus
+        s""","$key":{"points":$nPts,"k":$k,"d":$d,"iters":$iters,"sec":${Bench.fmt("%.3f", sec)},""" +
+          s""""dist_dims_per_core_sec":${Bench.fmt("%.4g", opsPerCoreSec)},$extra"baseline_dist_dims_per_core_sec":6.7e6}"""
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] kmeans probe FAILED: ${e.getMessage}")
+        System.err.println(s"[bench] $key probe FAILED: ${e.getMessage}")
         ""
       }
-    // The SAME-SHAPE baseline probe (VERDICT r14 next 5): BASELINE.md's
-    // headline K-Means row is 1M pts × k=1000 × d=2 × 10 iters (Flink,
-    // p=320, 49.1 s ⇒ 6.7e6 dist-dims/core/sec); this row runs that
-    // exact shape so the comparison is direct, not normalized through
-    // the k=100 row's throughput. One untimed warmup iteration + two
-    // timed runs, min reported — a single run of the HEADLINE graded
-    // number proved hostage to host/GC windows (r16 committed 8.6 s,
-    // an r17 single-run snapshot 26 s, repro runs 3.1 s — all the
-    // same code; the sweep's min-of-2 discipline applies here too).
-    val km1k =
-      try {
-        microCalib(force = true)
-        import org.apache.spark.sql.functions._
-        val nPts = 1000000L; val k = 1000; val d = 2; val iters = 10
-        val pts = spark.range(nPts).select(
-          array((0 until d).map(j =>
-            (pmod(xxhash64(col("id"), lit(j)), lit(1000000L)) / 1e6)): _*)
-            .as("v"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pts.count()
-        val init = pts.limit(k).collect()
-          .map(_.getAs[scala.collection.Seq[Double]]("v").toArray)
-        graft.ml.KMeans.stepBlock(pts, init) // warmup (JIT + codegen)
-        val sec = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          var c = init
-          for (_ <- 1 to iters) c = graft.ml.KMeans.stepBlock(pts, c)
-          (System.nanoTime() - t0) / 1e9
-        }.min
-        recordProbe("kmeans_baseline_shape", sec)
-        pts.unpersist()
-        val opsPerCoreSec = nPts.toDouble * k * d * iters / sec / cpus.toInt
-        s""","kmeans_baseline_shape":{"points":$nPts,"k":$k,"d":$d,"iters":$iters,"sec":${Bench.fmt("%.3f", sec)},""" +
-          s""""dist_dims_per_core_sec":${Bench.fmt("%.4g", opsPerCoreSec)},"baseline_sec_at_p320":49.1,"baseline_dist_dims_per_core_sec":6.7e6}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] kmeans_baseline_shape probe FAILED: ${e.getMessage}")
-        ""
-      }
-    // GEMM throughput probe (N1 slice): seeded A (65536×256) blocks ×
-    // broadcast col-major B (256×128), naive kernel — reports GFLOP/s
-    // (no reference GEMM numbers exist; tracked round-over-round).
+    val km = kmeansProbe("kmeans", 100, "")
+    val km1k = kmeansProbe("kmeans_baseline_shape", 1000, "\"baseline_sec_at_p320\":49.1,")
+    // GEMM throughput probe (N1 slice), min-of-2 after a warmup run —
+    // reports GFLOP/s (no reference GEMM numbers exist; tracked
+    // round-over-round).
     val gm =
       try {
         microCalib(force = true)
-        import org.apache.spark.sql.functions._
-        val m = 65536; val kk = 256; val nn = 128
-        val bCol = graft.mm.Gemm.toColMajor(
-          graft.mm.MatrixIO.randomMatrix(kk, nn, seed = 5L), kk, nn)
-        val bBc = spark.sparkContext.broadcast(bCol)
-        import spark.implicits._
-        val a = spark.range(m).select(
-          $"id", array((0 until kk).map(j =>
-            (pmod(xxhash64($"id", lit(j)), lit(1000L)) / 1000.0)): _*).as("v"))
-          .as[(Long, Seq[Double])]
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        a.count()
-        def sweep(): (Double, Double) = {
-          val t0 = System.nanoTime()
-          val sum = a.mapPartitions { it =>
-            val rows = it.toArray
-            if (rows.isEmpty) Iterator.empty
-            else {
-              val nr = rows.length
-              val flat = new Array[Double](nr * kk)
-              var i = 0
-              while (i < nr) {
-                val v = rows(i)._2
-                var j = 0
-                while (j < kk) { flat(i * kk + j) = v(j); j += 1 }
-                i += 1
-              }
-              val c = graft.mm.Gemm.gemm(flat, nr, kk, bBc.value, nn)
-              var s = 0.0; var x = 0
-              while (x < c.length) { s += c(x); x += 1 }
-              Iterator.single(s)
-            }
-          }.reduce(_ + _)
-          ((System.nanoTime() - t0) / 1e9, sum)
-        }
-        sweep() // warmup (JIT + codegen)
-        val (sec, sum) = Seq(sweep(), sweep()).minBy(_._1)
+        val probe = ProbeKit.gemm(spark)
+        val runs = try minOf(2)(probe.run()) finally probe.close()
+        val (m, kk, nn) = (ProbeKit.gemmM, ProbeKit.gemmK, ProbeKit.gemmN)
+        val sec = runs.min
         recordProbe("gemm", sec)
-        a.unpersist(); bBc.destroy()
         val gflops = 2.0 * m * kk * nn / sec / 1e9
-        s""","gemm":{"m":$m,"k":$kk,"n":$nn,"sec":${Bench.fmt("%.3f", sec)},"gflops":${Bench.fmt("%.3f", gflops)},"checksum":${Bench.fmt("%.6g", sum)}}"""
+        s""","gemm":{"m":$m,"k":$kk,"n":$nn,"sec":${Bench.fmt("%.3f", sec)},"gflops":${Bench.fmt("%.3f", gflops)},"checksum":${Bench.fmt("%.6g", runs.best)}}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] gemm probe FAILED: ${e.getMessage}")
         ""
       }
-    // Distributed-DAMDS probe: the 100 TB anneal path (X never on the
+    // Distributed-DAMDS probes: the 100 TB anneal path (X never on the
     // driver) has spec parity with the gathered path but, unbenched, an
     // allgather/checkpoint cost regression would be invisible
-    // round-over-round (VERDICT r9). Same loop shape as n02 (2 temp
-    // loops × 1 stress loop, cgIter 10) at 2× its N with a tiny
-    // maxGatherDoubles forcing the DamdsDistributed dispatch; input is
-    // a seeded synthetic distance matrix, so `stress`/`cg_count` double
-    // as a determinism checksum across rounds.
-    val dd =
+    // round-over-round (VERDICT r9). n = 256 is orchestration-dominated;
+    // at 4096 and 16384 each CG matvec moves real data through the
+    // allgather, so the curve has a measured slope (VERDICT r13 next 7,
+    // r16 next 7). The job count is iteration-bound, so a superlinear
+    // time ratio indicts the per-job data path. Seeded inputs, so
+    // stress/cg_count double as a determinism checksum; min-of-2 on
+    // every leg (r21: a single-sample leg was the last silent
+    // contention hole — the 16k leg read 54 s in one sweep against
+    // 8.6-11 s paired-isolated). Only n = 256 takes an untimed warmup
+    // run; the larger legs are warmed by it.
+    def damdsProbe(key: String, size: String, warmup: Boolean,
+        stressJson: Double => String): String =
       try {
         microCalib(force = true)
-        import graft.damds.{Damds, DamdsKernels}
-        val nD = 256; val dDim = 3; val splits = 16; val latent = 8
-        val rnd = new java.util.Random(11L)
-        val pts = Array.fill(nD, latent)(rnd.nextDouble())
-        val dist = new Array[Double](nD * nD)
-        var mx = 0.0
-        var i = 0
-        while (i < nD) {
-          var j = 0
-          while (j < nD) {
-            var s2 = 0.0; var k = 0
-            while (k < latent) {
-              val t = pts(i)(k) - pts(j)(k); s2 += t * t; k += 1
-            }
-            val dv = math.sqrt(s2)
-            dist(i * nD + j) = dv
-            if (dv > mx) mx = dv
-            j += 1
-          }
-          i += 1
-        }
-        val shorts = dist.map(v => graft.mm.FixedPoint.encode(v / mx))
-        val blocks = graft.mm.MatrixIO.rowSplits(nD, splits).zipWithIndex
-          .map { case ((start, rows), idx) =>
-            DamdsKernels.DamdsBlock(idx, start, rows, nD,
-              java.util.Arrays.copyOfRange(shorts, start * nD, (start + rows) * nD),
-              Array.empty[Short])
-          }
-        val ds = spark.createDataset(blocks)(
-          org.apache.spark.sql.Encoders.product[DamdsKernels.DamdsBlock])
-        val rInit = new java.util.Random(17L)
-        val initX = Array.fill(nD * dDim)(rInit.nextDouble() - 0.5)
-        val cfg = Damds.Config(targetDim = dDim, cgIter = 10,
-          maxStressLoops = 1, maxTempLoops = 2, maxGatherDoubles = 1L)
-        Damds.run(spark, ds, initX, nD, cfg) // warmup
-        val runs = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          val r = Damds.run(spark, ds, initX, nD, cfg)
-          ((System.nanoTime() - t0) / 1e9, r)
-        }
-        val (sec, r) = runs.minBy(_._1)
-        recordProbe("damds_dist", sec)
-        s""","damds_dist":{"n":$nD,"d":$dDim,"blocks":$splits,"sec":${Bench.fmt("%.3f", sec)},""" +
-          s""""stress":${Bench.fmt("%.6f", math.rint(r.state.stress * 1e6) / 1e6)},"cg_count":${r.state.cgCount}}"""
+        val sz = ProbeKit.damdsSizes(size)
+        val probe = ProbeKit.damds(spark, sz)
+        if (warmup) probe.run()
+        val runs = try minOf(2)(probe.run()) finally probe.close()
+        val (sec, r) = (runs.min, runs.best)
+        recordProbe(key, sec)
+        s""","$key":{"n":${sz.n},"d":${ProbeKit.damdsConfig.targetDim},"blocks":${sz.splits},"sec":${Bench.fmt("%.3f", sec)},""" +
+          s""""stress":${stressJson(r.state.stress)},"cg_count":${r.state.cgCount}}"""
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] damds_dist probe FAILED: ${e.getMessage}")
+        System.err.println(s"[bench] $key probe FAILED: ${e.getMessage}")
         ""
       }
-    // Large distributed-DAMDS probe (VERDICT r13 next 7): n=256 is
-    // orchestration-dominated — at n=4096 x 32 blocks each CG matvec
-    // moves real data through the shuffle-allgather path (16.7M-cell
-    // distance matrix, 512 KB of block rows per allgather), so a
-    // regression in the distributed kernels' THROUGHPUT (not just
-    // their job count) becomes visible round-over-round. Same seeded
-    // synthetic construction, so stress/cg_count double as the
-    // determinism checksum; one timed run (the small probe already
-    // warmed the code path, and the matrix build itself is ~10^9
-    // driver flops we don't want to pay twice).
-    val dd4k =
-      try {
-        microCalib(force = true)
-        import graft.damds.{Damds, DamdsKernels}
-        val nD = 4096; val dDim = 3; val splits = 32; val latent = 8
-        val rnd = new java.util.Random(29L)
-        val pts = Array.fill(nD, latent)(rnd.nextDouble())
-        val shorts = new Array[Short](nD * nD)
-        var mx = 0.0
-        var i = 0
-        while (i < nD) { // max distance first (two passes beat storing doubles)
-          var j = 0
-          while (j < nD) {
-            var s2 = 0.0; var k = 0
-            while (k < latent) {
-              val t = pts(i)(k) - pts(j)(k); s2 += t * t; k += 1
-            }
-            val dv = math.sqrt(s2)
-            if (dv > mx) mx = dv
-            j += 1
-          }
-          i += 1
-        }
-        i = 0
-        while (i < nD) {
-          var j = 0
-          while (j < nD) {
-            var s2 = 0.0; var k = 0
-            while (k < latent) {
-              val t = pts(i)(k) - pts(j)(k); s2 += t * t; k += 1
-            }
-            shorts(i * nD + j) = graft.mm.FixedPoint.encode(math.sqrt(s2) / mx)
-            j += 1
-          }
-          i += 1
-        }
-        val blocks = graft.mm.MatrixIO.rowSplits(nD, splits).zipWithIndex
-          .map { case ((start, rows), idx) =>
-            DamdsKernels.DamdsBlock(idx, start, rows, nD,
-              java.util.Arrays.copyOfRange(shorts, start * nD, (start + rows) * nD),
-              Array.empty[Short])
-          }
-        val ds = spark.createDataset(blocks)(
-          org.apache.spark.sql.Encoders.product[DamdsKernels.DamdsBlock])
-        val rInit = new java.util.Random(31L)
-        val initX = Array.fill(nD * dDim)(rInit.nextDouble() - 0.5)
-        val cfg = Damds.Config(targetDim = dDim, cgIter = 10,
-          maxStressLoops = 1, maxTempLoops = 2, maxGatherDoubles = 1L)
-        // r21 (VERDICT r20 next 1): min-of-2 like every graded row — a
-        // single-sample probe leg was the one place a contended window
-        // still committed silently (this run's own baseline sweep read
-        // the 16k leg at 54 s where paired isolated runs read 8.6-11)
-        val runs = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          val r = Damds.run(spark, ds, initX, nD, cfg)
-          ((System.nanoTime() - t0) / 1e9, r)
-        }
-        val (sec, r) = runs.minBy(_._1)
-        recordProbe("damds_dist_4k", sec)
-        s""","damds_dist_4k":{"n":$nD,"d":$dDim,"blocks":$splits,"sec":${Bench.fmt("%.3f", sec)},""" +
-          s""""stress":${Bench.fmt("%.6f", math.rint(r.state.stress * 1e6) / 1e6)},"cg_count":${r.state.cgCount}}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] damds_dist_4k probe FAILED: ${e.getMessage}")
-        ""
-      }
-    // Third distributed-DAMDS point (VERDICT r16 next 7): n=16384 ×
-    // 32 blocks — 16× the 4k probe's distance cells (268M), 2 MB of
-    // X per allgather — so the gather-cap dispatch path now has a
-    // measured SLOPE (256 → 4096 → 16384), not one point. The job
-    // count is iteration-bound (identical to the 4k probe), so a
-    // superlinear time ratio here would indict the per-job data path
-    // (allgather/kernel), which is exactly what a 100× cluster run
-    // stresses. Matrix build parallelized across cores (driver-side
-    // ~4e9 flops, ~seconds wide, untimed); one timed run, warmed by
-    // the smaller probes; stress/cg_count = determinism checksum.
-    val dd16k =
-      try {
-        microCalib(force = true)
-        import graft.damds.{Damds, DamdsKernels}
-        val nD = 16384; val dDim = 3; val splits = 32; val latent = 8
-        val rnd = new java.util.Random(41L)
-        val pts = Array.fill(nD, latent)(rnd.nextDouble())
-        val shorts = new Array[Short](nD * nD)
-        val rowMx = new Array[Double](nD)
-        java.util.stream.IntStream.range(0, nD).parallel().forEach { i =>
-          var mx = 0.0
-          var j = 0
-          while (j < nD) {
-            var s2 = 0.0; var k = 0
-            while (k < latent) {
-              val t = pts(i)(k) - pts(j)(k); s2 += t * t; k += 1
-            }
-            val dv = math.sqrt(s2)
-            if (dv > mx) mx = dv
-            j += 1
-          }
-          rowMx(i) = mx
-        }
-        val mx = rowMx.max
-        java.util.stream.IntStream.range(0, nD).parallel().forEach { i =>
-          var j = 0
-          while (j < nD) {
-            var s2 = 0.0; var k = 0
-            while (k < latent) {
-              val t = pts(i)(k) - pts(j)(k); s2 += t * t; k += 1
-            }
-            shorts(i * nD + j) = graft.mm.FixedPoint.encode(math.sqrt(s2) / mx)
-            j += 1
-          }
-        }
-        val blocks = graft.mm.MatrixIO.rowSplits(nD, splits).zipWithIndex
-          .map { case ((start, rows), idx) =>
-            DamdsKernels.DamdsBlock(idx, start, rows, nD,
-              java.util.Arrays.copyOfRange(shorts, start * nD, (start + rows) * nD),
-              Array.empty[Short])
-          }
-        val ds = spark.createDataset(blocks)(
-          org.apache.spark.sql.Encoders.product[DamdsKernels.DamdsBlock])
-        val rInit = new java.util.Random(43L)
-        val initX = Array.fill(nD * dDim)(rInit.nextDouble() - 0.5)
-        val cfg = Damds.Config(targetDim = dDim, cgIter = 10,
-          maxStressLoops = 1, maxTempLoops = 2, maxGatherDoubles = 1L)
-        // r21: min-of-2 (the dd4k rationale — single-sample legs are
-        // the last silent contention hole; this leg read 54 s in the
-        // r21 baseline sweep vs 8.6-11 paired-isolated)
-        val runs = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          val r = Damds.run(spark, ds, initX, nD, cfg)
-          ((System.nanoTime() - t0) / 1e9, r)
-        }
-        val (sec, r) = runs.minBy(_._1)
-        recordProbe("damds_dist_16k", sec)
-        // stress at this n sits below the 6dp grid the smaller probes
-        // print, so the checksum keeps full significant digits
-        s""","damds_dist_16k":{"n":$nD,"d":$dDim,"blocks":$splits,"sec":${Bench.fmt("%.3f", sec)},""" +
-          s""""stress":${Bench.fmt("%.4e", r.state.stress)},"cg_count":${r.state.cgCount}}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] damds_dist_16k probe FAILED: ${e.getMessage}")
-        ""
-      }
-    // Fourth distributed-DAMDS point, OPT-IN (VERDICT r17 next 8):
-    // n=32768 × 32 blocks is 4× the 16k probe's distance cells (1.07B
-    // shorts, ~2.1 GB driver build) and minutes of runtime — too heavy
-    // to pay every round, so SPARK_GRAFT_DAMDS_32K=1 enables it for
-    // one-off curve extensions; the measured point is committed to
-    // BENCH_NOTES.md with its provenance. Same seeded construction —
-    // stress/cg_count are the determinism checksum.
-    // NEEDS A LARGE HEAP (SBT_OPTS=-Xmx24g or similar): the 2.1 GB
-    // distance build + per-block copies + the dataset's task-side
-    // deserialized copies overflow the default ~10 GB local-mode heap
-    // with an executor OOM that destabilizes every later probe in the
-    // same JVM — run it alone, not inside a graded sweep.
-    val dd32k =
-      if (!sys.env.get("SPARK_GRAFT_DAMDS_32K").contains("1")) ""
-      else {
-        microCalib(force = true)
-        val (sec, js) = Bench.damds32kProbe(spark)
-        if (sec > 0) recordProbe("damds_dist_32k", sec)
-        js
-      }
+    def stress6dp(v: Double) = Bench.fmt("%.6f", math.rint(v * 1e6) / 1e6)
+    val dd = damdsProbe("damds_dist", "n256", warmup = true, stress6dp)
+    val dd4k = damdsProbe("damds_dist_4k", "n4k", warmup = false, stress6dp)
+    // stress at this n sits below the 6dp grid the smaller probes
+    // print, so the checksum keeps full significant digits
+    val dd16k = damdsProbe("damds_dist_16k", "n16k", warmup = false,
+      Bench.fmt("%.4e", _))
     // Scaling-slope probe (VERDICT r14 next 6): the only evidence
     // local[32] can give for the 100× question is a measured exponent,
     // so the flagship families run once at sf0.1 and once at a 10×
@@ -1011,17 +537,12 @@ object Bench {
           try {
             val legs = Seq("sf01" -> sfDir, "x10" -> scaledDir).map {
               case (tag, dir) =>
-                val t0 = System.nanoTime()
-                materialize(graft.operators.TextQueries.releaseLedger(spark, dir))
-                val first = (System.nanoTime() - t0) / 1e9
-                val t1 = System.nanoTime()
-                materialize(graft.operators.TextQueries.releaseLedger(spark, dir))
-                val read = (System.nanoTime() - t1) / 1e9
-                val comp = (1 to 2).map { _ =>
-                  val t = System.nanoTime()
-                  materialize(SparkEntry.queries("d91_corpus_release")(spark, dir))
-                  (System.nanoTime() - t) / 1e9
-                }.min
+                def ledger(): Double = ProbeKit.timed(materialize(
+                  graft.operators.TextQueries.releaseLedger(spark, dir)))._1
+                val first = ledger()
+                val read = ledger()
+                val comp = minOf(2)(materialize(
+                  SparkEntry.queries("d91_corpus_release")(spark, dir))).min
                 (tag, first, read, comp)
             }
             // r21 (VERDICT r20 next 1): the r20 DRIVER run committed
@@ -1037,11 +558,8 @@ object Bench {
               probeRerunsOut += "d91_decomp"
               legsF = legs.map { case (tag, first, read, comp) =>
                 val dir = if (tag == "sf01") sfDir else scaledDir
-                val comp2 = (1 to 2).map { _ =>
-                  val t = System.nanoTime()
-                  materialize(SparkEntry.queries("d91_corpus_release")(spark, dir))
-                  (System.nanoTime() - t) / 1e9
-                }.min
+                val comp2 = minOf(2)(materialize(
+                  SparkEntry.queries("d91_corpus_release")(spark, dir))).min
                 (tag, first, read, math.min(comp, comp2))
               }
             }
@@ -1091,12 +609,7 @@ object Bench {
         def best2T(name: String, dir: String): (Double, Double) = {
           microCalib()
           val t = tNow()
-          val sec = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            materialize(SparkEntry.queries(name)(spark, dir))
-            (System.nanoTime() - t0) / 1e9
-          }.min
-          (sec, t)
+          (best2(SparkEntry.queries(name)(spark, dir)), t)
         }
         // r21 (VERDICT r20 next 1 — the last silent-wild-number hole):
         // when a leg pair's ratio lands >legRerunFactor× off the
@@ -1325,14 +838,12 @@ object Bench {
           def legPair(): (Double, Double, Long, Double, Double, Long) = {
             microCalib()
             val tb = tNow()
-            val (b1, st1, _) = streamRun(n, sfDir)
-            val (b2, st1b, _) = streamRun(n, sfDir)
+            val b = Seq.fill(2)(streamRun(n, sfDir))
             microCalib()
             val tx = tNow()
-            val (x1, stx, _) = streamRun(n, streamDir)
-            val (x2, stxb, _) = streamRun(n, streamDir)
-            (math.min(b1, b2), tb, math.max(st1, st1b),
-              math.min(x1, x2), tx, math.max(stx, stxb))
+            val x = Seq.fill(2)(streamRun(n, streamDir))
+            (b.map(_.wall).min, tb, b.map(_.stateRows).max,
+              x.map(_.wall).min, tx, x.map(_.stateRows).max)
           }
           var (base, tb, str, x10, tx, strx) = legPair()
           if (Bench.legNeedsRerun(x10 / base,
@@ -1370,12 +881,6 @@ object Bench {
                 def ledger() =
                   graft.operators.TextQueries.copyFlowLedgerBucketed(spark, dir)
                 materialize(ledger()) // first touch untimed (build memoized)
-                def best2(f: => org.apache.spark.sql.DataFrame): Double =
-                  (1 to 2).map { _ =>
-                    val t0 = System.nanoTime()
-                    materialize(f)
-                    (System.nanoTime() - t0) / 1e9
-                  }.min
                 val sites = best2(
                   graft.operators.TextQueries.gramSitesSrc(docs))
                 val ledgerSec = best2(ledger())
@@ -1457,24 +962,11 @@ object Bench {
     val s04Decomp =
       try {
         microCalib(force = true)
-        def best2(f: => org.apache.spark.sql.DataFrame): Double =
-          (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            materialize(f)
-            (System.nanoTime() - t0) / 1e9
-          }.min
         val batchJoin = best2(SparkEntry.queries("q24_interval_join")(spark, sfDir))
         def leg(lat: String, parts: Int): (Double, Double, Long) = {
-          val runs = (1 to 2).map { _ =>
-            streamRunDf(s"s04_decomp",
-              graft.operators.StreamingQueries.s04Probe(spark, sfDir, lat, parts))
-          }
-          val bestWall = runs.map(_._1).min
-          val bestMarg = runs.map(_._3).filter(_ > 0) match {
-            case s if s.nonEmpty => s.min
-            case _ => -1.0
-          }
-          (bestWall, bestMarg, runs.map(_._2).max)
+          val runs = Seq.fill(2)(streams.run("s04_decomp")(materialize(
+            graft.operators.StreamingQueries.s04Probe(spark, sfDir, lat, parts))))
+          (runs.map(_.wall).min, bestMarginal(runs), runs.map(_.stateRows).max)
         }
         val (w8, m8, st8) = leg("1 hour", 8)       // the registered form
         val (w0, m0, st0) = leg("0 seconds", 8)    // watermark-slack leg
@@ -1504,29 +996,18 @@ object Bench {
     val s09Decomp =
       try {
         microCalib(force = true)
-        def best2(f: => org.apache.spark.sql.DataFrame): Double =
-          (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            materialize(f)
-            (System.nanoTime() - t0) / 1e9
-          }.min
         val proj = best2(
           graft.operators.TextQueries.s09BandedProjection(spark, sfDir))
         val join = best2(
           graft.operators.TextQueries.s09BatchJoin(spark, sfDir))
-        val runs = (1 to 2).map { _ =>
-          streamRun("s09_stream_lsh_pairs", sfDir)
-        }
-        val wall = runs.map(_._1).min
-        val marg = runs.map(_._3).filter(_ > 0) match {
-          case s if s.nonEmpty => s.min
-          case _ => -1.0
-        }
+        val runs = Seq.fill(2)(streamRun("s09_stream_lsh_pairs", sfDir))
+        val wall = runs.map(_.wall).min
+        val marg = bestMarginal(runs)
         s""","s09_decomp":{"sigs_proj_sec":${Bench.fmt("%.3f", proj)},""" +
           s""""batch_join_sec":${Bench.fmt("%.3f", join)},""" +
           s""""stream_wall_sec":${Bench.fmt("%.3f", wall)},""" +
           s""""stream_marginal_sec":${Bench.fmt("%.3f", marg)},""" +
-          s""""state_rows":${runs.map(_._2).max}}"""
+          s""""state_rows":${runs.map(_.stateRows).max}}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] s09 decomp FAILED: ${e.getMessage}")
         ""
@@ -1543,24 +1024,13 @@ object Bench {
     val s41Decomp =
       try {
         microCalib(force = true)
-        def best2(f: => org.apache.spark.sql.DataFrame): Double =
-          (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            materialize(f)
-            (System.nanoTime() - t0) / 1e9
-          }.min
         import org.apache.spark.sql.functions.col
         val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
           .select(col("vec_id"), graft.vec.VectorOps.toDouble(col("embedding")).as("v"))
         val fold = best2(graft.operators.VectorQueries.gramSums(emb))
-        val runs = (1 to 2).map { _ =>
-          streamRun("s41_stream_pca", sfDir)
-        }
-        val wall = runs.map(_._1).min
-        val marg = runs.map(_._3).filter(_ > 0) match {
-          case s if s.nonEmpty => s.min
-          case _ => -1.0
-        }
+        val runs = Seq.fill(2)(streamRun("s41_stream_pca", sfDir))
+        val wall = runs.map(_.wall).min
+        val marg = bestMarginal(runs)
         s""","s41_decomp":{"batch_fold_sec":${Bench.fmt("%.3f", fold)},""" +
           s""""stream_wall_sec":${Bench.fmt("%.3f", wall)},""" +
           s""""stream_marginal_sec":${Bench.fmt("%.3f", marg)}}"""
@@ -1585,24 +1055,6 @@ object Bench {
     // a fresh session's checkpoint/state-store init would dominate a
     // min-of-2 wall there.
     spark.stop()
-    def freshSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-        .config("spark.sql.warehouse.dir", JvmScratch.warehouse)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.ui.retainedExecutions", "8")
-        .config("spark.ui.retainedJobs", "64")
-        .config("spark.ui.retainedStages", "128")
-        .config("spark.ui.retainedTasks", "2000")
-        .config("spark.sql.streaming.numRecentProgressUpdates", "10")
-        .config("spark.sql.streaming.stateStore.maintenanceInterval", "10s")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
     // name -> (sweep min, isolated min, isolated-window t_off)
     val recheck: Seq[(String, Double, Double, Double)] =
       results
@@ -1611,7 +1063,7 @@ object Bench {
         .flatMap { case (n, sweepSec) =>
           try {
             microCalib(force = true)
-            val s2 = freshSession()
+            val s2 = GraftSession(GraftSession.Sweep)
             try materialize(SparkEntry.queries(n)(s2, sfDir)) // warmup
             catch { case _: Throwable => () }
             // flat-field the materialized-front asymmetry (VERDICT r19
@@ -1623,11 +1075,7 @@ object Bench {
             // untimed and then drop ballast. Caches stay (they ARE the
             // amortized read path); only the garbage goes.
             System.gc()
-            val iso = (1 to 2).map { _ =>
-              val t0 = System.nanoTime()
-              materialize(SparkEntry.queries(n)(s2, sfDir))
-              (System.nanoTime() - t0) / 1e9
-            }.min
+            val iso = minOf(2)(materialize(SparkEntry.queries(n)(s2, sfDir))).min
             val tIso = tNow()
             s2.stop()
             Some((n, sweepSec, iso, tIso))
@@ -1665,35 +1113,11 @@ object Bench {
     // and rows whose sweep marginal read >2× isolated land in
     // recheck_replaced_stream.
     def isoStreamMarginal(name: String): Double = {
-      val s2 = freshSession()
+      val s2 = GraftSession(GraftSession.Sweep)
       try {
-        val buf = new scala.collection.mutable.ArrayBuffer[
-          org.apache.spark.sql.streaming.StreamingQueryProgress]
-        s2.streams.addListener(
-          new org.apache.spark.sql.streaming.StreamingQueryListener {
-            import org.apache.spark.sql.streaming.StreamingQueryListener._
-            override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-            override def onQueryProgress(e: QueryProgressEvent): Unit =
-              buf.synchronized { buf += e.progress }
-            override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-          })
-        def run(): Double = {
-          buf.synchronized(buf.clear())
-          materialize(SparkEntry.queries(name)(s2, sfDir))
-          var prev = -1
-          var cur = buf.synchronized(buf.size)
-          var tries = 0
-          while ((cur != prev || cur == 0) && tries < 20) {
-            Thread.sleep(100)
-            prev = cur
-            cur = buf.synchronized(buf.size)
-            tries += 1
-          }
-          val ps = buf.synchronized(buf.toList)
-          if (ps.isEmpty) -1.0 // drain timeout: no split, not "zero work"
-          else ps.map(p => Option(p.durationMs.get("triggerExecution"))
-            .map(_.longValue).getOrElse(0L)).sum / 1000.0
-        }
+        val prog = new ProbeKit.StreamProgress(s2)
+        def run(): Double = prog.run(name)(
+          materialize(SparkEntry.queries(name)(s2, sfDir))).marginal
         run() // warmup (stream init + artifact builds)
         System.gc()
         val ok = Seq(run(), run()).filter(_ >= 0)
@@ -1877,7 +1301,7 @@ object Bench {
       }.mkString("{", ",", "}")
       val streamReplacedJson = streamRecheckReplaced.map("\"" + _ + "\"")
         .mkString("[", ",", "]")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"timing_semantics":"materialized-noop (r18+; pre-r18 rows used count() and are not comparable for projection-terminal queries)","queries_calib_norm":$calibNorm,"probes_calib_norm":$probesNorm,"queries_stream_marginal":$streamMarginal,"samples":$rawSamples,"t_off":$tOffs,"warmup":$warm,"sweep_sec":[${r3(sweep1Sec)}],"scheme":"per-query back-to-back min-of-2 (+1 adaptive); top batch rows fresh-session rechecked, min committed","sample_spread_median_pct":${Bench.fmt("%.2f", spreadMedianPct)},"sample_spread":$spreadsJson,"sample_outliers":$sampleOutliers,"calib_series":$calibSeriesJson,"calib_micro_iters":$microIters,"calib_micro_ref_sec":${Bench.fmt("%.4f", microRef)},"isolated_recheck":$recheckJson,"recheck_replaced":$replacedJson,"isolated_recheck_stream":$streamRecheckJson,"recheck_replaced_stream":$streamReplacedJson,"probe_leg_reruns":${probeRerunsOut.map("\"" + _ + "\"").mkString("[", ",", "]")},"failed":$failedFull,"sf":"$sfDir","env":$envFingerprint$km$km1k$gm$dd$dd4k$dd16k$dd32k$scaling$scalingNormOut$scalingStream$streamFixed$s04Decomp$s09Decomp$s41Decomp}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"timing_semantics":"materialized-noop (r18+; pre-r18 rows used count() and are not comparable for projection-terminal queries)","queries_calib_norm":$calibNorm,"probes_calib_norm":$probesNorm,"queries_stream_marginal":$streamMarginal,"samples":$rawSamples,"t_off":$tOffs,"warmup":$warm,"sweep_sec":[${r3(sweep1Sec)}],"scheme":"per-query back-to-back min-of-2 (+1 adaptive); top batch rows fresh-session rechecked, min committed","sample_spread_median_pct":${Bench.fmt("%.2f", spreadMedianPct)},"sample_spread":$spreadsJson,"sample_outliers":$sampleOutliers,"calib_series":$calibSeriesJson,"calib_micro_iters":$microIters,"calib_micro_ref_sec":${Bench.fmt("%.4f", microRef)},"isolated_recheck":$recheckJson,"recheck_replaced":$replacedJson,"isolated_recheck_stream":$streamRecheckJson,"recheck_replaced_stream":$streamReplacedJson,"probe_leg_reruns":${probeRerunsOut.map("\"" + _ + "\"").mkString("[", ",", "]")},"failed":$failedFull,"sf":"$sfDir","env":$envFingerprint$km$km1k$gm$dd$dd4k$dd16k$scaling$scalingNormOut$scalingStream$streamFixed$s04Decomp$s09Decomp$s41Decomp}"""
     }
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
     // Contended-run hard gate (VERDICT r19 next 7): the r19 driver run
@@ -1918,7 +1342,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] detail write failed: ${e.getMessage}")
     }
-    // the stream probe blocks, the opt-in dd32k block and the full
+    // the stream probe blocks and the full
     // timing-semantics string live in BENCH_DETAIL only (ADVICE r18):
     // the caller keeps ~2000 tail chars of this line, and every probe
     // byte here displaces per-query entries from that capture — the
@@ -1941,41 +1365,3 @@ object Bench {
   }
 }
 
-/** Standalone runner for the opt-in n=32768 DAMDS probe (VERDICT r18
-  * next 7): the point needs a ~40 GB heap and must run ALONE — its
-  * build + block copies OOM a default JVM and the damage destabilizes
-  * every later probe in the same process — so it gets its own main and
-  * its own JVM instead of a slot in the graded sweep.
-  *
-  *   SBT_OPTS=-Xmx40g sbt -batch "runMain graft.Damds32k"
-  *
-  * Prints one JSON line; min-of-2 within the one session (single
-  * samples on this host are worthless — BENCH_NOTES). The committed
-  * snapshot's dd32k block stays env-gated for in-sweep use at your own
-  * risk; this main is the supported path.
-  */
-object Damds32k {
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir", JvmScratch.warehouse)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val runs = (1 to 2).map(_ => Bench.damds32kProbe(spark))
-      .filter(_._1 > 0)
-    spark.stop()
-    org.apache.spark.sql.GraftShims.stopStateStoreMaintenance()
-    if (runs.isEmpty) println("""{"damds_dist_32k":"FAILED"}""")
-    else {
-      val best = runs.minBy(_._1)
-      println("{" + best._2.stripPrefix(",") + s""","samples":[${runs.map(r => Bench.fmt("%.3f", r._1)).mkString(",")}]}""")
-    }
-    System.out.flush()
-    System.exit(0)
-  }
-}

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan of selected
   * queries so shuffle/pushdown/broadcast regressions are visible in
   * review. Usage: runMain graft.PlanAudit [sfDir] [query ...]
@@ -40,14 +38,7 @@ object PlanAudit {
         "d34_incremental_dedup", "d35_partitioned_corpus",
         "d71_dup_spans", "v32_pca_power", "v34_whitened_dedup",
         "x12_phash_neardup")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir", JvmScratch.warehouse)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     if (summary) {
       println(f"${"query"}%-28s scans exch gen bnlj cart sort")

@@ -1,6 +1,6 @@
 package graft.collectives
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Reference-compatible collectives micro-benchmark CLI
   * (collectives/Program.java:7-29): same flags (--size payload ints,
@@ -17,14 +17,7 @@ object CollectivesMain {
     val itr = a.getOrElse("itr", "10").toInt
     val col = a.getOrElse("col", "0").toInt
 
-    val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    GraftSession.using() { spark =>
       import spark.implicits._
       val p = spark.sparkContext.defaultParallelism
       val payloads = spark.range(p)
@@ -66,6 +59,6 @@ object CollectivesMain {
       println(results.map(t => f"${t._1}%.2f")
         .mkString("collective_latency_ms ", " ", ""))
       println(results.map(t => f"${t._2}%.2f").mkString("latencies_ms ", " ", ""))
-    } finally if (!preexisting) spark.stop()
+    }
   }
 }

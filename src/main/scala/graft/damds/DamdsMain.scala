@@ -1,6 +1,6 @@
 package graft.damds
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Reference-compatible DA-MDS CLI (damds/DAMDSProgram.java:27, the
   * shaded-jar main): takes the config.properties path, runs the full
@@ -19,16 +19,9 @@ object DamdsMain {
     val cfgPath = a("config")
     val outDir = a.getOrElse("output", "damds_out")
 
-    val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    GraftSession.using() { spark =>
       val job = DamdsConfig.fromProperties(cfgPath,
-        splits = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+        splits = GraftSession.cores)
       val n = job.numberDataPoints
       val d = job.cfg.targetDim
       // InitialPointsFile when configured, else deterministic random
@@ -50,6 +43,6 @@ object DamdsMain {
           s"cgCount ${res.state.cgCount}\n").getBytes)
       println(s"wrote $outDir/points.txt and summary.txt " +
         s"(stress ${res.state.stress})")
-    } finally if (!preexisting) spark.stop()
+    }
   }
 }

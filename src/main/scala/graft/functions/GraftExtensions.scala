@@ -6,12 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.types.IntegerType
 
 /** SparkSessionExtensions hook registering the native kernels as SQL
-  * functions, so `spark.sql("SELECT graft_simhash64(toks) ...")` works:
+  * functions, so `spark.sql("SELECT graft_simhash64(toks) ...")` works.
+  * Every session `graft.GraftSession` opens carries it:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)
-  *   // or: .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+  * val spark = graft.GraftSession() // spark.sql.extensions = this class
+  * spark.sql("SELECT graft_simhash64(array('a', 'b'))")
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

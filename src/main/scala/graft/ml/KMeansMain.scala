@@ -1,7 +1,7 @@
 package graft.ml
 
 import graft.sources.PointSources
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Reference-compatible K-Means CLI (kmeans/KMeansOriginal.java:62-147):
@@ -26,18 +26,7 @@ object KMeansMain {
     val iterations = a.getOrElse("iterations", "10").toInt
     val output = a.get("output")
 
-    // only stop the session if this main created it (in-JVM callers —
-    // e.g. tests — share theirs)
-    val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    GraftSession.using() { spark =>
       // dimensionality is inferred from the centroid file, like the
       // reference's split-length parse
       val d = PointSources.textLines(spark, centroidsFile).head()
@@ -58,6 +47,6 @@ object KMeansMain {
             singleFile = true)
         case None => lines.foreach(println)
       }
-    } finally if (!preexisting) spark.stop()
+    }
   }
 }

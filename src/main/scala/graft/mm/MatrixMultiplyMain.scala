@@ -1,6 +1,6 @@
 package graft.mm
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Reference-compatible matrix-multiply CLI (mm/MatrixMultiply.java:
   * 27-105): same flags (-n -m -p -i -o, -t test mode), same flow —
@@ -19,21 +19,12 @@ object MatrixMultiplyMain {
     val input = a("i"); val output = a("o")
     val testMode = args.contains("-t")
 
-    // only stop the session if this main created it (in-JVM callers —
-    // e.g. tests — share theirs)
-    val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    GraftSession.using() { spark =>
       // generate + write A, then read it back (reference flow)
       MatrixIO.writeDoubleMatrix(input, MatrixIO.randomMatrix(n, m, seed = 1L))
       val b = Gemm.toColMajor(MatrixIO.randomMatrix(m, p, seed = 2L), m, p)
-      val splits = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-      val blocks = MatrixIO.doubleMatrixBlocks(spark, input, n, m, splits)
+      val blocks = MatrixIO.doubleMatrixBlocks(spark, input, n, m,
+        GraftSession.cores)
       val cBlocks = Gemm.multiply(spark, blocks, b, p)
       val c = Gemm.assemble(cBlocks.collect().toSeq)
       MatrixIO.writeDoubleMatrix(output, c)
@@ -44,6 +35,6 @@ object MatrixMultiplyMain {
         println(s"TEST OK: ${n}x$m x ${m}x$p verified against serial multiply")
       }
       println(s"wrote ${n}x$p C to $output")
-    } finally if (!preexisting) spark.stop()
+    }
   }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Bridge to the `private[sql]` Column ⇄ Expression converters — the
   * standard pattern for libraries that ship custom Catalyst expressions
   * (Spark's public Column API intentionally hides its expression).
-  * Kept to these two calls only.
+  * Also home to the few listener-bus and state-store hooks the
+  * harness and the tests share.
   */
 object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -29,6 +30,40 @@ object GraftShims {
     * the query that produced it needs a flush between queries. */
   def waitListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Scheduler counters of the jobs a block runs: jobs, completed
+    * stages, finished tasks, shuffle records written + read. */
+  final case class Counts(jobs: Int, stages: Int, tasks: Int,
+      shuffleRecords: Long)
+
+  /** Runs `body` and counts the jobs it runs on `sc`. The listener bus
+    * is drained before and after, so events of earlier work are not
+    * counted and none of `body`'s are missed. */
+  def counting[T](sc: org.apache.spark.SparkContext)(body: => T)
+      : (T, Counts) = {
+    import org.apache.spark.scheduler._
+    var jobs = 0; var stages = 0; var tasks = 0; var records = 0L
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        synchronized { jobs += 1 }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        synchronized { stages += 1 }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        synchronized {
+          tasks += 1
+          val m = e.taskMetrics
+          if (m != null) records += m.shuffleWriteMetrics.recordsWritten +
+            m.shuffleReadMetrics.recordsRead
+        }
+    }
+    waitListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      waitListenerBus(sc)
+      (out, listener.synchronized(Counts(jobs, stages, tasks, records)))
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** The physical plan an SQL execution ran, off its end event — the
     * typed form of the plan the UI renders, reaching every micro-batch

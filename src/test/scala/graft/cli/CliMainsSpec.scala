@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * same flag conventions as the reference jobs.
   */
 class CliMainsSpec extends AnyFunSuite {
-  // the mains call SparkSession.builder().getOrCreate(); ensure the
+  // the mains open their session through GraftSession.using; ensure the
   // shared test session exists first so they reuse it instead of
   // building (and then stopping) their own context
   private lazy val spark = TestSpark.spark

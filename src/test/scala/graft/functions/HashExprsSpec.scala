@@ -235,27 +235,15 @@ class HashExprsSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions registers SQL-callable functions") {
-    import org.apache.spark.sql.SparkSession
-    // getOrCreate would return the shared extension-less session; clear
-    // it so the builder constructs a fresh one (same SparkContext)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      val r = s2.sql(
-        "SELECT graft_simhash64(array('a','b')) AS s, " +
-          "graft_minhash(array('a','b'), 4) AS m").head()
-      assert(r.getAs[Long]("s") != 0L)
-      assert(r.getAs[scala.collection.Seq[Long]]("m").size == 4)
-    } finally {
-      // keep the shared TestSpark session as the active one
-      SparkSession.setActiveSession(spark)
-      SparkSession.setDefaultSession(spark)
-    }
+    // a new session builds its function registry afresh from the
+    // extensions GraftSession configured (spark.sql.extensions), so the
+    // kernels resolve in SQL without any session-local registration
+    val s2 = spark.newSession()
+    val r = s2.sql(
+      "SELECT graft_simhash64(array('a','b')) AS s, " +
+        "graft_minhash(array('a','b'), 4) AS m").head()
+    assert(r.getAs[Long]("s") != 0L)
+    assert(r.getAs[scala.collection.Seq[Long]]("m").size == 4)
   }
 
   test("minKDistinct aggregate equals sorted-distinct-take-k under any partitioning") {
