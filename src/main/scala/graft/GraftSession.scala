@@ -84,12 +84,12 @@ object GraftSession {
 
   /** Runs `body` on the JVM's default session when there is one (an
     * in-JVM caller's, such as a test's, used as it is), else on a new
-    * `role` session that is stopped afterwards. */
-  def using[T](role: Role = Main)(body: SparkSession => T): T =
+    * [[Main]] session that is stopped afterwards. */
+  def using[T](body: SparkSession => T): T =
     SparkSession.getDefaultSession match {
       case Some(spark) => body(spark)
       case None =>
-        val spark = apply(role)
+        val spark = apply(Main)
         try body(spark) finally spark.stop()
     }
 }

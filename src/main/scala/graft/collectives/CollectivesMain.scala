@@ -17,7 +17,7 @@ object CollectivesMain {
     val itr = a.getOrElse("itr", "10").toInt
     val col = a.getOrElse("col", "0").toInt
 
-    GraftSession.using() { spark =>
+    GraftSession.using { spark =>
       import spark.implicits._
       val p = spark.sparkContext.defaultParallelism
       val payloads = spark.range(p)

@@ -19,7 +19,7 @@ object DamdsMain {
     val cfgPath = a("config")
     val outDir = a.getOrElse("output", "damds_out")
 
-    GraftSession.using() { spark =>
+    GraftSession.using { spark =>
       val job = DamdsConfig.fromProperties(cfgPath,
         splits = GraftSession.cores)
       val n = job.numberDataPoints

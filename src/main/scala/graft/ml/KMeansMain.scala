@@ -26,7 +26,7 @@ object KMeansMain {
     val iterations = a.getOrElse("iterations", "10").toInt
     val output = a.get("output")
 
-    GraftSession.using() { spark =>
+    GraftSession.using { spark =>
       // dimensionality is inferred from the centroid file, like the
       // reference's split-length parse
       val d = PointSources.textLines(spark, centroidsFile).head()

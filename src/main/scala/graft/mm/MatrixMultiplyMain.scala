@@ -19,7 +19,7 @@ object MatrixMultiplyMain {
     val input = a("i"); val output = a("o")
     val testMode = args.contains("-t")
 
-    GraftSession.using() { spark =>
+    GraftSession.using { spark =>
       // generate + write A, then read it back (reference flow)
       MatrixIO.writeDoubleMatrix(input, MatrixIO.randomMatrix(n, m, seed = 1L))
       val b = Gemm.toColMajor(MatrixIO.randomMatrix(m, p, seed = 2L), m, p)

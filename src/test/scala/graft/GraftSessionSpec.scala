@@ -43,7 +43,7 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("using runs on an in-JVM caller's session and leaves it running") {
     val spark = TestSpark.spark
-    val seen = GraftSession.using(Main)(s => s)
+    val seen = GraftSession.using(s => s)
     assert(seen eq spark)
     assert(!spark.sparkContext.isStopped)
   }
@@ -54,12 +54,12 @@ class GraftSessionSpec extends AnyFunSuite {
     val needle = "SparkSession" + ".builder"
     val files = {
       val s = Files.walk(src)
-      try s.filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
-        .toArray.map(_.asInstanceOf[Path]).toSeq
+      try s.filter(p => Files.isRegularFile(p)).toArray.map(_.asInstanceOf[Path]).toSeq
       finally s.close()
     }
-    val hits = files.filter(p => new String(Files.readAllBytes(p), "UTF-8")
-      .contains(needle)).map(_.getFileName.toString)
+    val hits = files.filter(p => new String(Files.readAllBytes(p),
+      java.nio.charset.StandardCharsets.ISO_8859_1).contains(needle))
+      .map(_.getFileName.toString)
     assert(hits == Seq("GraftSession.scala"), hits)
   }
 }
