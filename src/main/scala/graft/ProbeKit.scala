@@ -110,6 +110,9 @@ object ProbeKit {
     def map[U](f: T => U): Probe[U] = new Probe(() => f(body()), cleanup)
   }
 
+  /** The K-Means probes' point dimension. */
+  val kmeansDim = 2
+
   /** The K-Means probe: `points` deterministic hash points in d = 2
     * (persisted), the first `k` as initial centroids, one untimed
     * warmup step (JIT + codegen), then each run is `iters` block steps
@@ -134,8 +137,6 @@ object ProbeKit {
       c
     }, () => pts.unpersist())
   }
-
-  val kmeansDim = 2
 
   /** The K-Means checksum: the sum of every centroid coordinate. */
   def centroidSum(c: Array[Array[Double]]): Double = c.flatten.sum

@@ -1,7 +1,7 @@
 package graft.ml
 
-import graft.sources.PointSources
 import graft.GraftSession
+import graft.sources.PointSources
 import org.apache.spark.sql.functions._
 
 /** Reference-compatible K-Means CLI (kmeans/KMeansOriginal.java:62-147):
