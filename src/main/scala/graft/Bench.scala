@@ -4,6 +4,12 @@ package graft
   * recorded with a NEGATIVE elapsed time and listed under "failed" —
   * never silently folded into the total (a broken query must not look
   * like a fast one).
+  *
+  * `main` runs four phases: the per-query sweep, the reference-shaped
+  * probes, the x10 scale legs, and the snapshot write. It measures and
+  * does not diagnose: an isolated recheck of one row is
+  * `BenchIsolate`'s job, and the layer split of a run is perfbench's
+  * trace.
   */
 object Bench {
   /** Locale-pinned numeric formatting — a comma-decimal locale would
@@ -13,20 +19,23 @@ object Bench {
 
   /** The contended-snapshot gate's pure decision (r20, VERDICT r19
     * next 7): given the COMMITTED detail file's raw JSON, this run's
-    * sf dir, per-query calib-norms and calib-series samples, returns
-    * Some(reason) when the run must be quarantined instead of
-    * overwriting the snapshot. Fires only when BOTH r19-postmortem
-    * signatures agree: median per-query calib-norm ratio vs the
-    * committed snapshot > 1.15 AND an intra-run calib spike > 1.5×
-    * (a global ratio alone can be a real regression or a code change;
-    * a spike alone is a transient the min-of-N already absorbs).
+    * sf dir, per-query calib-norms, calib-series samples and session
+    * cores, returns Some(reason) when the run must be quarantined
+    * instead of overwriting the snapshot. Fires only when BOTH
+    * r19-postmortem signatures agree: median per-query calib-norm ratio
+    * vs the committed snapshot > 1.15 AND an intra-run calib spike >
+    * 1.5× (a global ratio alone can be a real regression or a code
+    * change; a spike alone is a transient the min-of-N already
+    * absorbs). A different sf dir or a different host shape (the
+    * snapshot's `env.cores`) quarantines outright.
     * Guards: same sf dir only, ≥20 shared queries, fails OPEN (None)
     * on any parse irregularity — a malformed snapshot must never
     * block a fresh one. Extracted pure so the firing direction is
     * unit-testable (`BenchGateSpec`); the main wires in file I/O and
     * the force-override env. */
   private[graft] def quarantineReason(prevJson: String, sfDir: String,
-      curNorms: Seq[(String, Double)], calibs: Seq[Double]): Option[String] =
+      curNorms: Seq[(String, Double)], calibs: Seq[Double],
+      cores: Int = GraftSession.cores): Option[String] =
     try {
       val prevNorm: Map[String, Double] =
         """"queries_calib_norm":\{([^}]*)\}""".r.findFirstMatchIn(prevJson)
@@ -40,6 +49,8 @@ object Bench {
           }.toMap).getOrElse(Map.empty)
       val prevSf = """"sf":"([^"]*)"""".r.findFirstMatchIn(prevJson)
         .map(_.group(1))
+      val prevCores = """"env":\{[^}]*"cores":([0-9]+)""".r
+        .findFirstMatchIn(prevJson).map(_.group(1).toInt)
       val ratios = curNorms.collect {
         case (k, v) if v > 0 && prevNorm.getOrElse(k, -1.0) > 0 =>
           v / prevNorm(k)
@@ -56,6 +67,14 @@ object Bench {
       if (prevSf.exists(p => p.nonEmpty && p != sfDir))
         Some(s"run sf '$sfDir' differs from committed snapshot sf " +
           s"'${prevSf.get}' — a different-scale run never overwrites " +
+          "the baseline")
+      // host shape: per-query seconds at 4 cores and at 32 are not the
+      // same measurement, whatever the calib axis says (it is
+      // single-thread), so a snapshot taken at other cores is never
+      // replaced; a snapshot without `env.cores` fails open
+      else if (prevCores.exists(_ != cores))
+        Some(s"run cores $cores differ from committed snapshot cores " +
+          s"${prevCores.get} — a different host shape never overwrites " +
           "the baseline")
       else if (prevSf.contains(sfDir) && ratios.size >= 20 &&
           medianRatio > 1.15 && spike)
@@ -79,44 +98,6 @@ object Bench {
       System.err.println(s"[bench] snapshot gate failed OPEN: ${e.getMessage}")
       None
     }
-
-  /** r21 (VERDICT r20 next 1): the committed snapshot's x10/decomp
-    * ratio for one probe leg, parsed from the raw detail JSON — the
-    * reference the in-run rerun check compares against. -1 when the
-    * leg is absent or unparseable (fail open: no rerun). */
-  private[graft] def committedLegRatio(prevJson: String, name: String,
-      field: String = "ratio"): Double =
-    try {
-      // anchor at the scaling blocks (ADVICE r21): the recheck blocks
-      // earlier in the detail JSON are keyed by the same query names,
-      // so a future recheck field ratio-shaped enough to match would
-      // silently become the rerun reference; every leg this check
-      // serves lives at or after "scaling_x10"
-      val anchor = prevJson.indexOf("\"scaling_x10\"")
-      val hay = if (anchor >= 0) prevJson.substring(anchor) else prevJson
-      (s""""$name":\\{[^{}]*?"$field":(-?[0-9.eE+]+)""").r
-        .findFirstMatchIn(hay).map(_.group(1).toDouble).getOrElse(-1.0)
-    } catch { case _: Throwable => -1.0 }
-
-  /** Rerun trigger for a probe leg: the measured x10 ratio deviates
-    * more than 1.75× (either way) from the committed snapshot's. A
-    * window covering both min-of-2 samples of ONE leg defeats min-of-N
-    * and calib normalization (the r20 driver run committed d91_decomp
-    * compose_ratio 17.49 and s40 x10 11.07 where same-code runs read
-    * 1.3-2.8 and 5.1-6.2 — ratio-of-ratios 6.3× and 1.87×, so the
-    * trigger sits below the s40 case and far below the d91 one); a
-    * spurious fire only costs one bounded extra leg pair, and the min
-    * is kept either way. Fails closed to "no rerun" when no committed
-    * reference exists. Pure, unit-tested in BenchGateSpec. */
-  /** The rerun trigger factor — comments elsewhere reference THIS
-    * constant (ADVICE r21: three sites said ">2×" while the code used
-    * 1.75; tune it here, nowhere else). */
-  private[graft] val legRerunFactor = 1.75
-
-  private[graft] def legNeedsRerun(measured: Double, committed: Double): Boolean =
-    committed > 0 && measured > 0 &&
-      (measured > legRerunFactor * committed ||
-        measured < committed / legRerunFactor)
 
   /** r22 (VERDICT r21 next 7): self-check of the one-line JSON contract
     * BEFORE it is printed — rounds 10–20 all produced a line the driver
@@ -149,12 +130,6 @@ object Bench {
     /** Run one registered streaming query; see [[ProbeKit.StreamProgress]]. */
     def streamRun(name: String, dir: String): ProbeKit.StreamRun =
       streams.run(name)(materialize(SparkEntry.queries(name)(spark, dir)))
-    /** The least positive marginal of some runs; -1 when none drained. */
-    def bestMarginal(runs: Seq[ProbeKit.StreamRun]): Double =
-      runs.map(_.marginal).filter(_ > 0) match {
-        case s if s.nonEmpty => s.min
-        case _ => -1.0
-      }
     // ---- host-speed calibration machinery (r19: intra-sweep) ----
     // The single end-of-run calibration spin cannot see INTRA-sweep
     // contention windows: r18 committed d51/d52/d54 at 2-10× their
@@ -167,7 +142,6 @@ object Bench {
     // sample. The reference axis stays the pinned r15 host (0.581 s
     // per 200M iters => 0.2905 s per 100M).
     val calibRef = 0.581
-    val noCalib = sys.env.get("SPARK_GRAFT_NO_CALIB").contains("1")
     def spin(iters: Int): Double = {
       val t0 = System.nanoTime()
       var x = 0x9e3779b97f4a7c15L; var i = 0
@@ -180,45 +154,35 @@ object Bench {
     }
     val microIters = 100000000
     val microRef = calibRef * microIters / 2e8
-    if (!noCalib) spin(20000000) // JIT the spin loop before any sample
+    spin(20000000) // JIT the spin loop before any sample
     val benchT0 = System.nanoTime()
     def tNow(): Double = (System.nanoTime() - benchT0) / 1e9
     // (t_off, seconds-for-100M-spin) samples across the whole run
     val calibSeries = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
     var lastCalibT = -1e9
     /** One throttled micro-calib: records a host-speed sample unless one
-      * was taken in the last 20 s (force overrides — probe blocks and
-      * the recheck phase always want a window-local sample). */
+      * was taken in the last 20 s (force overrides — probe blocks
+      * always want a window-local sample). */
     def microCalib(force: Boolean = false): Unit =
-      if (!noCalib && (force || tNow() - lastCalibT >= 20.0)) {
+      if (force || tNow() - lastCalibT >= 20.0) {
         val s = spin(microIters)
         calibSeries += ((tNow(), s))
         lastCalibT = tNow()
       }
-    /** Host-slowdown ratio (>=1 on a slower host) of the calib sample
-      * nearest in time to t; -1 when calibration is disabled/empty. */
-    def nearestCalibRatio(t: Double): Double =
-      if (calibSeries.isEmpty) -1.0
-      else calibSeries.minBy { case (ct, _) => math.abs(ct - t) }._2 / microRef
-    /** Calib-normalized seconds: raw / nearest-window host-slowdown
-      * ratio (raw when calibration is off). Single-thread axis — it
-      * under-corrects 32-way contention (the documented caveat), so a
-      * normalized ratio makes a contended window LEGIBLE rather than
-      * perfectly corrected; the raw fields stay the measurement. */
-    def calibNormSec(sec: Double, t: Double): Double = {
-      val r = nearestCalibRatio(t)
-      if (r > 0) sec / r else sec
-    }
-    /** Normalized x10/base ratio as a JSON number string; "-1" when
-      * either leg has no calib sample (ADVICE r19: under
-      * SPARK_GRAFT_NO_CALIB calibNormSec falls back to RAW seconds, so
-      * without this guard ratio_norm would silently equal the raw
-      * ratio — a reader must see "not normalized", matching the
-      * *_calib_norm convention). */
+    /** Calib-normalized seconds: raw / the host-slowdown ratio (>=1 on
+      * a slower host) of the calib sample nearest in time to t. The
+      * series is anchored at sweep start, so every timed sample has one.
+      * Single-thread axis — it under-corrects 32-way contention (the
+      * documented caveat), so a normalized ratio makes a contended
+      * window LEGIBLE rather than perfectly corrected; the raw fields
+      * stay the measurement. */
+    def calibNormSec(sec: Double, t: Double): Double =
+      sec / (calibSeries.minBy { case (ct, _) => math.abs(ct - t) }._2 / microRef)
+    /** Normalized x10/base ratio as a JSON number string. */
     def ratioNormJson(x10: Double, tx: Double, base: Double, tb: Double): String =
-      if (nearestCalibRatio(tx) > 0 && nearestCalibRatio(tb) > 0)
-        Bench.fmt("%.2f", calibNormSec(x10, tx) / calibNormSec(base, tb))
-      else "-1"
+      Bench.fmt("%.2f", calibNormSec(x10, tx) / calibNormSec(base, tb))
+
+    // ---- phase 1: the per-query sweep ----
     // untimed-in-total warmup: JIT/codegen/classloading + parquet
     // footers for every table, so the first timed query isn't charged
     // session init. Raw warmup seconds still land in the detail file —
@@ -324,6 +288,7 @@ object Bench {
     microCalib(force = true) // close the sweep's calib window
     val samples: Seq[(String, Seq[Double])] =
       sampled.map { case (n, _, ss) => n -> ss }
+    // the committed per-query value: the sweep min
     val results = samples.map { case (name, ss) =>
       val best =
         if (ss.head < 0) ss.head
@@ -353,14 +318,15 @@ object Bench {
         val v = spreads.map(_._2).sorted
         100.0 * v(v.size / 2)
       }
+
+    // ---- phase 2: the reference-shaped probes ----
     // Drop state accumulated by a query sweep (memory-sink tables,
     // memoized persisted datasets, bucketed-table cache) so the next
     // probe block measures its kernels, not leftover GC pressure —
     // probe timings were swinging 4-5× run-to-run before this. Called
     // between EVERY probe block: the x10 stream sweep alone leaves a
     // dozen 10×-scale memory sinks plus the scaled corpus's memoized
-    // tokenized table pinned on the driver, which inflated the
-    // fixed-cost probe's "steady-state" readings that follow it.
+    // tokenized table pinned on the driver.
     def dropSweepState(): Unit = {
       spark.catalog.listTables().collect()
         .filter(_.isTemporary)
@@ -463,55 +429,50 @@ object Bench {
     // print, so the checksum keeps full significant digits
     val dd16k = damdsProbe("damds_dist_16k", "n16k", warmup = false,
       Bench.fmt("%.4e", _))
+
+    // ---- phase 3: the x10 scale legs ----
     // Scaling-slope probe (VERDICT r14 next 6): the only evidence
     // local[32] can give for the 100× question is a measured exponent,
     // so the flagship families run once at sf0.1 and once at a 10×
     // (sf1.0-equivalent) replica of it, and the RATIO is committed. A
     // near-linear family rides ~10-12× (10× rows + some log/shuffle
     // growth); a superlinear ratio is a scale bug the judge should
-    // see. The replica is deterministic: documents are copied 10× with
-    // remapped doc_ids and a per-replica suffix TOKEN appended to the
-    // text — replicas must NOT be byte-identical, or every doc/gram
-    // becomes a 10×-duplicate and the dedup families' join fanout
-    // inflates quadratically, measuring a workload that doesn't exist;
-    // one appended token keeps the dup structure of the original
-    // corpus while making replicas distinct. Embeddings replicate with
-    // remapped ids (cell occupancy scales uniformly). Build is
-    // memoized on disk (marker file) so re-runs don't pay the write.
+    // see. Both replicas are memoized on disk (marker file) so re-runs
+    // don't pay the write.
+    import org.apache.spark.sql.functions._
+    val reps = 10
+    def scaleDir(prefix: String): String =
+      prefix + sfDir.replaceAll("[^a-zA-Z0-9.]", "_") + s"_x$reps"
+    val scaledDir = scaleDir("/tmp/graft_scale_")
+    // The documents replica, shared by both blocks: documents are
+    // copied 10× with remapped doc_ids and a per-replica suffix TOKEN
+    // appended to the text — replicas must NOT be byte-identical, or
+    // every doc/gram becomes a 10×-duplicate and the dedup families'
+    // join fanout inflates quadratically, measuring a workload that
+    // doesn't exist; one appended token keeps the dup structure of the
+    // original corpus while making replicas distinct.
+    def repDf = spark.range(reps).withColumnRenamed("id", "rep")
+    def documentsReplica(): org.apache.spark.sql.DataFrame = {
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val maxId = docs.agg(max("doc_id")).head.getLong(0) + 1
+      docs.crossJoin(broadcast(repDf))
+        .withColumn("doc_id", col("doc_id") + col("rep") * maxId)
+        .withColumn("text", when(col("rep") === 0, col("text"))
+          .otherwise(concat(col("text"), lit(" rep"), col("rep"))))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .drop("rep")
+    }
     // detail-only normalized-ratio companion block (set by the probe)
     var scalingNormOut = ""
-    // r21: the committed snapshot's raw JSON, read ONCE up front — the
-    // per-leg rerun checks compare each x10/decomp leg's ratio against
-    // it (VERDICT r20 next 1). Empty string = no reference, no reruns.
-    val committedJson: String =
-      try {
-        val f = new java.io.File(
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json"))
-        if (f.exists())
-          new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        else ""
-      } catch { case _: Throwable => "" }
-    // legs the >2×-off-committed check re-ran this run (detail JSON)
-    val probeRerunsOut = scala.collection.mutable.ArrayBuffer[String]()
     val scaling =
       try {
         microCalib(force = true)
-        import org.apache.spark.sql.functions._
         dropSweepState() // the DAMDS probes left 0.5-1 GB block datasets
-        val reps = 10
-        val scaledDir = "/tmp/graft_scale_" +
-          sfDir.replaceAll("[^a-zA-Z0-9.]", "_") + s"_x$reps"
         if (!new java.io.File(s"$scaledDir/_built").exists()) {
-          val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          val maxId = docs.agg(max("doc_id")).head.getLong(0) + 1
-          val repDf = spark.range(reps).withColumnRenamed("id", "rep")
-          docs.crossJoin(broadcast(repDf))
-            .withColumn("doc_id", col("doc_id") + col("rep") * maxId)
-            .withColumn("text", when(col("rep") === 0, col("text"))
-              .otherwise(concat(col("text"), lit(" rep"), col("rep"))))
-            .withColumn("n_chars", length(col("text")).cast("long"))
-            .drop("rep")
+          documentsReplica()
             .write.mode("overwrite").parquet(s"$scaledDir/documents.parquet")
+          // embeddings replicate with remapped ids (cell occupancy
+          // scales uniformly)
           val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
           val maxVid = emb.agg(max("vec_id")).head.getLong(0) + 1
           emb.crossJoin(broadcast(repDf))
@@ -520,73 +481,15 @@ object Bench {
             .write.mode("overwrite").parquet(s"$scaledDir/embeddings.parquet")
           new java.io.File(s"$scaledDir/_built").createNewFile()
         }
-        // d91 decomposition (VERDICT r17 next 1, the m08 treatment):
-        // r17's committed d91 x10 ratio was 15.98 — but an isolated
-        // decomposition shows the steady-state COMPOSITION (the
-        // production read path: ledger FileScan + live keeper rungs +
-        // packing) scales ~1.1× at 10× data, and the ledger scan
-        // itself ~1.0×. The superlinear term was the probe, not the
-        // plan: the 11-13 s x10 ledger BUILD ran inside the flagship
-        // row's first sample, and the heap/GC ballast it left (10×
-        // tokenized corpus persisted, shuffle temp) bled into the
-        // second sample, so min-of-2 never saw a clean read. The
-        // block below pays each dir's ledger build UNTIMED first and
-        // commits the build/read/compose split at both scales; the
-        // flagship row then measures what production pays per run.
-        val d91Decomp =
-          try {
-            val legs = Seq("sf01" -> sfDir, "x10" -> scaledDir).map {
-              case (tag, dir) =>
-                def ledger(): Double = ProbeKit.timed(materialize(
-                  graft.operators.TextQueries.releaseLedger(spark, dir)))._1
-                val first = ledger()
-                val read = ledger()
-                val comp = best2(
-                  SparkEntry.queries("d91_corpus_release")(spark, dir))
-                (tag, first, read, comp)
-            }
-            // r21 (VERDICT r20 next 1): the r20 DRIVER run committed
-            // compose_ratio 17.49 where five same-code runs read
-            // 1.3-2.8 — a window covering one compose leg's both
-            // samples. When the ratio lands >legRerunFactor× off the
-            // committed snapshot's, re-measure both compose legs once
-            // and keep the per-leg min.
-            var legsF = legs
-            if (Bench.legNeedsRerun(legs(1)._4 / legs(0)._4,
-                Bench.committedLegRatio(committedJson, "d91_decomp",
-                  "compose_ratio"))) {
-              probeRerunsOut += "d91_decomp"
-              legsF = legs.map { case (tag, first, read, comp) =>
-                val dir = if (tag == "sf01") sfDir else scaledDir
-                val comp2 = best2(
-                  SparkEntry.queries("d91_corpus_release")(spark, dir))
-                (tag, first, read, math.min(comp, comp2))
-              }
-            }
-            // ADVICE r18: the sf0.1 "first" leg is NOT a build — the
-            // main sweep's d91 row already materialized the ledger in
-            // this session (DiskLayoutCache), so that leg re-reads a
-            // cached layout; only the x10 first-leg (first touch of the
-            // scaled dir) pays the true build. The keys say so.
-            val fields = legsF.flatMap { case (tag, first, read, comp) => Seq(
-              (if (tag == "sf01")
-                s""""ledger_first_post_sweep_sec_$tag":${Bench.fmt("%.3f", first)}"""
-              else
-                s""""ledger_first_build_sec_$tag":${Bench.fmt("%.3f", first)}"""),
-              s""""ledger_read_sec_$tag":${Bench.fmt("%.3f", read)}""",
-              s""""compose_sec_$tag":${Bench.fmt("%.3f", comp)}""") }
-            val ratio = legsF(1)._4 / legsF(0)._4
-            s""","d91_decomp":{${fields.mkString(",")},"compose_ratio":${Bench.fmt("%.2f", ratio)}}"""
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] d91 decomp FAILED: ${e.getMessage}")
-            ""
-          }
-        // artifact prewarm: d92's bucketed URL-keeper table builds on
-        // first touch — pay it untimed per dir (d91's ledger was just
-        // prewarmed by the decomp block) and drop the build's ballast
-        // so the flagship rows time the amortized production read path
-        for (dir <- Seq(sfDir, scaledDir))
-          try materialize(SparkEntry.queries("d92_crawl_ingest")(spark, dir))
+        // artifact prewarm: d91's release ledger and d92's bucketed
+        // URL-keeper table build on first touch — pay them untimed per
+        // dir and drop the builds' ballast so the flagship rows time
+        // the amortized production read path (r17: the 11-13 s x10
+        // ledger build inside d91's first sample, and the heap/GC
+        // ballast it left, read as a 16× ratio)
+        for (dir <- Seq(sfDir, scaledDir);
+             q <- Seq("d91_corpus_release", "d92_crawl_ingest"))
+          try materialize(SparkEntry.queries(q)(spark, dir))
           catch { case _: Throwable => () }
         dropSweepState()
         val flagships = Seq("d01_dedup_exact", "d82_dup_spans_prod",
@@ -611,61 +514,22 @@ object Bench {
           val t = tNow()
           (best2(SparkEntry.queries(name)(spark, dir)), t)
         }
-        // r21 (VERDICT r20 next 1 — the last silent-wild-number hole):
-        // when a leg pair's ratio lands >legRerunFactor× off the
-        // committed snapshot's, re-run BOTH legs once and keep the per-leg min —
-        // a window covering both min-of-2 samples of one leg is the
-        // one contention shape min-of-N + calib norm cannot catch.
         val meas = flagships.map { n =>
-          var (base, tb) = best2T(n, sfDir)
-          var (x10, tx) = best2T(n, scaledDir)
-          val rerun = Bench.legNeedsRerun(x10 / base,
-            Bench.committedLegRatio(committedJson, n))
-          if (rerun) {
-            val (b2, tb2) = best2T(n, sfDir)
-            val (x2, tx2) = best2T(n, scaledDir)
-            if (b2 < base) { base = b2; tb = tb2 }
-            if (x2 < x10) { x10 = x2; tx = tx2 }
-          }
-          (n, base, tb, x10, tx, rerun)
+          val (base, tb) = best2T(n, sfDir)
+          val (x10, tx) = best2T(n, scaledDir)
+          (n, base, tb, x10, tx)
         }
-        probeRerunsOut ++= meas.collect { case (n, _, _, _, _, true) => n }
         microCalib(force = true) // close the flagship legs' calib window
-        val rows = meas.map { case (n, base, _, x10, _, _) =>
+        val rows = meas.map { case (n, base, _, x10, _) =>
           s""""$n":{"sf01_sec":${Bench.fmt("%.3f", base)},"x10_sec":${Bench.fmt("%.3f", x10)},"ratio":${Bench.fmt("%.2f", x10 / base)}}"""
         }
         // detail-only (the short line keeps raw scaling_x10 unchanged —
         // probe bytes there displace per-query entries, ADVICE r18)
-        val normRows = meas.map { case (n, base, tb, x10, tx, _) =>
+        val normRows = meas.map { case (n, base, tb, x10, tx) =>
           s""""$n":${ratioNormJson(x10, tx, base, tb)}"""
         }
         scalingNormOut = s""","scaling_x10_ratio_norm":{${normRows.mkString(",")}}"""
-        // m08's x10 ratio decomposed (VERDICT r16 next 6): its one
-        // corpus scan rides ~linear like every screen; the driver EM
-        // tail is O(histogram/cores) per iteration and the histogram
-        // is the corpus's distinct 6dp-snapped score set — it grows
-        // with corpus size UNTIL the snap domain saturates at
-        // ≤ 1,000,001 rows, after which the tail is a constant
-        // ~25 ms/iter-class cost however large the corpus. The block
-        // commits both cardinalities and the tail seconds so the
-        // ratio reads as (linear scan) + (bounded tail), not as a
-        // scale bug.
-        val m08Decomp =
-          try {
-            val h1 = graft.operators.MlQueries.probeHistogram(spark, sfDir)
-            val t1 = System.nanoTime()
-            graft.operators.MlQueries.probeFit(h1)
-            val em1 = (System.nanoTime() - t1) / 1e9
-            val h2 = graft.operators.MlQueries.probeHistogram(spark, scaledDir)
-            val t2 = System.nanoTime()
-            graft.operators.MlQueries.probeFit(h2)
-            val em2 = (System.nanoTime() - t2) / 1e9
-            s""","m08_decomp":{"hist_rows_sf01":${h1.length},"hist_rows_x10":${h2.length},"hist_domain_bound":1000001,"em_sec_sf01":${Bench.fmt("%.3f", em1)},"em_sec_x10":${Bench.fmt("%.3f", em2)}}"""
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] m08 decomp FAILED: ${e.getMessage}")
-            ""
-          }
-        s""","scaling_x10":{"reps":$reps,${rows.mkString(",")}$m08Decomp$d91Decomp}"""
+        s""","scaling_x10":{"reps":$reps,${rows.mkString(",")}}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] scaling probe FAILED: ${e.getMessage}")
         ""
@@ -677,8 +541,8 @@ object Bench {
     // s40/s43/s51, bounded-register sketches s18/s32, the GROWING
     // dedup ledger s20, and — r20 — the stream-stream JOIN s04, whose
     // state is batch-lifetime join rows) run at sf0.1 and at a 10×
-    // replica, with the
-    // final state-store row count per run committed next to the time.
+    // replica, with the final state-store row count per run committed
+    // next to the time.
     // The replica mirrors the batch x10 build (remapped ids, one
     // appended token per doc replica; remapped user/event ids for
     // events at 10× the arrival density) but lands as SINGLE parquet
@@ -696,15 +560,16 @@ object Bench {
     // 10× arrivals, linear by construction); the stream-static probes
     // hold no state at all (0 rows). A state ratio outside its
     // documented bound is a scale bug this block exists to surface.
+    // The replica makes nearly every interior gram a duplicate, so the
+    // span/flow legs process ~109× the dup-hit work at "10× data"
+    // (measured 21.5k → 2.36M dup sites, BENCH_NOTES): a wall ratio of
+    // ~10 there is strongly sublinear.
     val scalingStream =
       try {
         microCalib(force = true)
-        import org.apache.spark.sql.functions._
         dropSweepState() // the batch x10 block left the scaled corpus's
                          // memoized tables persisted
-        val reps = 10
-        val streamDir = "/tmp/graft_scale_stream_" +
-          sfDir.replaceAll("[^a-zA-Z0-9.]", "_") + s"_x$reps"
+        val streamDir = scaleDir("/tmp/graft_scale_stream_")
         if (!new java.io.File(s"$streamDir/_built").exists()) {
           new java.io.File(streamDir).mkdirs()
           def single(df: org.apache.spark.sql.DataFrame, target: String): Unit = {
@@ -720,28 +585,15 @@ object Bench {
             stage.listFiles().foreach(_.delete())
             stage.delete()
           }
-          val repDf = spark.range(reps).withColumnRenamed("id", "rep")
-          // the documents replica IS the batch x10 corpus (same dir
-          // naming as the scaling block), re-landed as one FILE — so
-          // the batch and stream x10 ratios measure the same corpus
-          // by construction; the remap is re-derived only if the
-          // batch build didn't run this session
-          val batchScaled = "/tmp/graft_scale_" +
-            sfDir.replaceAll("[^a-zA-Z0-9.]", "_") + s"_x$reps"
-          val docsScaled =
-            if (new java.io.File(s"$batchScaled/_built").exists())
-              spark.read.parquet(s"$batchScaled/documents.parquet")
-            else {
-              val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-              val maxId = docs.agg(max("doc_id")).head.getLong(0) + 1
-              docs.crossJoin(broadcast(repDf))
-                .withColumn("doc_id", col("doc_id") + col("rep") * maxId)
-                .withColumn("text", when(col("rep") === 0, col("text"))
-                  .otherwise(concat(col("text"), lit(" rep"), col("rep"))))
-                .withColumn("n_chars", length(col("text")).cast("long"))
-                .drop("rep")
-            }
-          single(docsScaled, s"$streamDir/documents.parquet")
+          // the documents replica IS the batch x10 corpus, re-landed as
+          // one FILE — so the batch and stream x10 ratios measure the
+          // same corpus by construction; it is re-derived only if the
+          // batch build didn't run
+          single(
+            if (new java.io.File(s"$scaledDir/_built").exists())
+              spark.read.parquet(s"$scaledDir/documents.parquet")
+            else documentsReplica(),
+            s"$streamDir/documents.parquet")
           // ts round-trips as timestamp_ntz so the replica resolves
           // exactly like the micros-generation fixture (session TZ is
           // UTC, so the cast is value-preserving)
@@ -767,10 +619,10 @@ object Bench {
         // sweep already built the sf0.1 ledgers in this session, so
         // without this the x10 legs of s40/s43/s51 paid their 10×
         // ledger BUILD inside the first timed sample — an asymmetry
-        // between the scales (ADVICE r18 on d91's decomp), and the
-        // build's heap/shuffle ballast is exactly what kept min-of-2
-        // from seeing a clean second sample (s40's x10 leg read
-        // 4.6/7.5/13.2 s across three same-code runs).
+        // between the scales, and the build's heap/shuffle ballast is
+        // exactly what kept min-of-2 from seeing a clean second sample
+        // (s40's x10 leg read 4.6/7.5/13.2 s across three same-code
+        // runs).
         for (dir <- Seq(sfDir, streamDir))
           try {
             materialize(graft.operators.TextQueries.dupGramLedgerBucketed(spark, dir))
@@ -779,36 +631,7 @@ object Bench {
           } catch { case e: Throwable =>
             System.err.println(s"[bench] stream ledger prewarm FAILED for $dir: ${e.getMessage}")
           }
-        // the replica's dup-structure amplification, committed next to
-        // the ratios so they read against the right denominator: the
-        // replicas share every INTERIOR gram (only the appended token
-        // differs), so nearly every gram is duplicated at x10 and the
-        // dup-hit workload the span/flow legs process grows ~100× at
-        // "10× data" (measured 21.5k → 2.36M dup sites — 109×). A wall
-        // ratio of ~10 on that denominator is strongly sublinear; this
-        // is the stream twin of the batch block's d18 note. Computed
-        // BEFORE the dropSweepState below (ADVICE r19): these are two
-        // corpus-proportional gram-explode aggregations whose
-        // heap/shuffle ballast must not land inside the timed legs —
-        // the exact asymmetry the ledger prewarm above exists to
-        // remove.
-        val dupAmp =
-          try {
-            def dupSites(dir: String): Long = {
-              import org.apache.spark.sql.functions._
-              graft.operators.TextQueries
-                .gramSitesSrc(graft.Tables(spark, dir, "documents"))
-                .groupBy(col("gh")).agg(count(lit(1)).as("n"))
-                .filter(col("n") >= 2)
-                .agg(coalesce(sum(col("n")), lit(0L))).head.getLong(0)
-            }
-            val a = dupSites(sfDir); val b = dupSites(streamDir)
-            s""""dup_sites_sf01":$a,"dup_sites_x10":$b,"dup_workload_amp":${Bench.fmt("%.1f", b.toDouble / math.max(a, 1L))},"""
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] dup-amp probe FAILED: ${e.getMessage}")
-            ""
-          }
-        dropSweepState() // drop the build + dup-amp ballast before timing
+        dropSweepState() // drop the build ballast before timing
         // r20: s04 joins the legs — the stream-stream JOIN state class
         // was the one stateful shape the block didn't probe. The
         // events replica remaps user ids per replica, so per-user
@@ -830,106 +653,41 @@ object Bench {
         // intra-block window skews the raw ratio hardest here (s40 read
         // 4.6/7.5/13.2 across three same-code runs). This block lives
         // in the detail JSON only, so the norm field rides inline.
-        // r21 (VERDICT r20 next 1): same >legRerunFactor×-off-committed
-        // rerun as the batch flagships — the r20 driver run committed s40 x10 11.07
-        // where same-code runs read 5.1-6.2, a window covering one
-        // leg's both samples.
         val measured = legs.map { n =>
-          def legPair(): (Double, Double, Long, Double, Double, Long) = {
-            microCalib()
-            val tb = tNow()
-            val b = Seq.fill(2)(streamRun(n, sfDir))
-            microCalib()
-            val tx = tNow()
-            val x = Seq.fill(2)(streamRun(n, streamDir))
-            (b.map(_.wall).min, tb, b.map(_.stateRows).max,
-              x.map(_.wall).min, tx, x.map(_.stateRows).max)
-          }
-          var (base, tb, str, x10, tx, strx) = legPair()
-          if (Bench.legNeedsRerun(x10 / base,
-              Bench.committedLegRatio(committedJson, n))) {
-            probeRerunsOut += n
-            val (b2, tb2, _, x2, tx2, _) = legPair()
-            if (b2 < base) { base = b2; tb = tb2 }
-            if (x2 < x10) { x10 = x2; tx = tx2 }
-          }
-          (n, base, tb, str, x10, tx, strx)
+          microCalib()
+          val tb = tNow()
+          val b = Seq.fill(2)(streamRun(n, sfDir))
+          microCalib()
+          val tx = tNow()
+          val x = Seq.fill(2)(streamRun(n, streamDir))
+          (n, b.map(_.wall).min, tb, b.map(_.stateRows).max,
+            x.map(_.wall).min, tx, x.map(_.stateRows).max)
         }
         microCalib(force = true) // close the stream legs' calib window
         val rows = measured.map { case (n, base, tb, str, x10, tx, strx) =>
           s""""$n":{"sf01_sec":${Bench.fmt("%.3f", base)},"x10_sec":${Bench.fmt("%.3f", x10)},"ratio":${Bench.fmt("%.2f", x10 / base)},"ratio_norm":${ratioNormJson(x10, tx, base, tb)},""" +
             s""""state_rows_sf01":$str,"state_rows_x10":$strx}"""
         }
-        // s43 decomposition (VERDICT r18 next 3): s43's x10 ratio was
-        // the stream family's only exactly-linear probe (10.03 at r18,
-        // zero economy of scale) — this block splits its per-trigger
-        // cost into the three batch-expressible legs at both scales so
-        // the slope is attributable: sites = the stateless gram-hash
-        // explode over every arriving doc (pure per-row work — the leg
-        // that CANNOT amortize, now on the d82 gram kernel instead of
-        // md5 strings), ledger_read = the bucketed copy-flow ledger
-        // FileScan (amortized, build untimed), flows = sites + the
-        // shuffled equi-join + origin filter (the full probe minus
-        // micro-batch machinery and the memory-sink rollup). The
-        // stream walls/marginals for the same corpus sit in the rows
-        // above.
-        val s43Decomp =
-          try {
-            val legs = Seq("sf01" -> sfDir, "x10" -> streamDir).map {
-              case (tag, dir) =>
-                val docs = graft.Tables(spark, dir, "documents")
-                def ledger() =
-                  graft.operators.TextQueries.copyFlowLedgerBucketed(spark, dir)
-                materialize(ledger()) // first touch untimed (build memoized)
-                val sites = best2(
-                  graft.operators.TextQueries.gramSitesSrc(docs))
-                val ledgerSec = best2(ledger())
-                val flows = best2 {
-                  import org.apache.spark.sql.functions.col
-                  graft.operators.TextQueries.gramSitesSrc(docs)
-                    .join(ledger().hint("merge"), "gh")
-                    .filter(!(col("doc_id") === col("kdoc") &&
-                      col("pos") === col("kpos")))
-                    .select(col("src_from"), col("source").as("src_to"),
-                      col("doc_id"))
-                }
-                (tag, sites, ledgerSec, flows)
-            }
-            val fields = legs.flatMap { case (tag, sites, led, flows) => Seq(
-              s""""sites_sec_$tag":${Bench.fmt("%.3f", sites)}""",
-              s""""ledger_read_sec_$tag":${Bench.fmt("%.3f", led)}""",
-              s""""flows_sec_$tag":${Bench.fmt("%.3f", flows)}""") }
-            val ratio = legs(1)._4 / legs(0)._4
-            s""","s43_decomp":{${fields.mkString(",")},"flows_ratio":${Bench.fmt("%.2f", ratio)}}"""
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] s43 decomp FAILED: ${e.getMessage}")
-            ""
-          }
-        s""","scaling_x10_stream":{"reps":$reps,$dupAmp${rows.mkString(",")}$s43Decomp}"""
+        s""","scaling_x10_stream":{"reps":$reps,${rows.mkString(",")}}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] stream scaling probe FAILED: ${e.getMessage}")
         ""
       }
+
+    // ---- phase 4: the snapshot write ----
     // Streaming fixed-cost breakdown (VERDICT r15 next 7 / r16 next
     // 5): an s-family row's seconds are start/stop machinery (source
     // listing, checkpoint + state-store init, micro-batch planning,
-    // plus any batch-side oracle tail) AND the actual in-batch work —
-    // this block splits them so a 2.5-3.5 s row is readable. wall =
-    // full query; batch = the engine's summed triggerExecution
-    // (the micro-batch work, still inclusive of per-batch planning);
-    // overhead = wall − batch. The sweep above already warmed every
-    // query, so these are steady-state splits.
+    // plus any batch-side oracle tail) AND the actual in-batch work.
+    // Each committed row is the best-wall sweep sample's (wall, summed
+    // triggerExecution) pair, so fixed overhead (wall − batch) and
+    // marginal work are visible per query without a second probe
+    // pass. ADVICE r18: a query whose drains ALL timed out keeps a
+    // sentinel row (batch/overhead -1) instead of vanishing, and
+    // committed_sec carries the query's committed min so a reader sees
+    // when the best-DRAINED wall differs from the best wall.
     val streamFixed =
       try {
-        // r18: the split is now collected for ALL s-queries during the
-        // main sweep itself (VERDICT r17 next 2) — each committed row
-        // is the best-wall sweep sample's (wall, summed
-        // triggerExecution) pair, so fixed overhead (wall − batch) and
-        // marginal work are visible per query without a second probe
-        // pass. ADVICE r18: a query whose drains ALL timed out keeps a
-        // sentinel row (batch/overhead -1) instead of vanishing, and
-        // committed_sec carries the query's committed min so a reader
-        // sees when the best-DRAINED wall differs from the best wall.
         val committed = results.toMap
         val rows = streamSplit.toSeq.sortBy(_._1).map { case (n, (wall, batch)) =>
           val (b, oh) =
@@ -943,223 +701,13 @@ object Bench {
         System.err.println(s"[bench] stream fixed-cost probe FAILED: ${e.getMessage}")
         ""
       }
-    // s04 decomposition (VERDICT r19 next 5): the suite's most
-    // expensive stream row three rounds running, never decomposed.
-    // Legs: the BATCH form of the same interval join (q24 — the
-    // lower bound the stream machinery sits on), then the stream form
-    // across its two state-machinery knobs. Findings the committed
-    // fields encode (first measured 2026-08-16, sf0.1): the watermark
-    // slack is a NON-cost — the fixture spans 30 days so the 1-hour
-    // lateness retains ~150 of 100k rows at commit, and the 0-seconds
-    // leg times identically; the state-store partition count is
-    // ALREADY at its measured optimum (4≈8 < 2 < 32 — per-partition
-    // store open/commit overhead dominates above 8, probe starvation
-    // below 4). What remains over the batch join is the symmetric-
-    // hash-join machinery itself: 2×|events| state-store row inserts
-    // + probes + 4 stores/partition commit — linear in input, no
-    // corpus-proportional retention, the honest cost of streaming
-    // interval-join semantics.
-    val s04Decomp =
-      try {
-        microCalib(force = true)
-        val batchJoin = best2(SparkEntry.queries("q24_interval_join")(spark, sfDir))
-        def leg(lat: String, parts: Int): (Double, Double, Long) = {
-          val runs = Seq.fill(2)(streams.run("s04_decomp")(materialize(
-            graft.operators.StreamingQueries.s04Probe(spark, sfDir, lat, parts))))
-          (runs.map(_.wall).min, bestMarginal(runs), runs.map(_.stateRows).max)
-        }
-        val (w8, m8, st8) = leg("1 hour", 8)       // the registered form
-        val (w0, m0, st0) = leg("0 seconds", 8)    // watermark-slack leg
-        val (w4, m4, _) = leg("1 hour", 4)         // parallelism U-curve
-        val (w32, m32, _) = leg("1 hour", 32)
-        s""","s04_decomp":{"batch_join_sec":${Bench.fmt("%.3f", batchJoin)},""" +
-          s""""wall_1h_p8":${Bench.fmt("%.3f", w8)},"marginal_1h_p8":${Bench.fmt("%.3f", m8)},"state_rows_1h_p8":$st8,""" +
-          s""""wall_0s_p8":${Bench.fmt("%.3f", w0)},"marginal_0s_p8":${Bench.fmt("%.3f", m0)},"state_rows_0s_p8":$st0,""" +
-          s""""wall_1h_p4":${Bench.fmt("%.3f", w4)},"marginal_1h_p4":${Bench.fmt("%.3f", m4)},""" +
-          s""""wall_1h_p32":${Bench.fmt("%.3f", w32)},"marginal_1h_p32":${Bench.fmt("%.3f", m32)}}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] s04 decomp FAILED: ${e.getMessage}")
-        ""
-      }
-    // s09 decomposition (VERDICT r20 next 3, the s04 treatment): split
-    // the streamed LSH pair finder into its batch-expressible legs —
-    // the md5-minhash signature+banding projection alone, then the full
-    // banded self-join — against the streamed run's wall/marginal and
-    // its join-state rows. marginal − batch_join ≈ the stream-stream
-    // symmetric-hash-join state machinery. Retention contract (the
-    // VERDICT question): the join state IS the signature store a
-    // dedup-against-history service keeps — no watermark by design on
-    // the fixture (no ingest time; AvailableNow = one batch), bounded
-    // in production by the documented ingest-time watermark (s09's
-    // Scaladoc); state_rows commits the store's size so a retention
-    // regression is visible round-over-round.
-    val s09Decomp =
-      try {
-        microCalib(force = true)
-        val proj = best2(
-          graft.operators.TextQueries.s09BandedProjection(spark, sfDir))
-        val join = best2(
-          graft.operators.TextQueries.s09BatchJoin(spark, sfDir))
-        val runs = Seq.fill(2)(streamRun("s09_stream_lsh_pairs", sfDir))
-        val wall = runs.map(_.wall).min
-        val marg = bestMarginal(runs)
-        s""","s09_decomp":{"sigs_proj_sec":${Bench.fmt("%.3f", proj)},""" +
-          s""""batch_join_sec":${Bench.fmt("%.3f", join)},""" +
-          s""""stream_wall_sec":${Bench.fmt("%.3f", wall)},""" +
-          s""""stream_marginal_sec":${Bench.fmt("%.3f", marg)},""" +
-          s""""state_rows":${runs.map(_.stateRows).max}}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] s09 decomp FAILED: ${e.getMessage}")
-        ""
-      }
-    // s41 decomposition (VERDICT r20 next 2): the r21 DecimalSnap fast
-    // path already answered it with a WIN — the 1.9 s marginal was the
-    // register fold's per-product Double.toString (pre-Ryu JDK 17),
-    // not stream machinery; the marginal now reads ~0.8 s. This block
-    // pins the residual attribution: the same fold batch-side (one
-    // pass over the embeddings, no streaming) vs the streamed
-    // wall/marginal — marginal − batch_fold ≈ complete-mode sink
-    // rewrite + micro-batch planning, fixed at ANY corpus size
-    // (state is one 2,080-register buffer row).
-    val s41Decomp =
-      try {
-        microCalib(force = true)
-        import org.apache.spark.sql.functions.col
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select(col("vec_id"), graft.vec.VectorOps.toDouble(col("embedding")).as("v"))
-        val fold = best2(graft.operators.VectorQueries.gramSums(emb))
-        val runs = Seq.fill(2)(streamRun("s41_stream_pca", sfDir))
-        val wall = runs.map(_.wall).min
-        val marg = bestMarginal(runs)
-        s""","s41_decomp":{"batch_fold_sec":${Bench.fmt("%.3f", fold)},""" +
-          s""""stream_wall_sec":${Bench.fmt("%.3f", wall)},""" +
-          s""""stream_marginal_sec":${Bench.fmt("%.3f", marg)}}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] s41 decomp FAILED: ${e.getMessage}")
-        ""
-      }
-    // ---- isolated recheck of the most expensive batch rows (r19,
-    // VERDICT r18 next 1b) ----
-    // min-of-N back-to-back samples CANNOT detect a window that is
-    // contended for ALL N samples: r18 committed d51 at 9.7 s (spread
-    // 3.1% — every sample ran in one bad ~95 s sweep stretch) where
-    // fresh-session isolated runs read 0.9 s. Before the snapshot is
-    // written, the top batch rows by committed seconds are re-run in
-    // FRESH sessions (BenchIsolate semantics: new session, untimed
-    // warmup, min-of-2) with a window-local micro-calib; the committed
-    // value becomes the MIN across sweep and isolated samples (same
-    // semantics, more samples), both numbers are published in
-    // isolated_recheck, and rows whose sweep reading was >2× the
-    // isolated one land in recheck_replaced. Streaming rows are
-    // excluded: their cross-round axis is queries_stream_marginal, and
-    // a fresh session's checkpoint/state-store init would dominate a
-    // min-of-2 wall there.
-    spark.stop()
-    // name -> (sweep min, isolated min, isolated-window t_off)
-    val recheck: Seq[(String, Double, Double, Double)] =
-      results
-        .filter { case (n, v) => v > 0.4 && !n.startsWith("s") }
-        .sortBy(-_._2).take(10)
-        .flatMap { case (n, sweepSec) =>
-          try {
-            microCalib(force = true)
-            val s2 = GraftSession(GraftSession.Sweep)
-            try materialize(SparkEntry.queries(n)(s2, sfDir)) // warmup
-            catch { case _: Throwable => () }
-            // flat-field the materialized-front asymmetry (VERDICT r19
-            // next 8): the warmup above pays any once-per-(session,
-            // dataset) artifact build (DiskLayoutCache dirs, bucketed
-            // ledgers) in the fresh session, but the BUILD's heap/
-            // shuffle garbage would otherwise ride into the first
-            // timed sample — the same reason the x10 probes prewarm
-            // untimed and then drop ballast. Caches stay (they ARE the
-            // amortized read path); only the garbage goes.
-            System.gc()
-            val iso = best2(SparkEntry.queries(n)(s2, sfDir))
-            val tIso = tNow()
-            s2.stop()
-            Some((n, sweepSec, iso, tIso))
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] recheck $n FAILED: ${e.getMessage}")
-            None
-          }
-        }
-    microCalib(force = true) // close the recheck calib window
-    val isoByName = recheck.map { case (n, _, iso, t) => n -> (iso, t) }.toMap
-    // committed per-query values: min of sweep and isolated samples
-    val finalResults: Seq[(String, Double)] = results.map { case (n, v) =>
-      isoByName.get(n) match {
-        case Some((iso, _)) if v > 0 && iso > 0 && iso < v => n -> iso
-        case _ => n -> v
-      }
-    }
-    val recheckReplaced = recheck.collect {
-      case (n, sw, iso, _) if iso > 0 && sw > 2.0 * iso => n
-    }
-    if (recheckReplaced.nonEmpty)
-      System.err.println("[bench] sweep window flagged contended for: " +
-        recheckReplaced.mkString(", "))
-    // ---- isolated recheck of the top stream rows (r20, VERDICT r19
-    // next 3) ----
-    // The batch recheck above had no streaming twin: the r19 driver
-    // run's s-rows drifted 1.2-1.8× inside a contended window with
-    // nothing flagging it. The recheck axis is the MARGINAL (summed
-    // in-batch triggerExecution), per the r17 finding that wall-based
-    // comparison is meaningless for stream rows — and doubly so here,
-    // where a fresh session's checkpoint/state-store/source-listing
-    // init lands in the wall. One untimed warmup run pays stream init
-    // plus any per-(session,dataset) artifact builds, then min-of-2;
-    // queries_stream_marginal commits the min of sweep and isolated,
-    // and rows whose sweep marginal read >2× isolated land in
-    // recheck_replaced_stream.
-    def isoStreamMarginal(name: String): Double = {
-      val s2 = GraftSession(GraftSession.Sweep)
-      try {
-        val prog = new ProbeKit.StreamProgress(s2)
-        def run(): Double = prog.run(name)(
-          materialize(SparkEntry.queries(name)(s2, sfDir))).marginal
-        run() // warmup (stream init + artifact builds)
-        System.gc()
-        val ok = Seq(run(), run()).filter(_ >= 0)
-        if (ok.isEmpty) -1.0 else ok.min
-      } finally s2.stop()
-    }
-    // name -> (sweep marginal, isolated marginal, isolated-window t)
-    val streamRecheck: Seq[(String, Double, Double, Double)] =
-      streamSplit.toSeq
-        .collect { case (n, (_, marg)) if marg > 0.4 => (n, marg) }
-        .sortBy(-_._2).take(5)
-        .flatMap { case (n, sweepMarg) =>
-          try {
-            microCalib(force = true)
-            val iso = isoStreamMarginal(n)
-            if (iso >= 0) Some((n, sweepMarg, iso, tNow())) else None
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] stream recheck $n FAILED: ${e.getMessage}")
-            None
-          }
-        }
-    microCalib(force = true) // close the stream-recheck calib window
-    val isoStreamByName: Map[String, (Double, Double)] = streamRecheck.collect {
-      case (n, sw, iso, t) if iso > 0 && iso < sw => n -> (iso, t)
-    }.toMap
-    val streamRecheckReplaced = streamRecheck.collect {
-      case (n, sw, iso, _) if iso > 0 && sw > 2.0 * iso => n
-    }
-    if (streamRecheckReplaced.nonEmpty)
-      System.err.println("[bench] sweep window flagged contended for " +
-        "stream rows: " + streamRecheckReplaced.mkString(", "))
-    // the time each committed value was MEASURED at, for nearest-calib
-    // normalization: the sweep t_off, unless the committed min came
-    // from the isolated recheck — then the recheck window's t
+    // each query's sweep start offset, for nearest-calib normalization
     val normT: Map[String, Double] =
-      sampled.map { case (n, t, _) => n -> t }.toMap ++
-        recheck.collect { case (n, sw, iso, t) if iso > 0 && iso < sw => n -> t }
-    // numeric calib-norm per query (-1 when unavailable), shared by the
-    // detail JSON and the contended-snapshot gate below
-    val calibNormVals: Seq[(String, Double)] = finalResults.map { case (k, v) =>
-      val r = nearestCalibRatio(normT.getOrElse(k, 0.0))
-      k -> (if (v >= 0 && r > 0) v / r else -1.0)
+      sampled.map { case (n, t, _) => n -> t }.toMap
+    // numeric calib-norm per query (-1 for a failed query), shared by
+    // the detail JSON and the contended-snapshot gate below
+    val calibNormVals: Seq[(String, Double)] = results.map { case (k, v) =>
+      k -> (if (v >= 0) calibNormSec(v, normT(k)) else -1.0)
     }
     // Host/env fingerprint (VERDICT r10): a committed builder snapshot
     // and the driver's re-run of the same code can differ ~9% globally
@@ -1168,21 +716,17 @@ object Bench {
     // the artifact instead of re-derived each round. The calibration
     // loop is deterministic arithmetic (xorshift64*), so its seconds
     // ARE the host-speed axis: same code, slower calibration = slower
-    // host, not a plan regression.
+    // host, not a plan regression. `cores` is the session's core count
+    // (what the sweep ran at), the host-shape key of the snapshot gate.
     //
     // ~0.6 s fixed overhead (two 200M measured spins), paid AFTER all
-    // timed work so it can't perturb it; SPARK_GRAFT_NO_CALIB=1 skips
-    // all calibration (calib_sec -1, calib-norm blocks -1) for
-    // harnesses that don't read the fingerprint (ADVICE r11).
-    // calibRef pins the r15 builder host's calibration (2.60 GHz
-    // Xeon, calib 0.581 s per 200M iters) as the cross-round
-    // reference axis. r19: the per-query/per-probe normalization now
-    // divides by the NEAREST intra-run micro-calib sample (see the
-    // calib machinery at the top) — this whole-run spin remains in the
-    // fingerprint as the coarse host axis.
-    val calSec =
-      if (noCalib) -1.0
-      else math.min(spin(200000000), spin(200000000))
+    // timed work so it can't perturb it. calibRef pins the r15 builder
+    // host's calibration (2.60 GHz Xeon, calib 0.581 s per 200M iters)
+    // as the cross-round reference axis. r19: the per-query/per-probe
+    // normalization divides by the NEAREST intra-run micro-calib sample
+    // (see the calib machinery at the top) — this whole-run spin
+    // remains in the fingerprint as the coarse host axis.
+    val calSec = math.min(spin(200000000), spin(200000000))
     val envFingerprint = {
       val cpuModel =
         try {
@@ -1197,7 +741,7 @@ object Bench {
           try src.getLines().next().split(" ").take(1).mkString
           finally src.close()
         } catch { case _: Throwable => "-1" }
-      s"""{"cpu":"${cpuModel.replace("\"", "'")}","cores":${Runtime.getRuntime.availableProcessors},""" +
+      s"""{"cpu":"${cpuModel.replace("\"", "'")}","cores":$cpus,""" +
         s""""loadavg":$loadAvg,"calib_sec":${Bench.fmt("%.3f", calSec)},"calib_ref_sec":$calibRef}"""
     }
     // The caller captures only the last ~2000 chars of output, so the
@@ -1205,17 +749,17 @@ object Bench {
     // prefix ("q01", "v05", ...) and times are 3-decimal. The full
     // mapping (long names, full-precision times) goes to a detail file.
     def r3(v: Double): String = Bench.fmt("%.3f", v)
-    val ids = finalResults.map { case (n, _) => n.takeWhile(_ != '_') }
+    val ids = results.map { case (n, _) => n.takeWhile(_ != '_') }
     require(ids.distinct.size == ids.size, "query ID prefixes not unique")
-    val qs = finalResults.map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + r3(v) }
+    val qs = results.map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val failed = finalResults.filter(_._2 < 0).map("\"" + _._1.takeWhile(_ != '_') + "\"")
+    val failed = results.filter(_._2 < 0).map("\"" + _._1.takeWhile(_ != '_') + "\"")
       .mkString("[", ",", "]")
-    val total = finalResults.collect { case (_, v) if v >= 0 => v }.sum
+    val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val detail = {
-      val full = finalResults.map { case (k, v) => "\"" + k + "\":" + v }
+      val full = results.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
-      val failedFull = finalResults.filter(_._2 < 0).map("\"" + _._1 + "\"")
+      val failedFull = results.filter(_._2 < 0).map("\"" + _._1 + "\"")
         .mkString("[", ",", "]")
       // all raw per-query samples (back-to-back, 2 or 3) + each
       // query's start offset into the sweep + warmup: a host stall is
@@ -1248,16 +792,12 @@ object Bench {
       // calib sample NEAREST the moment it was measured — one
       // per-sweep calib could not see intra-sweep contention windows
       // (the r18 d51/d52/d54 artifact). Cross-round comparisons read
-      // THIS block when the hosts differ. -1 when calibration was
-      // skipped.
+      // THIS block when the hosts differ.
       val calibNorm = calibNormVals.map { case (k, n) =>
         "\"" + k + "\":" + (if (n >= 0) Bench.fmt("%.4f", n) else "-1")
       }.mkString("{", ",", "}")
       val probesNorm = probeSecs.map { case (k, v) =>
-        val r = nearestCalibRatio(probeTOff.getOrElse(k, 0.0))
-        val norm = if (r > 0) Bench.fmt("%.3f", v / r)
-          else "-1"
-        "\"" + k + "\":" + norm
+        "\"" + k + "\":" + Bench.fmt("%.3f", calibNormSec(v, probeTOff(k)))
       }.mkString("{", ",", "}")
       // the s-family's cross-round axis (VERDICT r17 next 2): marginal
       // = in-batch work (summed triggerExecution) of the best-wall
@@ -1266,19 +806,9 @@ object Bench {
       // THIS block round-over-round for streaming queries; wall-based
       // queries_calib_norm stays for the batch families.
       val streamMarginal = streamSplit.toSeq.sortBy(_._1).map {
-        case (k, (_, sweepBatch)) =>
-          // committed marginal: min of the sweep split and the
-          // fresh-session recheck (same semantics, more samples — the
-          // batch-row treatment), normalized by the window the
-          // committed value was measured in
-          val (batch, tAx) = isoStreamByName.get(k) match {
-            case Some((iso, t)) if sweepBatch < 0 || iso < sweepBatch =>
-              (iso, t)
-            case _ => (sweepBatch, normT.getOrElse(k, 0.0))
-          }
-          val r = nearestCalibRatio(tAx)
-          val norm = if (batch >= 0 && r > 0)
-            Bench.fmt("%.4f", batch / r) else "-1"
+        case (k, (_, batch)) =>
+          val norm = if (batch >= 0) Bench.fmt("%.4f", calibNormSec(batch, normT(k)))
+            else "-1"
           "\"" + k + "\":" + norm
       }.mkString("{", ",", "}")
       // the intra-run host-speed series: [t_off, seconds-per-100M-spin]
@@ -1287,41 +817,25 @@ object Bench {
       val calibSeriesJson = calibSeries.map { case (t, sec) =>
         s"[${r3(t)},${Bench.fmt("%.4f", sec)}]"
       }.mkString("[", ",", "]")
-      // the fresh-session recheck of the top batch rows: sweep min vs
-      // isolated min; `queries` already committed the min of the two
-      val recheckJson = recheck.map { case (n, sw, iso, _) =>
-        s""""$n":{"sweep_sec":${r3(sw)},"iso_sec":${r3(iso)},"sweep_vs_iso":${Bench.fmt("%.2f", if (iso > 0) sw / iso else -1.0)}}"""
-      }.mkString("{", ",", "}")
-      val replacedJson = recheckReplaced.map("\"" + _ + "\"")
-        .mkString("[", ",", "]")
-      // the streaming twin (r20): marginal-axis fresh-session recheck
-      // of the top-5 stream rows
-      val streamRecheckJson = streamRecheck.map { case (n, sw, iso, _) =>
-        s""""$n":{"sweep_marginal_sec":${r3(sw)},"iso_marginal_sec":${r3(iso)},"sweep_vs_iso":${Bench.fmt("%.2f", if (iso > 0) sw / iso else -1.0)}}"""
-      }.mkString("{", ",", "}")
-      val streamReplacedJson = streamRecheckReplaced.map("\"" + _ + "\"")
-        .mkString("[", ",", "]")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"timing_semantics":"materialized-noop (r18+; pre-r18 rows used count() and are not comparable for projection-terminal queries)","queries_calib_norm":$calibNorm,"probes_calib_norm":$probesNorm,"queries_stream_marginal":$streamMarginal,"samples":$rawSamples,"t_off":$tOffs,"warmup":$warm,"sweep_sec":[${r3(sweep1Sec)}],"scheme":"per-query back-to-back min-of-2 (+1 adaptive); top batch rows fresh-session rechecked, min committed","sample_spread_median_pct":${Bench.fmt("%.2f", spreadMedianPct)},"sample_spread":$spreadsJson,"sample_outliers":$sampleOutliers,"calib_series":$calibSeriesJson,"calib_micro_iters":$microIters,"calib_micro_ref_sec":${Bench.fmt("%.4f", microRef)},"isolated_recheck":$recheckJson,"recheck_replaced":$replacedJson,"isolated_recheck_stream":$streamRecheckJson,"recheck_replaced_stream":$streamReplacedJson,"probe_leg_reruns":${probeRerunsOut.map("\"" + _ + "\"").mkString("[", ",", "]")},"failed":$failedFull,"sf":"$sfDir","env":$envFingerprint$km$km1k$gm$dd$dd4k$dd16k$scaling$scalingNormOut$scalingStream$streamFixed$s04Decomp$s09Decomp$s41Decomp}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"timing_semantics":"materialized-noop (r18+; pre-r18 rows used count() and are not comparable for projection-terminal queries)","queries_calib_norm":$calibNorm,"probes_calib_norm":$probesNorm,"queries_stream_marginal":$streamMarginal,"samples":$rawSamples,"t_off":$tOffs,"warmup":$warm,"sweep_sec":[${r3(sweep1Sec)}],"scheme":"per-query back-to-back min-of-2 (+ adaptive third and fourth); sweep min committed","sample_spread_median_pct":${Bench.fmt("%.2f", spreadMedianPct)},"sample_spread":$spreadsJson,"sample_outliers":$sampleOutliers,"calib_series":$calibSeriesJson,"calib_micro_iters":$microIters,"calib_micro_ref_sec":${Bench.fmt("%.4f", microRef)},"failed":$failedFull,"sf":"$sfDir","env":$envFingerprint$km$km1k$gm$dd$dd4k$dd16k$scaling$scalingNormOut$scalingStream$streamFixed}"""
     }
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
     // Contended-run hard gate (VERDICT r19 next 7): the r19 driver run
     // overwrote the clean snapshot from inside a ~1.22×-contended host
     // stretch that only postmortem forensics caught. Refuse to
-    // overwrite a committed snapshot when BOTH signatures that
-    // postmortem used fire together: (a) the median per-query
-    // calib-norm ratio vs the existing snapshot exceeds 1.15, and
-    // (b) this run's own calib series saw a >1.5× intra-run spike.
-    // The run is still written (detailPath + ".quarantined") so
+    // overwrite a committed snapshot when `quarantineReason` fires
+    // (a contended or uniformly hot window, another sf, another host
+    // shape). The run is still written (detailPath + ".quarantined") so
     // nothing is lost; SPARK_GRAFT_FORCE_SNAPSHOT=1 overrides. The
     // gate fails OPEN — a parse error must never block a snapshot.
     val quarantine: Option[String] =
       try {
         val f = new java.io.File(detailPath)
-        if (noCalib || !f.exists() ||
+        if (!f.exists() ||
             sys.env.get("SPARK_GRAFT_FORCE_SNAPSHOT").contains("1")) None
-        else Bench.quarantineReason(
+        else quarantineReason(
           new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"),
-          sfDir, calibNormVals, calibSeries.map(_._2).toSeq)
+          sfDir, calibNormVals, calibSeries.map(_._2).toSeq, cpus)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] snapshot gate failed OPEN: ${e.getMessage}")
         None
@@ -1351,7 +865,7 @@ object Bench {
     // r22 (VERDICT r21 next 7): the contract line must parse — crash
     // loudly BEFORE printing rather than hand the driver another
     // `parsed: null` round (r10–r20 all did, silently)
-    Bench.assertParseableJsonLine(line)
+    assertParseableJsonLine(line)
     spark.stop()
     // The state-store maintenance scheduler is a JVM singleton that
     // spark.stop() does NOT stop: a tick firing during teardown logs a
@@ -1364,4 +878,3 @@ object Bench {
     System.exit(0)
   }
 }
-

@@ -74,7 +74,7 @@ object BenchIsolate {
     // stream rows' cross-round axis is the MARGINAL (summed in-batch
     // triggerExecution); wall carries the micro-batch fixed machinery
     // the calib axis can't correct, so s-queries record it per run, the
-    // axis the sweep and its stream recheck commit
+    // axis the sweep commits (`queries_stream_marginal`)
     val sharedProgress = sparkShared.map(new ProbeKit.StreamProgress(_))
     names.foreach { n =>
       val spark = sparkShared.getOrElse(GraftSession(GraftSession.Sweep))

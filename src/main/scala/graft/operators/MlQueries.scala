@@ -493,17 +493,6 @@ object MlQueries {
     hist.toSeq
   }
 
-  /** Instrumentation hooks for the m08 scaling probe: the histogram
-    * pass and the driver EM tail, separately callable so the x10
-    * ratio decomposes into its scan vs tail components. */
-  def probeHistogram(s: SparkSession, dir: String): Array[(Double, Long)] =
-    gmmHistogram(gmmScores(s, dir))
-  def probeFit(h: Array[(Double, Long)]): GmmParams = {
-    var p = GmmParams(0.5, -0.05, 0.0025, 0.5, 0.05, 0.0025)
-    for (_ <- 0 until gmmIters) p = gmmStepHist(h, p)._1
-    p
-  }
-
   /** The real distributed DAG behind the eager m08 — the single
     * histogram scan that is now m08's ONLY corpus pass (all EM rounds
     * run driver-side over it) — the Catalog.auditPlan hook (q35/v32

@@ -68,7 +68,7 @@ object StreamingQueries {
     * Stateful streaming operators allocate one state store per shuffle
     * partition per stateful operator (×4 for a stream-stream join's
     * left/right keyed state), so shuffle partitions are sized to the
-    * STATE volume, not the batch default — a fixed conf baked into the
+    * STATE volume (8), not the batch default — a fixed conf baked into the
     * query's checkpoint at start, which is exactly how a production
     * job would pin it. `StreamRunner` scopes it to the stream start
     * (batch plans in the same session are unaffected).
@@ -89,8 +89,7 @@ object StreamingQueries {
     */
   private def runStream(s: SparkSession, dir: String,
       transform: DataFrame => DataFrame,
-      mode: String = "complete",
-      shufflePartitions: Int = 8): DataFrame =
+      mode: String = "complete"): DataFrame =
     graft.Tables.withNanosAsLong(s) {
       // resolved inside withNanosAsLong, so a nanos-generation file
       // surfaces as a long instead of failing PARQUET_TYPE_ILLEGAL
@@ -103,7 +102,7 @@ object StreamingQueries {
           raw0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         else raw0.withColumn("ts",
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      StreamRunner.memorySink(transform(raw), mode, Some(shufflePartitions))
+      StreamRunner.memorySink(transform(raw), mode, Some(8))
     }
 
   // ---- s01: streaming hourly window agg == batch q17 ----
@@ -154,29 +153,20 @@ object StreamingQueries {
   // mode stream-stream joins support; inner-join matches emit in the
   // micro-batch they pair up, the watermark only bounds join state);
   // the per-user rollup happens in batch over the sink so the oracle is
-  // exactly q24's SQL
-  private def s04(s: SparkSession, dir: String): DataFrame =
-    s04Probe(s, dir, lateness = "1 hour", shufflePartitions = 8)
-
-  /** s04 with the two state-machinery knobs exposed, for the bench's
-    * s04_decomp probe (VERDICT r19 next 5): `lateness` sets the
-    * watermark delay on both join sides (the inner-join OUTPUT is
-    * lateness-independent under the single-batch contract — all rows
-    * pair up in the one micro-batch; lateness only moves the final
-    * watermark, i.e. how much join state survives to the commit-time
-    * checkpoint write), and `shufflePartitions` sets the state-store
-    * count the 2×|events| row inserts + probes parallelize across. */
-  private[graft] def s04Probe(s: SparkSession, dir: String,
-      lateness: String, shufflePartitions: Int): DataFrame = {
+  // exactly q24's SQL. The output is lateness-independent under the
+  // single-batch contract (all rows pair up in the one micro-batch);
+  // the 1-hour lateness only moves the final watermark, i.e. how much
+  // join state survives to the commit-time checkpoint write
+  private def s04(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     runStream(s, dir, { raw =>
       val e = raw.select($"user_id", $"ts")
       StreamingOps.correlate(e, e, "user_id", windowSec = 900,
-          lateness = lateness)
+          lateness = "1 hour")
         .select(col("l.user_id").as("user_id"),
           unix_micros(col("l.ts")).as("us_l"),
           unix_micros(col("r.ts")).as("us_r"))
-    }, mode = "append", shufflePartitions = shufflePartitions)
+    }, mode = "append")
       .groupBy($"user_id")
       .agg(count(lit(1)).as("n_pairs"),
         max($"us_r" - $"us_l").cast("long").as("max_gap_us"))

@@ -685,23 +685,6 @@ object TextQueries {
   private[operators] def mhSliceSigs(s: SparkSession, dir: String): DataFrame =
     mhSigs(Tables(s, dir, "documents").filter(col("doc_id") < oracleSliceN))
 
-  /** s09 decomposition probes (r21, VERDICT r20 next 3): the streamed
-    * LSH pair finder's batch-expressible legs — the signature+banding
-    * projection alone, and the full banded self-join (projection +
-    * join, no rollup). The stream marginal minus these is the
-    * symmetric-hash-join state machinery itself (the s04 pattern). */
-  private[graft] def s09BandedProjection(s: SparkSession, dir: String)
-      : DataFrame =
-    mhBandedOf(mhSliceSigs(s, dir))
-  private[graft] def s09BatchJoin(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val banded = mhBandedOf(mhSliceSigs(s, dir))
-    banded.as("x").join(banded.as("y"),
-        $"x.band" === $"y.band" && $"x.bucket" === $"y.bucket" &&
-        $"x.doc" < $"y.doc")
-      .select($"x.doc".as("id_a"), $"y.doc".as("id_b"))
-  }
-
   private def d10MinhashMd5(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sigs = mhSliceSigs(s, dir)
@@ -5048,7 +5031,7 @@ object TextQueries {
     * per-site cost the s43 probe pays on EVERY streamed document: no
     * gram string materialization + no md5, and the shuffle/join key
     * drops from a 32-char string to 8 bytes. */
-  private[graft] def gramSitesSrc(docs: DataFrame): DataFrame =
+  private[operators] def gramSitesSrc(docs: DataFrame): DataFrame =
     docs.filter(length(trim(col("text"))) > 0)
       .select(col("doc_id"), col("source"),
         TextOps.tokensOnce(col("text")).as("toks"))
@@ -6319,7 +6302,7 @@ object TextQueries {
   // compose time (URL canon keepers, the split coin, per-(split,shard)
   // packing) stay live in the query.
   private val releaseLedgerDisk = new DiskLayoutCache("graft_release")
-  private[graft] def releaseLedger(s: SparkSession, dir: String): DataFrame = {
+  private def releaseLedger(s: SparkSession, dir: String): DataFrame = {
     val path = releaseLedgerDisk.getOrBuild(s, dir) { p =>
       import s.implicits._
       val base = tokenizedDocs(s, dir) // doc_id, source, toks (persisted)

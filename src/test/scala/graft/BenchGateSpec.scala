@@ -106,35 +106,6 @@ class BenchGateSpec extends AnyFunSuite {
       "/root/testdata/sf0.1", norms(1.3), spikedCalib).isEmpty)
   }
 
-  // ---- r21: the probe-leg >2×-off-committed rerun trigger ----
-  // (VERDICT r20 next 1 — replayed against the r20 driver run's two
-  // wild legs, which five same-code runs contradicted)
-
-  private val snippet =
-    """{"scaling_x10":{"reps":10,"d01_dedup_exact":{"sf01_sec":0.182,""" +
-      """"x10_sec":0.741,"ratio":4.08},"d91_decomp":{"ledger_read_sec_sf01":0.100,""" +
-      """"compose_sec_sf01":0.664,"compose_ratio":2.76}},""" +
-      """"scaling_x10_stream":{"s40_stream_dup_spans":{"sf01_sec":1.0,""" +
-      """"x10_sec":5.92,"ratio":5.92,"state_rows_sf01":0}}}"""
-
-  test("committedLegRatio parses flagship, stream and decomp legs; -1 when absent") {
-    assert(Bench.committedLegRatio(snippet, "d01_dedup_exact") == 4.08)
-    assert(Bench.committedLegRatio(snippet, "s40_stream_dup_spans") == 5.92)
-    assert(Bench.committedLegRatio(snippet, "d91_decomp", "compose_ratio") == 2.76)
-    assert(Bench.committedLegRatio(snippet, "nope") == -1.0)
-    assert(Bench.committedLegRatio("garbage", "d01_dedup_exact") == -1.0)
-  }
-
-  test("committedLegRatio anchors at the scaling blocks, not earlier recheck blocks") {
-    // ADVICE r21: the detail JSON's isolated_recheck blocks are keyed
-    // by the same query names and precede scaling_x10; a ratio-shaped
-    // field there must never become the rerun reference
-    val withRecheck =
-      """{"isolated_recheck":{"d01_dedup_exact":{"sweep_sec":0.5,""" +
-        """"ratio":99.0}},""" + snippet.stripPrefix("{")
-    assert(Bench.committedLegRatio(withRecheck, "d01_dedup_exact") == 4.08)
-  }
-
   // ---- r22: the one-line JSON self-parse guard (VERDICT r21 next 7 —
   // rounds 10–20 all handed the driver a `parsed: null` line and
   // nothing noticed for ten rounds) ----
@@ -166,19 +137,39 @@ class BenchGateSpec extends AnyFunSuite {
     }
   }
 
-  test("legNeedsRerun fires on the r20 driver run's wild legs and not on clean ones") {
-    // d91_decomp: driver committed 17.49 vs builder 2.76 — fires
-    assert(Bench.legNeedsRerun(17.49, 2.76))
-    // s40: driver 11.07 vs committed 5.92 (1.87×) — fires too; both
-    // r20 wild legs are covered
-    assert(Bench.legNeedsRerun(11.07, 5.92))
-    // both directions fire
-    assert(Bench.legNeedsRerun(1.0, 2.5))
-    // clean ratios (the documented cross-run jitter band) don't
-    assert(!Bench.legNeedsRerun(4.3, 4.08))
-    assert(!Bench.legNeedsRerun(6.2, 5.92))
-    // no committed reference (or a dead leg) fails closed to no-rerun
-    assert(!Bench.legNeedsRerun(17.49, -1.0))
-    assert(!Bench.legNeedsRerun(-1.0, 2.76))
+  // ---- the host-shape signature: a snapshot taken at other cores is
+  // never replaced (per-query seconds at 4 and at 32 cores are not one
+  // measurement; the calib axis is single-thread) ----
+
+  private val sf = "/data/sf0.1"
+
+  private def withCores(json: String, cores: Int): String =
+    json.stripSuffix("}") +
+      s""","env":{"cpu":"Xeon","cores":$cores,"loadavg":1.0,"calib_sec":0.6}}"""
+
+  test("a run at other cores than the committed snapshot's quarantines, naming cores") {
+    // the committed BENCH_DETAIL.json is a 32-core run; a 4-core run of
+    // the same sf with flat norms and a flat calib series fires no
+    // other signature
+    val r = Bench.quarantineReason(withCores(prevJson(sf), 32),
+      sf, norms(1.0), flatCalib, cores = 4)
+    assert(r.isDefined, "a different host shape must quarantine")
+    assert(r.get.contains("cores 4") && r.get.contains("cores 32"), r.get)
+  }
+
+  test("equal cores do not fire the host-shape signature") {
+    assert(Bench.quarantineReason(withCores(prevJson(sf), 32),
+      sf, norms(1.0), flatCalib, cores = 32).isEmpty)
+    // the other signatures still fire at equal cores
+    assert(Bench.quarantineReason(withCores(prevJson(sf), 32),
+      sf, norms(1.3), spikedCalib, cores = 32).isDefined)
+  }
+
+  test("a snapshot without env.cores fails open on the host-shape signature") {
+    assert(Bench.quarantineReason(prevJson(sf), sf,
+      norms(1.0), flatCalib, cores = 4).isEmpty)
+    val noCores = prevJson(sf).stripSuffix("}") + ""","env":{"cpu":"Xeon"}}"""
+    assert(Bench.quarantineReason(noCores, sf,
+      norms(1.0), flatCalib, cores = 4).isEmpty)
   }
 }
