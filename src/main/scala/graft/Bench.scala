@@ -453,7 +453,7 @@ object Bench {
     // original corpus while making replicas distinct.
     def repDf = spark.range(reps).withColumnRenamed("id", "rep")
     def documentsReplica(): org.apache.spark.sql.DataFrame = {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = Tables(spark, sfDir, "documents")
       val maxId = docs.agg(max("doc_id")).head.getLong(0) + 1
       docs.crossJoin(broadcast(repDf))
         .withColumn("doc_id", col("doc_id") + col("rep") * maxId)
@@ -473,7 +473,7 @@ object Bench {
             .write.mode("overwrite").parquet(s"$scaledDir/documents.parquet")
           // embeddings replicate with remapped ids (cell occupancy
           // scales uniformly)
-          val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+          val emb = Tables(spark, sfDir, "embeddings")
           val maxVid = emb.agg(max("vec_id")).head.getLong(0) + 1
           emb.crossJoin(broadcast(repDf))
             .withColumn("vec_id", col("vec_id") + col("rep") * maxVid)
@@ -591,7 +591,7 @@ object Bench {
           // batch build didn't run
           single(
             if (new java.io.File(s"$scaledDir/_built").exists())
-              spark.read.parquet(s"$scaledDir/documents.parquet")
+              Tables(spark, scaledDir, "documents")
             else documentsReplica(),
             s"$streamDir/documents.parquet")
           // ts round-trips as timestamp_ntz so the replica resolves

@@ -206,57 +206,85 @@ object ProbeKit {
   val damdsConfig: Damds.Config = Damds.Config(targetDim = 3, cgIter = 10,
     maxStressLoops = 1, maxTempLoops = 2, maxGatherDoubles = 1L)
 
-  /** The row-major n x n distance matrix of `seed`'s points, scaled to
-    * [0, 1] by its max and fixed-point encoded. Two parallel passes (row
-    * maxima, then encode), so no n x n doubles are held; `max` is exact,
-    * so every size matches a sequential build bit for bit. */
-  def damdsShorts(n: Int, seed: Long): Array[Short] = {
-    val latent = 8
+  /** `seed`'s points: `n` uniform draws in 8 latent dimensions. */
+  private def damdsPoints(n: Int, seed: Long): Array[Array[Double]] = {
     val rnd = new java.util.Random(seed)
-    val pts = Array.fill(n, latent)(rnd.nextDouble())
-    def dist(i: Int, j: Int): Double = {
-      var s2 = 0.0; var k = 0
-      while (k < latent) {
-        val t = pts(i)(k) - pts(j)(k); s2 += t * t; k += 1
-      }
-      math.sqrt(s2)
-    }
+    Array.fill(n, 8)(rnd.nextDouble())
+  }
+
+  private def damdsDist(pts: Array[Array[Double]], i: Int, j: Int): Double = {
+    val a = pts(i); val b = pts(j)
+    var s2 = 0.0; var k = 0
+    while (k < a.length) { val t = a(k) - b(k); s2 += t * t; k += 1 }
+    math.sqrt(s2)
+  }
+
+  /** The largest distance between any two of `pts`, from parallel row
+    * maxima: `max` is exact, so it does not depend on the split. */
+  private def damdsMax(pts: Array[Array[Double]]): Double = {
+    val n = pts.length
     val rowMax = new Array[Double](n)
     java.util.stream.IntStream.range(0, n).parallel().forEach { i =>
       var mx = 0.0
       var j = 0
       while (j < n) {
-        val dv = dist(i, j)
+        val dv = damdsDist(pts, i, j)
         if (dv > mx) mx = dv
         j += 1
       }
       rowMax(i) = mx
     }
-    val mx = rowMax.foldLeft(0.0)(math.max)
-    val shorts = new Array[Short](n * n)
-    java.util.stream.IntStream.range(0, n).parallel().forEach { i =>
-      var j = 0
-      while (j < n) {
-        shorts(i * n + j) = graft.mm.FixedPoint.encode(dist(i, j) / mx)
-        j += 1
-      }
-    }
-    shorts
+    rowMax.foldLeft(0.0)(math.max)
   }
 
-  /** `size`'s blocks and its `seedInit`-seeded initial 3-D embedding. */
+  /** Rows `start until start + rows` of the row-major distance matrix of
+    * `pts`, scaled to [0, 1] by `mx` and fixed-point encoded. */
+  private def damdsRows(pts: Array[Array[Double]], mx: Double, start: Int,
+      rows: Int): Array[Short] = {
+    val n = pts.length
+    val out = new Array[Short](rows * n)
+    var r = 0
+    while (r < rows) {
+      var j = 0
+      while (j < n) {
+        out(r * n + j) =
+          graft.mm.FixedPoint.encode(damdsDist(pts, start + r, j) / mx)
+        j += 1
+      }
+      r += 1
+    }
+    out
+  }
+
+  /** The row-major n x n distance matrix of `seed`'s points, scaled to
+    * [0, 1] by its max and fixed-point encoded: what [[damdsInput]]'s
+    * blocks hold, row block by row block. */
+  def damdsShorts(n: Int, seed: Long): Array[Short] = {
+    val pts = damdsPoints(n, seed)
+    damdsRows(pts, damdsMax(pts), 0, n)
+  }
+
+  /** `size`'s blocks, persisted, and its `seedInit`-seeded initial 3-D
+    * embedding. The driver computes only the global max distance; each
+    * task rebuilds the points from the seed and encodes its own blocks,
+    * so no task binary carries distance shorts. The blocks are
+    * materialized once here, outside any timed run; unpersist them when
+    * done. */
   def damdsInput(spark: SparkSession, size: DamdsSize)
       : (Dataset[DamdsKernels.DamdsBlock], Array[Double]) = {
+    import spark.implicits._
     val n = size.n
-    val shorts = damdsShorts(n, size.seedPts)
-    val blocks = graft.mm.MatrixIO.rowSplits(n, size.splits).zipWithIndex
-      .map { case ((start, rows), idx) =>
-        DamdsKernels.DamdsBlock(idx, start, rows, n,
-          java.util.Arrays.copyOfRange(shorts, start * n, (start + rows) * n),
-          Array.empty[Short])
-      }
-    val ds = spark.createDataset(blocks)(
-      org.apache.spark.sql.Encoders.product[DamdsKernels.DamdsBlock])
+    val seed = size.seedPts
+    val mx = damdsMax(damdsPoints(n, seed))
+    val specs = graft.mm.MatrixIO.rowSplits(n, size.splits).zipWithIndex
+      .map { case ((start, rows), idx) => (idx, start, rows) }
+    val ds = specs.toDS().map { case (idx, start, rows) =>
+      DamdsKernels.DamdsBlock(idx, start, rows, n,
+        damdsRows(damdsPoints(n, seed), mx, start, rows),
+        Array.empty[Short])
+    }(org.apache.spark.sql.Encoders.product[DamdsKernels.DamdsBlock])
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    ds.count()
     val rInit = new java.util.Random(size.seedInit)
     (ds, Array.fill(n * damdsConfig.targetDim)(rInit.nextDouble() - 0.5))
   }
@@ -266,6 +294,7 @@ object ProbeKit {
     * checksum. */
   def damds(spark: SparkSession, size: DamdsSize): Probe[Damds.RunResult] = {
     val (ds, initX) = damdsInput(spark, size)
-    new Probe(() => Damds.run(spark, ds, initX, size.n, damdsConfig), () => ())
+    new Probe(() => Damds.run(spark, ds, initX, size.n, damdsConfig),
+      () => ds.unpersist())
   }
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   * best-effort — a stopped session's DataFrames can't execute, so
   * nothing can still be reading the value.
   */
-private[operators] final class SessionCache[K, V](evict: V => Unit) {
+private[graft] final class SessionCache[K, V](evict: V => Unit) {
   private final class Slot { @volatile var value: AnyRef = _ }
   private val cache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, K), Slot]

@@ -1165,7 +1165,7 @@ object TextQueries {
           $"shard")
         .write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   private def d30(s: SparkSession, dir: String): DataFrame = {
@@ -1620,7 +1620,7 @@ object TextQueries {
   private[operators] def d35Probe(s: SparkSession, dir: String,
       source: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(corpusLakePath(s, dir))
+    Tables.parquet(s, corpusLakePath(s, dir))
       .filter($"source" === source)
       .filter(length(trim($"text")) > 0)
       .select($"doc_id", $"source", TextOps.tokensOnce($"text").as("toks"))
@@ -4158,7 +4158,7 @@ object TextQueries {
           col("dup_tokens"), col("clean_tokens"))
         .write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** The E-S sampling tail over explicit (source, doc_id, w) rows —
@@ -6350,7 +6350,7 @@ object TextQueries {
             .cast("binary")).as("sig"))
         .write.mode("overwrite").parquet(p)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   private def d91(s: SparkSession, dir: String): DataFrame = {

@@ -368,7 +368,7 @@ object VectorQueries {
   private[operators] def ivfDiskProbe(s: SparkSession, dir: String,
       np: Int): DataFrame = {
     val (cents, sample, _) = ivfIndex(s, dir)
-    ivfProbe(s.read.parquet(ivfDiskPath(s, dir)), cents, sample, np)
+    ivfProbe(Tables.parquet(s, ivfDiskPath(s, dir)), cents, sample, np)
   }
 
   private def v06(s: SparkSession, dir: String): DataFrame =
@@ -710,7 +710,7 @@ object VectorQueries {
 
   private[graft] def ivfPqDiskSearch(s: SparkSession, dir: String,
       nprobe: Int, shortlist: Int): DataFrame =
-    ivfPqProbe(s, dir, s.read.parquet(ivfPqDiskPath(s, dir)),
+    ivfPqProbe(s, dir, Tables.parquet(s, ivfPqDiskPath(s, dir)),
       nprobe, shortlist)
 
   private def v11(s: SparkSession, dir: String): DataFrame =
